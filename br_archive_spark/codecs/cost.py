@@ -5,16 +5,29 @@ Generalizes the reference's stored-vs-compressed decision
 ``tmpfile_size >= data_size`` flip the entry to STORED and redo it) into a
 cost-BEFORE-commit rule over the whole codec suite:
 
-1. compute cheap chunk statistics — O(n) vectorized run count, min/max
-   range, distinct ratio estimated on a strided sample;
+1. compute cheap chunk statistics. Exact over the whole chunk: ``n``,
+   the min/max range and the run count (one native-dtype compare, 1 B
+   of scratch per value; a window count would overprice RLE when the
+   runs lie outside the window, a miss step 3 cannot see). Sampled on
+   the centered :data:`_SAMPLE`-value window that step 2 also
+   trial-encodes: the zigzag first- and second-difference maxima and
+   the sorted flag. The distinct count is estimated on a strided
+   sample. No full-chunk int64 temporary is made: a 3.1 M-value int32
+   chunk peaks near 3 MB of scratch;
 2. estimate the encoded size of every candidate codec from the stats;
-3. encode once with the argmin candidate;
+3. encode once with the argmin candidate. A window stat can only
+   under-report a diff width or call an unsorted chunk sorted, so a miss
+   (an outlier or a stride break outside the window) underprices
+   DELTA/DD. When the chunk is longer than the window and encodes above
+   twice the winner's estimate, the choice is re-run once with exact
+   full-chunk stats and the chunk re-encoded with that pick: a miss costs
+   one full stats pass and one more encode;
 4. if the actual encoded size is >= the PLAIN size, fall back to PLAIN —
    the reference's invariant that no entry is ever stored bigger than raw.
 
-The estimate is allowed to be wrong (it is sampled); step 4 makes the
-final decision safe, exactly like the reference's redo path but without
-double-encoding in the common case.
+The estimate is allowed to be wrong (it is sampled): every codec
+recomputes its own widths, so a wrong pick costs bytes, never data, and
+steps 3-4 bound those bytes without double-encoding in the common case.
 """
 
 from __future__ import annotations
@@ -37,20 +50,34 @@ _ENTROPY_TRIAL = ("dict_zstd", "zstd") if ZSTD_AVAILABLE else \
     ("dict_z", "zlib")
 _ENTROPY_ALL = ("dict_zstd", "zstd", "dict_z", "zlib")
 
+_INT32_MIN, _INT32_MAX = -(1 << 31), (1 << 31) - 1
 
-def int_chunk_stats(values: np.ndarray) -> dict:
+
+def _window(values: np.ndarray) -> np.ndarray:
+    """The centered ``_SAMPLE``-value view both the sampled stats and the
+    entropy trials read (the whole array when it is no longer)."""
+    n = len(values)
+    k = min(n, _SAMPLE)
+    start = (n - k) // 2
+    return values[start:start + k]
+
+
+def _stats(values: np.ndarray, window: np.ndarray) -> dict:
+    """Chunk stats with the diff-based ones taken over ``window``; passing
+    ``window=values`` makes them exact (``distinct_est`` is estimated
+    either way)."""
     n = len(values)
     if n == 0:
         return {"n": 0, "vmin": 0, "vmax": 0, "runs": 0, "distinct_est": 0,
                 "dzmax": 0, "ddzmax": 0, "sorted": True}
     vmin, vmax = int(values.min()), int(values.max())
+    runs = int(np.count_nonzero(values[1:] != values[:-1])) + 1
     # diffs stay exact in the native dtype iff the value span fits —
     # int32 wrap can't fake a zero, but would corrupt sorted/dmax
     if values.dtype.itemsize > 4 or vmax - vmin < (1 << 31):
-        d = np.diff(values)
+        d = np.diff(window)
     else:
-        d = np.diff(values.astype(np.int64))
-    runs = int(np.count_nonzero(d)) + 1
+        d = np.diff(window.astype(np.int64))
     # int64 view of the diffs for the zigzag-domain width stats below:
     # exact for narrow dtypes; for int64 inputs the (wrapping) diff is
     # already what _enc_delta/_enc_dd will pack, so the widths match
@@ -76,6 +103,26 @@ def int_chunk_stats(values: np.ndarray) -> dict:
     }
 
 
+def int_chunk_stats(values: np.ndarray) -> dict:
+    """Cost-model statistics of one chunk.
+
+    ``n``, ``vmin``, ``vmax`` and ``runs`` are exact over the whole chunk.
+    ``dzmax``, ``ddzmax`` (zigzag first/second-difference maxima) and
+    ``sorted`` are taken over the centered ``_SAMPLE``-value window, so
+    they may miss an outlier or stride break outside it (they can only
+    under-report). ``distinct_est`` scales a strided sample's distinct
+    count. Chunks no longer than the window get exact stats throughout.
+    """
+    return _stats(values, _window(values))
+
+
+def _plain_width(st: dict) -> int:
+    """Bytes per value PLAIN stores: ``_enc_plain`` widens to 8 once any
+    value leaves the int32 range."""
+    return 4 if _INT32_MIN <= st["vmin"] and st["vmax"] <= _INT32_MAX \
+        else 8
+
+
 def _estimates(st: dict) -> dict[str, float]:
     n = st["n"]
     if n == 0:
@@ -85,7 +132,7 @@ def _estimates(st: dict) -> dict[str, float]:
     d = st["distinct_est"]
     w_code = bits_needed(max(d - 1, 0))
     est = {
-        "plain": 4.0 * n,
+        "plain": float(_plain_width(st) * n),
         "for": n * w_full / 8 + 16,
         "rle": st["runs"] * (w_full + w_run) / 8 + 32,
         "dict": d * (w_full / 8 + 0.5) + n * w_code / 8 + 32,
@@ -103,7 +150,7 @@ def _estimates(st: dict) -> dict[str, float]:
 
 def _trial_estimates(values: np.ndarray, st: dict,
                      candidates: tuple[str, ...]) -> dict[str, float]:
-    """Trial-encode entropy codecs on a contiguous sample and scale.
+    """Trial-encode entropy codecs on the stats window and scale.
 
     DEFLATE-backed sizes have no closed form, so — like the reference,
     which costs by actually encoding (``src/io/lib_bra_io_file_chunks.c:268``)
@@ -113,10 +160,8 @@ def _trial_estimates(values: np.ndarray, st: dict,
     n = st["n"]
     if n == 0:
         return {}
-    k = min(n, _SAMPLE)
-    start = (n - k) // 2
-    sample = values[start:start + k]
-    scale = n / k
+    sample = _window(values)
+    scale = n / len(sample)
     out: dict[str, float] = {}
     for c in candidates:
         p, b = encode_int(c, sample)
@@ -131,9 +176,9 @@ def _trial_estimates(values: np.ndarray, st: dict,
     return out
 
 
-def choose_int_codec(values: np.ndarray,
-                     codecs: tuple[str, ...] | None = None) -> str:
-    st = int_chunk_stats(values)
+def _pick(values: np.ndarray, st: dict,
+          codecs: tuple[str, ...] | None) -> tuple[str, float]:
+    """The argmin codec under ``st`` and its estimated size."""
     est = _estimates(st)
     if st["n"] >= 256:
         # guard explicit requests against codecs unavailable on this
@@ -146,13 +191,26 @@ def choose_int_codec(values: np.ndarray,
         est.update(_trial_estimates(values, st, tuple(trial)))
     if codecs is not None:
         est = {c: s for c, s in est.items() if c in codecs or c == "plain"}
-    return min(est, key=est.get)  # type: ignore[arg-type]
+    codec = min(est, key=est.get)  # type: ignore[arg-type]
+    return codec, est[codec]
+
+
+def _full_stats_choice(values: np.ndarray,
+                       codecs: tuple[str, ...] | None) -> str:
+    """The pick with exact full-chunk stats: the re-pick after a miss."""
+    return _pick(values, _stats(values, values), codecs)[0]
+
+
+def choose_int_codec(values: np.ndarray,
+                     codecs: tuple[str, ...] | None = None) -> str:
+    return _pick(values, int_chunk_stats(values), codecs)[0]
 
 
 def encode_int_auto(values: np.ndarray,
                     codecs: tuple[str, ...] | None = None
                     ) -> tuple[str, bytes, bytes]:
-    """Pick a codec by the cost model, encode, PLAIN-fallback if it loses.
+    """Pick a codec by the cost model, encode, re-pick on a sampling miss,
+    PLAIN-fallback if it loses.
 
     Keeps the input's native integer dtype (no int64 widening): the
     distributed encode path is memory-bandwidth-bound, so int32 token
@@ -162,11 +220,19 @@ def encode_int_auto(values: np.ndarray,
     if values.dtype.kind != "i":
         values = values.astype(np.int64)
     values = np.ascontiguousarray(values)
-    codec = choose_int_codec(values, codecs)
+    st = int_chunk_stats(values)
+    codec, est = _pick(values, st, codecs)
     params, payload = encode_int(codec, values)
+    # a window stat missed structure outside it (module docstring, step
+    # 3); the 64 B slack keeps the headers of near-empty streams from
+    # paying for a full stats pass
+    if st["n"] > _SAMPLE and len(params) + len(payload) > 2 * est + 64:
+        full = _full_stats_choice(values, codecs)
+        if full != codec:
+            codec = full
+            params, payload = encode_int(codec, values)
     if codec != "plain":
-        plain_size = 4 * len(values)
-        if len(params) + len(payload) >= plain_size:
+        if len(params) + len(payload) >= _plain_width(st) * st["n"]:
             codec = "plain"
             params, payload = encode_int("plain", values)
     return codec, params, payload

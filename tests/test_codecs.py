@@ -15,6 +15,7 @@ from br_archive_spark.codecs import (INT_CODECS, STR_CODECS, bits_needed,
                                      decode_int, decode_str, encode_int,
                                      encode_int_auto, encode_str,
                                      encode_str_auto, pack_uint, unpack_uint)
+from br_archive_spark.codecs import cost
 from br_archive_spark.codecs.intcodecs import _runs
 
 
@@ -86,6 +87,8 @@ CASES = {
     "empty": lambda rng: np.array([], dtype=np.int64),
     "single": lambda rng: np.array([7]),
     "all_same": lambda rng: np.full(5000, 42),
+    # beyond int32: PLAIN stores 8 B/value here, FOR 5
+    "wide_int64": lambda rng: rng.integers(0, 2**40, 100_000),
 }
 
 
@@ -106,6 +109,15 @@ def test_int_auto_roundtrip_and_never_loses_to_plain(case):
     # (reference src/io/lib_bra_io_file_chunks.c:268-297)
     pp, pb = encode_int("plain", v)
     assert len(p) + len(b) <= max(len(pp) + len(pb), 5)
+
+
+def test_int_auto_prices_wide_plain():
+    """PLAIN is priced at the 8 B/value it writes once values leave
+    int32, so a 40-bit FOR stream (5 B/value) beats it."""
+    v = CASES["wide_int64"](np.random.default_rng(42)).astype(np.int64)
+    codec, p, b = encode_int_auto(v)
+    fp, fb = encode_int("for", v)
+    assert len(p) + len(b) <= len(fp) + len(fb)
 
 
 def test_auto_selection_sensible():
@@ -166,6 +178,125 @@ def test_int_auto_property_full_range(xs):
     v = np.array(xs, dtype=np.int64)
     codec, p, b = encode_int_auto(v)
     assert np.array_equal(decode_int(codec, p, b).astype(np.int64), v)
+
+
+# ------------------------------------------------- sampled cost-model stats
+# Chunks longer than cost._SAMPLE take their diff stats from a centered
+# window; structure outside it must not cost more than one re-pick.
+
+N_SAMPLED = 200_000
+WIN_LO = (N_SAMPLED - cost._SAMPLE) // 2   # the stats window's bounds
+WIN_HI = WIN_LO + cost._SAMPLE
+
+
+def _full_stats_encoding(v):
+    """What encode_int_auto stores when its pick uses exact full-chunk
+    stats: that codec's encoding, or PLAIN when it is not smaller."""
+    codec = cost._full_stats_choice(v, None)
+    p, b = encode_int(codec, v)
+    pp, pb = encode_int("plain", v)
+    if len(p) + len(b) >= len(pb):
+        return pp, pb
+    return p, b
+
+
+def _sorted_outlier(rng, at):
+    v = np.sort(rng.integers(0, 1 << 20, N_SAMPLED))
+    v[at] = 1 << 40
+    return v
+
+
+def _stride_break(rng):
+    v = 1_000_000 + 50 * np.arange(N_SAMPLED, dtype=np.int64)
+    v[WIN_LO // 2:] += 7
+    return v
+
+
+def _int64_min_first(rng):
+    v = np.zeros(N_SAMPLED, dtype=np.int64)
+    v[0] = I64MIN
+    return v
+
+
+def _runs_outside_window(rng):
+    v = rng.integers(0, 2**31 - 1, N_SAMPLED)
+    runs = np.repeat(rng.integers(0, 2**31 - 1, N_SAMPLED // 1000 + 1),
+                     1000)
+    v[:WIN_LO] = runs[:WIN_LO]
+    v[WIN_HI:] = runs[WIN_HI:N_SAMPLED]
+    return v
+
+
+SAMPLED_HAZARDS = {
+    "sorted_outlier_first": lambda rng: _sorted_outlier(rng, 0),
+    "sorted_outlier_last": lambda rng: _sorted_outlier(rng, -1),
+    "stride_break_outside_window": _stride_break,
+    "int64_min_first_of_zeros": _int64_min_first,
+    "runs_outside_window": _runs_outside_window,
+}
+
+
+@pytest.mark.parametrize("case", list(SAMPLED_HAZARDS))
+def test_int_auto_sampled_hazards(case):
+    v = SAMPLED_HAZARDS[case](np.random.default_rng(5)).astype(np.int64)
+    assert len(v) > cost._SAMPLE
+    codec, p, b = encode_int_auto(v)
+    assert np.array_equal(decode_int(codec, p, b).astype(np.int64), v)
+    pp, pb = encode_int("plain", v)
+    assert len(p) + len(b) <= len(pp) + len(pb)
+    fp, fb = _full_stats_encoding(v)
+    assert len(p) + len(b) == len(fp) + len(fb)
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(st.integers(I64MIN, I64MAX), min_size=1, max_size=300),
+       st.integers(0, 100_000),
+       st.sampled_from(["zeros", "stride", "zipf"]))
+def test_int_auto_sampled_window_property(xs, offset, background):
+    """A drawn list planted anywhere in a 100k-value background, inside
+    or outside the stats window: exact round-trip, never above PLAIN."""
+    n = 100_000
+    if background == "zeros":
+        v = np.zeros(n, dtype=np.int64)
+    elif background == "stride":
+        v = 1_000 + 50 * np.arange(n, dtype=np.int64)
+    else:
+        v = np.random.default_rng(0).zipf(1.3, n).astype(np.int64) % 50_000
+    seg = np.array(xs, dtype=np.int64)[:n - offset]
+    v[offset:offset + len(seg)] = seg
+    codec, p, b = encode_int_auto(v)
+    assert np.array_equal(decode_int(codec, p, b).astype(np.int64), v)
+    pp, pb = encode_int("plain", v)
+    assert len(p) + len(b) <= len(pp) + len(pb)
+
+
+def test_int_auto_zipf_tokens_sampled_without_repick(monkeypatch):
+    """The bench's token distribution (Zipf(1.3) over a 50k vocab) takes
+    the sampled path with no full-chunk re-pick, stores exactly what the
+    full-stats choice stores, and its stats make no full-chunk int64
+    temporaries (full-chunk zigzag diffs of 1.2M values take ~41 MB)."""
+    import tracemalloc
+
+    from br_archive_spark.datagen import zipf_cdf
+    rng = np.random.default_rng(42)
+    v = np.searchsorted(zipf_cdf(1.3, 50_000),
+                        rng.random(1_200_000)).astype(np.int32)
+    full = cost._full_stats_choice(v, None)
+    want = encode_int(full, v)
+    repicks = []
+    real = cost._full_stats_choice
+    monkeypatch.setattr(cost, "_full_stats_choice",
+                        lambda *a: repicks.append(a) or real(*a))
+    codec, p, b = encode_int_auto(v)
+    assert repicks == []
+    assert (codec, p, b) == (full, *want)
+    tracemalloc.start()
+    try:
+        cost.int_chunk_stats(v)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 8 << 20
 
 
 # ---------------------------------------------------------------- strings
