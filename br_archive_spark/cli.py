@@ -22,8 +22,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import sys
+from fractions import Fraction
 
 
 def _spark(args):
@@ -531,6 +533,19 @@ def cmd_scan(args) -> int:
     return 0
 
 
+def _parse_band(band: str) -> tuple[Fraction, Fraction] | None:
+    """``LO:HI`` as exact fractions; None when malformed."""
+    parts = band.split(":")
+    if len(parts) != 2:
+        return None
+    try:
+        lo, hi = Fraction(parts[0]), Fraction(parts[1])
+        float(lo), float(hi)        # beyond the double range: reject
+    except (ValueError, ZeroDivisionError, OverflowError):
+        return None
+    return lo, hi
+
+
 def cmd_agg(args) -> int:
     """COUNT/SUM/MIN/MAX over one numeric column answered from the
     manifest alone — no payload read, no chunk decoded (`unbra -l`
@@ -547,6 +562,14 @@ def cmd_agg(args) -> int:
     from .operators.decode import (agg_encoded, hist_encoded,
                                    ndv_encoded, topk_encoded)
 
+    band = getattr(args, "count_between", None)
+    if band is not None:
+        band = _parse_band(band)
+        if band is None:
+            print("agg: --count-between expects LO:HI with two finite "
+                  f"numbers, got {args.count_between!r}",
+                  file=sys.stderr)
+            return 2
     spark = _spark(args)
     man = spark.read.parquet(args.input)
     row = agg_encoded(man, args.column).collect()[0]
@@ -565,13 +588,15 @@ def cmd_agg(args) -> int:
         vlo, vhi = quantile_encoded(man, args.column, float(qq))
         out["quantile"] = {"q": float(qq),
                            "value_min": vlo, "value_max": vhi}
-    band = getattr(args, "count_between", None)
-    if band:
-        lo_s, hi_s = band.rsplit(":", 1)
-        lo = float(lo_s) if "." in lo_s or "e" in lo_s.lower() \
-            else int(lo_s)
-        hi = float(hi_s) if "." in hi_s or "e" in hi_s.lower() \
-            else int(hi_s)
+    if band is not None:
+        from .operators.decode import manifest_specs
+
+        if dict(manifest_specs(man)).get(args.column) == "float":
+            lo, hi = float(band[0]), float(band[1])
+        else:
+            # int-backed lane: the integers inside [LO, HI], so a
+            # fractional bound never widens the band
+            lo, hi = math.ceil(band[0]), math.floor(band[1])
         cmin, cmax = hist_encoded(man, args.column, lo, hi)
         out["count_between"] = {"lo": lo, "hi": hi,
                                 "count_min": cmin, "count_max": cmax}

@@ -32,10 +32,14 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from .fsutil import (ensure_dir, file_size, join_path, path_tag,
-                     read_parquet, write_parquet_atomic)
+from .fsutil import (_bucket_frame, _empty_frame, ensure_dir, file_size,
+                     join_path, path_tag, read_parquet,
+                     write_parquet_atomic)
 
 __all__ = ["compact_manifest"]
+
+_STATS_SCHEMA = ("shard string, input_files int, chunks long, "
+                 "n_rows long, enc_bytes long")
 
 
 def compact_manifest(spark, manifest_path, output_dir: str,
@@ -52,9 +56,7 @@ def compact_manifest(spark, manifest_path, output_dir: str,
         if isinstance(manifest_path, str) else sorted(manifest_path)
     ensure_dir(output_dir, filesystem)
     if not paths:
-        return spark.createDataFrame(
-            [], "shard string, input_files int, chunks long, "
-                "n_rows long, enc_bytes long")
+        return _empty_frame(spark, _STATS_SCHEMA)
 
     sizes = [file_size(p, filesystem) for p in paths]
     buckets: dict[int, list] = {}
@@ -62,7 +64,7 @@ def compact_manifest(spark, manifest_path, output_dir: str,
     for p, nbytes in zip(paths, sizes):
         buckets.setdefault(cum // max(target_bytes, 1), []).append(p)
         cum += nbytes
-    rows = [(v,) for _, v in sorted(buckets.items())]
+    rows = [v for _, v in sorted(buckets.items())]
 
     def merge_bucket(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -85,9 +87,6 @@ def compact_manifest(spark, manifest_path, output_dir: str,
                     names=["shard", "input_files", "chunks", "n_rows",
                            "enc_bytes"])
 
-    bucketed = (spark.createDataFrame(rows, "paths array<string>")
-                .repartition(len(rows)))
-    return bucketed.mapInArrow(
-        merge_bucket,
-        "shard string, input_files int, chunks long, n_rows long, "
-        "enc_bytes long")
+    bucketed = _bucket_frame(spark, pa.table(
+        {"paths": pa.array(rows, pa.list_(pa.string()))}))
+    return bucketed.mapInArrow(merge_bucket, _STATS_SCHEMA)

@@ -28,8 +28,9 @@ from pyspark.sql import DataFrame
 
 from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
 from .chunk import decode_column
-from .fsutil import (ensure_dir, file_size, join_path, path_tag,
-                     read_parquet, write_parquet_atomic)
+from .fsutil import (_bucket_frame, _empty_frame, ensure_dir, file_size,
+                     join_path, path_tag, read_parquet,
+                     write_parquet_atomic)
 
 __all__ = ["decode_table", "decode_files", "lookup_rows",
            "lookup_range", "ChecksumError"]
@@ -1008,7 +1009,7 @@ def scan_range_files(spark, manifest_path: str, column: str,
 
         dec_schema = _decoded_spark_schema(specs or TOKEN_SPECS,
                                            with_n_tok)
-        return spark.createDataFrame([], dec_schema)
+        return _empty_frame(spark, dec_schema)
     enc = spark.read.parquet(*keep)
     return scan_range(enc, column, lo, hi, specs=specs,
                       with_n_tok=with_n_tok, global_dict=global_dict)
@@ -1059,7 +1060,7 @@ def scan_where_files(spark, manifest_path: str,
                 if project is not None else [n for n, _ in specs])
         dec_schema = _decoded_spark_schema(
             [s for s in specs if s[0] in need], with_n_tok)
-        return spark.createDataFrame([], dec_schema)
+        return _empty_frame(spark, dec_schema)
     return scan_where(spark.read.parquet(*keep), bands, **kw)
 
 
@@ -1911,8 +1912,8 @@ def lookup_rows(encoded: DataFrame, doc_ids: list[str],
 
     wanted = sorted(set(doc_ids))
     if not wanted:
-        return encoded.sparkSession.createDataFrame(
-            [], f"{key} string, {value_col} {value_kind}")
+        return _empty_frame(encoded.sparkSession,
+                            f"{key} string, {value_col} {value_kind}")
     lo, hi = wanted[0], wanted[-1]
     if value_kind not in ("string", "binary"):
         raise ValueError("value_kind must be 'string' or 'binary'")
@@ -2016,7 +2017,7 @@ def decode_files(spark, manifest_path,
         schema = "shard string, n_rows long, n_values long" \
             if output_dir is not None \
             else _decoded_spark_schema(specs, with_n_tok)
-        return spark.createDataFrame([], schema)
+        return _empty_frame(spark, schema)
 
     sizes = [file_size(p, filesystem) for p in paths]
     total = sum(sizes)
@@ -2030,7 +2031,7 @@ def decode_files(spark, manifest_path,
     for p, nbytes in zip(paths, sizes):
         buckets.setdefault(cum // target, []).append(p)
         cum += nbytes
-    rows = [(v,) for _, v in sorted(buckets.items())]
+    rows = [v for _, v in sorted(buckets.items())]
 
     fn = _make_decode_fn(specs, with_n_tok, verify_checksums,
                          global_dict=global_dict)
@@ -2043,13 +2044,15 @@ def decode_files(spark, manifest_path,
                 for mp_ in shard_paths:
                     tbl = read_parquet(mp_, filesystem, columns=man_cols,
                                        use_threads=False)
-                    n_values = sum(
-                        tbl.column("n_values").to_pylist())
-                    dec_batches = list(fn(iter(
-                        tbl.drop_columns(["n_values"]).to_batches())))
+                    dec = fn(iter(
+                        tbl.drop_columns(["n_values"]).to_batches()))
                     if output_dir is None:
-                        yield from dec_batches
+                        # stream: a 128 MB compacted shard never sits
+                        # decoded in memory whole
+                        yield from dec
                         continue
+                    dec_batches = list(dec)
+                    n_values = sum(tbl.column("n_values").to_pylist())
                     # tag by full path: basenames alone can repeat
                     # across manifest dirs feeding one decode
                     base = mp_.rstrip("/").rsplit("/", 1)[-1]
@@ -2068,8 +2071,8 @@ def decode_files(spark, manifest_path,
                          pa.array([n_values], pa.int64())],
                         names=["shard", "n_rows", "n_values"])
 
-    bucketed = (spark.createDataFrame(rows, "paths array<string>")
-                .repartition(len(rows)))
+    bucketed = _bucket_frame(spark, pa.table(
+        {"paths": pa.array(rows, pa.list_(pa.string()))}))
     out_schema = "shard string, n_rows long, n_values long" \
         if output_dir is not None \
         else _decoded_spark_schema(specs, with_n_tok)

@@ -46,8 +46,8 @@ from pyspark.sql import functions as F
 from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
 from ..codecs.strcodecs import strings_from_arrow
 from .chunk import encode_column
-from .fsutil import (ensure_dir, join_path, open_parquet, path_tag,
-                     write_parquet_atomic)
+from .fsutil import (_bucket_frame, _empty_frame, ensure_dir, join_path,
+                     open_parquet, path_tag, write_parquet_atomic)
 
 __all__ = ["encode_table", "encode_files", "infer_specs",
            "MANIFEST_SCHEMA", "MANIFEST_SPARK_SCHEMA", "TOKEN_SPECS"]
@@ -1096,12 +1096,19 @@ def encode_files(spark, input_path,
 
     Units are then packed into byte-budget BUCKETS of
     ``target_unit_bytes`` (contiguous by (path, rg) via a running-sum
-    window over the tiny unit table) and one task processes one bucket:
-    a Python task costs ~0.3 s of fixed overhead, so task work must be
-    seconds-scale to amortize it — small files batch together, while a
-    128 MB row group is a healthy task on its own. Chunk ids stay
-    ``filecrc:rowgroup:index`` — a pure function of the input layout,
-    independent of bucketing, so resumes reproduce identical ids.
+    window over the tiny unit table) and one task processes one bucket.
+    A Python task costs ~0.3 s of CPU even when its work is trivial.
+    Most of it is pyspark's per-task ``setup_spark_files``: its
+    ``importlib.invalidate_caches()`` makes every zipimporter the
+    worker holds re-read the directory of ``pyspark.zip`` (Python
+    3.11's ``zipimporter.invalidate_caches`` is eager). So Python
+    tasks must be few and large, their work seconds-scale: small files
+    batch together, while a 128 MB row group is a healthy task on its
+    own; and the bucket table itself is built from Arrow
+    (``fsutil._bucket_frame``), so scheduling it runs no Python task
+    at all. Chunk ids stay ``filecrc:rowgroup:index`` — a pure
+    function of the input layout, independent of bucketing, so resumes
+    reproduce identical ids.
 
     ``skip_files``: files already present in the output manifest
     (lineage resume) — pruned before any footer is read.
@@ -1136,7 +1143,7 @@ def encode_files(spark, input_path,
     if output_dir is not None:
         ensure_dir(output_dir, filesystem)
     if not paths:
-        return spark.createDataFrame([], MANIFEST_SPARK_SCHEMA)
+        return _empty_frame(spark, MANIFEST_SPARK_SCHEMA)
 
     def enumerate_rgs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -1257,25 +1264,24 @@ def encode_files(spark, input_path,
             b[0].append(p)
             b[1].append(rg)
             cum += nbytes
-        # ONE ROW PER BUCKET + round-robin repartition → exactly one
-        # bucket per task. (repartition(n, col) would HASH bucket ids:
-        # birthday collisions stack 2-4 buckets on some tasks and leave
-        # ~1/e of them empty — measured as a ~2x straggler tail at 16
-        # cores, invisible at 4 where 12 waves average it out.)
         rows = [v for _, v in sorted(buckets.items())]
-        bucketed = (spark.createDataFrame(
-            rows, "paths array<string>, rgs array<int>")
-            .repartition(len(rows)))
+        bucketed = _bucket_frame(spark, pa.table({
+            "paths": pa.array([r[0] for r in rows],
+                              pa.list_(pa.string())),
+            "rgs": pa.array([r[1] for r in rows], pa.list_(pa.int32())),
+        }))
         return bucketed.mapInArrow(encode_units, MANIFEST_SPARK_SCHEMA)
 
     from pyspark.sql import Window
 
-    # a footer read is ~1 ms but a Python task costs ~0.3 s — batch
-    # many footers per task; 2 waves across the cluster is plenty
+    # a footer read is ~1 ms but a Python task costs ~0.3 s of pyspark
+    # set-up (see the docstring) — batch many footers per task; 2 waves
+    # across the cluster is plenty
     enum_parallelism = max(1, min(
         len(paths), spark.sparkContext.defaultParallelism * 2))
     paths_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string").repartition(enum_parallelism)
+        pa.table({"path": pa.array(paths, pa.string())})
+    ).repartition(enum_parallelism)
     units_df = paths_df.mapInArrow(enumerate_rgs,
                                    "path string, rg int, bytes long")
     # pack units into byte-budget buckets: running sum over the unit
@@ -1291,11 +1297,8 @@ def encode_files(spark, input_path,
                 .withColumn("_cum", F.sum("bytes").over(w))
                 .withColumn("_bucket", F.floor(
                     (F.col("_cum") - F.col("bytes")) / F.lit(target))))
-    # one row per bucket, then round-robin with an EXPLICIT partition
-    # count (one bucket per task): hash-partitioning bucket ids would
-    # stack buckets by birthday collision, and AQE would coalesce the
-    # few-KB shuffle to one task — partition byte-size says nothing
-    # about the work a pointer row causes
+    # one row per bucket, then round-robin with an explicit partition
+    # count, as in fsutil._bucket_frame (one bucket per task)
     bucketed = (units_df
                 .groupBy("_bucket")
                 .agg(F.sort_array(F.collect_list(

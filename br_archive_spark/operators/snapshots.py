@@ -57,7 +57,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fsutil import path_tag, resolve_fs, write_parquet_atomic
+from .fsutil import _empty_frame, path_tag, resolve_fs, write_parquet_atomic
 
 __all__ = ["commit_snapshot", "snapshots", "load_snapshot",
            "rollback", "expire_snapshots", "incremental_manifest",
@@ -431,8 +431,7 @@ def snapshots(spark: SparkSession, table_dir: str) -> DataFrame:
     if not rows:
         raise FileNotFoundError(f"no snapshot log under {table_dir}")
     return spark.createDataFrame(
-        pa.Table.from_pylist(rows, schema=_LOG_SCHEMA).to_pandas()) \
-        .orderBy("seq")
+        pa.Table.from_pylist(rows, schema=_LOG_SCHEMA)).orderBy("seq")
 
 
 def load_snapshot(spark: SparkSession, table_dir: str,
@@ -470,7 +469,7 @@ def _manifest_for_index(spark: SparkSession, table_dir: str,
     if not seqs:  # empty slice
         from .encode import MANIFEST_SPARK_SCHEMA
 
-        return spark.createDataFrame([], MANIFEST_SPARK_SCHEMA)
+        return _empty_frame(spark, MANIFEST_SPARK_SCHEMA)
     data = (spark.read.option("basePath", f"{table_dir}/data")
             .parquet(*[f"{table_dir}/data/seq={s}" for s in seqs]))
     return (data.join(F.broadcast(idx),
@@ -561,7 +560,7 @@ def snapshot_diff(spark: SparkSession, table_dir: str,
                 specs = manifest_specs(cand)
                 break
         else:
-            return spark.createDataFrame([], "op string")
+            return _empty_frame(spark, "op string")
     cols = [s[0] for s in specs]
     arows = decode_table(aman, specs=specs, with_n_tok=False) \
         .select(*cols)
@@ -693,8 +692,8 @@ def snapshot_fsck(spark: SparkSession, table_dir: str) -> dict:
                            for s in sorted(seq_dirs)])
                 .select(*key3).cache())
     else:
-        data = spark.createDataFrame(
-            [], "chunk_id string, checksum long, seq long").cache()
+        data = _empty_frame(
+            spark, "chunk_id string, checksum long, seq long").cache()
 
     missing: dict[str, int] = {}
     referenced = None

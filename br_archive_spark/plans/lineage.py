@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -87,7 +88,7 @@ def encode_with_checkpoint(spark: SparkSession, input_dir: str,
     # a 100k-literal IN expression is a plan-size hazard (analysis
     # cost + codegen blowup), while a file list is a tiny broadcast
     rem_df = spark.createDataFrame(
-        [(f,) for f in remaining], "input_file string")
+        pa.table({"input_file": pa.array(remaining, pa.string())}))
     stats["chunks"] = (spark.read.parquet(output_dir)
                        .join(F.broadcast(rem_df), "input_file")
                        .count())

@@ -209,6 +209,64 @@ def test_hist_cli_agg_count_between(spark, tmp_path, capsys):
     assert cb["count_min"] <= 250 <= cb["count_max"]
 
 
+@pytest.mark.parametrize("band", ["a:b:c", "1:x", "5", "1:2:", "inf:5",
+                                  "1/0:3", ""])
+def test_hist_cli_count_between_rejects_malformed(band, capsys):
+    """A malformed `--count-between` is a usage error (exit 2, one
+    line naming the argument), never a traceback — and it is caught
+    before any Spark work starts."""
+    from argparse import Namespace
+
+    from br_archive_spark.cli import cmd_agg
+
+    args = Namespace(input="/nonexistent", column="v", ndv=False,
+                     topk=0, count_between=band, master="local[1]",
+                     shuffle_partitions=1)
+    assert cmd_agg(args) == 2
+    err = capsys.readouterr().err
+    assert "--count-between" in err and repr(band) in err
+
+
+def test_hist_cli_count_between_fractional_int_band(spark, tmp_path,
+                                                    capsys):
+    """On an int lane a fractional band means the integers inside it:
+    0.5:12.5 is 1..12, reported as such, answered exactly like 1:12.
+    Truncating 0.5 to 0 would make the band contain a whole bucket
+    (0..12 with 13-wide buckets) and count_min would exceed the count
+    that was asked for."""
+    import json
+    from argparse import Namespace
+
+    from br_archive_spark.cli import cmd_agg
+
+    df = spark.range(5000).select(
+        F.col("id").alias("okey"),
+        F.col("id").cast("string").alias("doc_id"),
+        (F.col("id") % 200).alias("v"))
+    man_dir = str(tmp_path / "man")
+    encode_table(df, specs=[("okey", "int"), ("doc_id", "string"),
+                            ("v", "int")],
+                 mode="scan", target_values=5000).write.parquet(man_dir)
+
+    def run(band):
+        args = Namespace(input=man_dir, column="v", ndv=False, topk=0,
+                         count_between=band, master="local[2]",
+                         shuffle_partitions=4)
+        assert cmd_agg(args) == 0
+        out = capsys.readouterr().out.strip().splitlines()[-1]
+        return json.loads(out)["count_between"]
+
+    truth = _truth(df, "v", 0.5, 12.5)
+    assert truth == 12 * 25
+    frac = run("0.5:12.5")
+    assert frac["count_min"] <= truth <= frac["count_max"]
+    assert (frac["lo"], frac["hi"]) == (1, 12)
+    assert frac == run("1:12")
+    neg = run("-3.5:-0.5")               # no integer inside: count 0
+    assert (neg["lo"], neg["hi"]) == (-3, -1)
+    assert neg["count_min"] == 0
+
+
 def test_hist_never_reads_payload(spark):
     """Proof positive that hist_encoded is manifest-only: zero out
     EVERY payload byte (decode_table would fail its checksum) and

@@ -392,3 +392,44 @@ def test_scan_where_isin_band_is_pure_catalyst(spark, tmp_path):
     nodes = set(re.findall(r"MapInArrow \((\d+)\)", plan))
     assert len(nodes) == 1, nodes
     assert "element_at" in plan          # bloom word bit tests
+
+
+def test_bulk_paths_schedule_from_a_local_table(spark, tmp_path):
+    """The bulk operators' bucket tables are driver-built Arrow
+    tables: the JVM reads them as a LocalTableScan. A frame built from
+    a Python list would show ``Scan ExistingRDD`` — a Python
+    ``parallelize`` + ``map`` stage run by a second pool of Python
+    workers, one extra Python task per partition. The codec
+    ``MapInArrow`` stays the only Python operator."""
+    import re
+
+    from br_archive_spark.datagen import token_table
+    from br_archive_spark.operators import (compact_manifest,
+                                            decode_files, encode_files)
+
+    src = str(tmp_path / "src")
+    token_table(spark, 400).repartition(3).write.parquet(src)
+    man = str(tmp_path / "man")
+    encode_files(spark, src).write.parquet(man)
+    files = spark.read.parquet(src).inputFiles()
+    plans = {
+        "encode_files": encode_files(spark, src),
+        "encode_files distributed enumeration":
+            encode_files(spark, src, driver_enum_threshold=0),
+        "encode_files empty input":
+            encode_files(spark, src, skip_files=set(files)),
+        "decode_files": decode_files(spark, man),
+        "decode_files output_dir":
+            decode_files(spark, man, output_dir=str(tmp_path / "dec")),
+        "compact_manifest":
+            compact_manifest(spark, man, str(tmp_path / "cman")),
+    }
+    for label, df in plans.items():
+        plan = _plan(df)
+        assert "LocalTableScan" in plan, label
+        assert "ExistingRDD" not in plan, label
+        python_ops = {op for op in re.findall(r"^\(\d+\) (\w+)", plan,
+                                              re.M)
+                      if re.search(r"Python|Pandas|Arrow", op)}
+        want = set() if label.endswith("empty input") else {"MapInArrow"}
+        assert python_ops == want, (label, python_ops)
