@@ -446,13 +446,7 @@ def cmd_scan(args) -> int:
     per-chunk ``null_count`` lane instead (r5). Specs come from the
     manifest itself (``manifest_specs``); prints prune stats +
     matching rows."""
-    from functools import reduce
-    from operator import or_
-
-    from .operators.decode import (_fstats_disjoint, _notnull_disjoint,
-                                   _null_disjoint, _sstats_disjoint,
-                                   _stats_disjoint, manifest_specs,
-                                   scan_where)
+    from .operators.decode import _scan_prune, manifest_specs, scan_where
 
     spark = _spark(args)
     man = spark.read.parquet(args.input)
@@ -471,56 +465,37 @@ def cmd_scan(args) -> int:
         print("scan: --null and --not-null are contradictory",
               file=sys.stderr)
         return 2
+    bands = []
+    lo = hi = None
+    if args.lo is not None:
+        if kind == "float":
+            lo, hi = float(args.lo), float(args.hi)
+        elif kind == "string":
+            lo, hi = str(args.lo), str(args.hi)
+        else:
+            lo, hi = int(float(args.lo)), int(float(args.hi))
+        bands.append((args.column, lo, hi))
+    null_cols = [args.column] if want_null else []
+    not_null_cols = [args.column] if want_not_null else []
     if getattr(args, "estimate", False):
         # planner probe: cost + result-count bracket from the
         # manifest alone, nothing decoded
         from .operators.decode import scan_estimate
 
-        if args.lo is not None:
-            if kind == "float":
-                b = (args.column, float(args.lo), float(args.hi))
-            elif kind == "string":
-                b = (args.column, str(args.lo), str(args.hi))
-            else:
-                b = (args.column, int(float(args.lo)),
-                     int(float(args.hi)))
-            est_bands = [b]
-        else:
-            est_bands = []
-        est = scan_estimate(
-            man, est_bands, specs=specs,
-            null_cols=[args.column] if want_null else None,
-            not_null_cols=[args.column] if want_not_null else None)
+        est = scan_estimate(man, bands, specs=specs, null_cols=null_cols,
+                            not_null_cols=not_null_cols)
         est["column"] = args.column
         est["rows_bracket"] = list(est["rows_bracket"])
         print(json.dumps(est))
         return 0
-    bands, disjoints = [], []
-    lo = hi = None
-    if args.lo is not None:
-        if kind == "float":
-            lo, hi = float(args.lo), float(args.hi)
-            disjoints.append(_fstats_disjoint(args.column, lo, hi))
-        elif kind == "string":
-            lo, hi = str(args.lo), str(args.hi)
-            disjoints.append(_sstats_disjoint(args.column, lo, hi))
-        else:
-            lo, hi = int(float(args.lo)), int(float(args.hi))
-            disjoints.append(_stats_disjoint(args.column, lo, hi))
-        bands.append((args.column, lo, hi))
-    if want_null:
-        disjoints.append(_null_disjoint(args.column))
-    if want_not_null and kind is not None \
-            and not kind.endswith("_list"):
-        disjoints.append(_notnull_disjoint(args.column))
-    total = man.count()
-    surviving = man.where(~reduce(or_, disjoints)).count() \
-        if disjoints else total
     rows = scan_where(man, bands, specs=specs, with_n_tok=False,
                       global_dict=_load_gdict(args.global_dict),
-                      null_cols=[args.column] if want_null else None,
-                      not_null_cols=[args.column] if want_not_null
-                      else None)
+                      null_cols=null_cols, not_null_cols=not_null_cols)
+    # count the chunks the scan's own prune engine keeps (after
+    # scan_where validated the predicate)
+    total = man.count()
+    surviving = _scan_prune(man, dict(specs), bands, null_cols,
+                            not_null_cols, {}).count()
     n = rows.count()
     out = {"column": args.column, "lo": lo, "hi": hi,
            "null": bool(want_null), "not_null": bool(want_not_null),

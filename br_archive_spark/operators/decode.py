@@ -25,6 +25,7 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
 from .chunk import decode_column
@@ -202,8 +203,6 @@ def _zone_prune(encoded: DataFrame, key: str, lo: str, hi: str) -> DataFrame:
     pre-r3 manifest, or a table with no string column) is kept, never
     silently filtered out (ADVICE r2 #1 — pruning on the wrong column's
     bounds drops matching rows with no error)."""
-    from pyspark.sql import functions as F
-
     if "key_col" not in encoded.columns:
         return encoded
     # key_col can be NULL inside a non-null manifest column (e.g. after
@@ -217,6 +216,35 @@ def _zone_prune(encoded: DataFrame, key: str, lo: str, hi: str) -> DataFrame:
         | ((F.col("key_min") <= hi) & (F.col("key_max") >= lo)))
 
 
+def _bloom_hits(words, probes: list, positions):
+    """Predicate: the bloom ``words`` (an ``array<long>`` column) MAY
+    hold some probe — per probe, a CASE over the 7 power-of-two bloom
+    geometries of its bit tests (``positions(probe, m_bits)`` gives
+    the ``(word, mask)`` literals; exact wrap-around arithmetic happens
+    there in Python, so the plan sees only ANSI-safe, constant-foldable
+    int literals; Java long arithmetic wraps mod 2^64, matching the
+    builder's uint64 math), ORed over the probes. An unknown geometry
+    keeps the chunk."""
+    from functools import reduce as _reduce
+    from operator import and_, or_
+
+    from .bloom import bloom_sizes
+
+    hits = []
+    for v in probes:
+        sized = None
+        for m_bits in bloom_sizes():
+            cond = F.size(words) == m_bits // 64
+            hit = _reduce(and_, [
+                F.element_at(words, F.lit(widx))
+                .bitwiseAND(F.lit(mask)) != 0
+                for widx, mask in positions(v, m_bits)])
+            sized = F.when(cond, hit) if sized is None \
+                else sized.when(cond, hit)
+        hits.append(sized.otherwise(F.lit(True)))
+    return _reduce(or_, hits)
+
+
 def _bloom_prune(encoded: DataFrame, key: str,
                  doc_ids: list[str]) -> DataFrame:
     """Membership pruning by the per-chunk key bloom (operators/
@@ -225,21 +253,13 @@ def _bloom_prune(encoded: DataFrame, key: str,
     key space), the bloom prunes by MEMBERSHIP regardless of layout,
     and probes for absent keys drop every chunk.
 
-    Entirely Catalyst: per probe key the driver contributes two int64
-    literals, the plan computes ``pos_i = (h1 + i*h2) &
-    (size(key_bloom)*64 - 1)`` and bit-tests ``element_at`` words —
-    Java long arithmetic wraps mod 2^64, matching the builder's uint64
-    math. Same silent-miss rule as the zone map: a chunk whose bounds
-    describe a different column, predates blooms (null), or trips any
-    bit test stays/goes accordingly — correctness never depends on
-    the bloom (false positives only cost a wasted decode).
+    Entirely Catalyst (:func:`_bloom_hits` over ``key_bloom``). Same
+    silent-miss rule as the zone map: a chunk whose bounds describe a
+    different column, predates blooms (null), or trips any bit test
+    stays/goes accordingly — correctness never depends on the bloom
+    (false positives only cost a wasted decode).
     """
-    from functools import reduce as _reduce
-    from operator import or_
-
-    from pyspark.sql import functions as F
-
-    from .bloom import bloom_sizes, probe_positions
+    from .bloom import probe_positions
 
     if "key_bloom" not in encoded.columns \
             or "key_col" not in encoded.columns or not doc_ids:
@@ -250,30 +270,12 @@ def _bloom_prune(encoded: DataFrame, key: str,
         # plan (driver planning time, codegen 64KB method limit) past
         # what the pruning saves — bulk probes keep zone maps only
         return encoded
-
-    def probe_for_size(kstr: str, m_bits: int):
-        # exact wrap-around arithmetic happens HERE in Python; the
-        # plan sees only int literals (ANSI-safe, constant-foldable)
-        tests = [
-            F.element_at(F.col("key_bloom"), F.lit(widx))
-            .bitwiseAND(F.lit(mask)) != 0
-            for widx, mask in probe_positions(kstr, m_bits)]
-        return _reduce(lambda a, b: a & b, tests)
-
-    probes = []
-    for kstr in doc_ids:
-        sized = None
-        for m_bits in bloom_sizes():          # 7 power-of-two sizes
-            cond = F.size("key_bloom") == m_bits // 64
-            hit = probe_for_size(str(kstr), m_bits)
-            sized = F.when(cond, hit) if sized is None \
-                else sized.when(cond, hit)
-        probes.append(sized.otherwise(F.lit(True)))  # unknown size: keep
     return encoded.where(
         F.col("key_col").isNull()
         | (F.col("key_col") != key)
         | F.col("key_bloom").isNull()
-        | _reduce(or_, probes))
+        | _bloom_hits(F.col("key_bloom"), [str(k) for k in doc_ids],
+                      probe_positions))
 
 
 def lookup_docs(encoded: DataFrame, doc_ids: list[str],
@@ -296,8 +298,6 @@ def lookup_docs(encoded: DataFrame, doc_ids: list[str],
     (``src/io/lib_bra_io_file_ctx.c:596-602``) plus FSST's
     random-access promise (strings decodable without bulk context).
     """
-    from pyspark.sql import functions as F
-
     lo, hi = min(doc_ids), max(doc_ids)
     pruned = _bloom_prune(_zone_prune(encoded, key, lo, hi),
                           key, doc_ids)
@@ -322,8 +322,6 @@ def lookup_range(encoded: DataFrame, lo: str, hi: str,
     near-disjoint zone maps) a narrow range decodes O(matching
     chunks), not the table.
     """
-    from pyspark.sql import functions as F
-
     pruned = _zone_prune(encoded, key, lo, hi)
     dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
                        global_dict=global_dict)
@@ -344,15 +342,55 @@ def manifest_specs(encoded: DataFrame) -> list[tuple[str, str]]:
     return [(s["name"], s["kind"]) for s in row[0]]
 
 
-def _has_numeric_stats(encoded: DataFrame) -> bool:
-    """Whether this manifest's ``column_stats`` schema carries the r3
-    numeric lanes (vmin/vmax/...). Manifests written by earlier builds
-    lack the fields entirely — consumers must degrade (no pruning /
-    clear error), not throw an unresolved-column AnalysisException."""
+def _has_lane(encoded: DataFrame, field: str) -> bool:
+    """Whether this manifest's ``column_stats`` carries ``field`` — the
+    one lane probe. Manifests written by earlier builds lack later
+    lanes entirely (numeric since r3, float r4, string/bloom/hll/topk/
+    hist/qcut r5); consumers must degrade (no pruning / a nameable
+    refusal), not throw an unresolved-column AnalysisException. A
+    ``field`` the manifest schema has no lane for raises: a misspelt
+    name would otherwise turn its proof off for good."""
+    from .encode import _STATS_STRUCT
+
+    if _STATS_STRUCT.get_field_index(field) < 0:
+        names = ", ".join(f.name for f in _STATS_STRUCT)
+        raise ValueError(f"_has_lane: {field!r} is not a column_stats "
+                         f"field ({names})")
     if "column_stats" not in encoded.columns:
         return False
     elem = encoded.schema["column_stats"].dataType.elementType
-    return "vmin" in elem.fieldNames()
+    return field in elem.fieldNames()
+
+
+def _stats_entry(column: str):
+    """The chunk's ``column_stats`` element for ``column`` (null when
+    the chunk has no such entry)."""
+    # NB: F.filter treats a 2-arg lambda as (element, index), so bind
+    # the column name via a closure, never a default arg
+    return F.element_at(
+        F.filter("column_stats", lambda c: c["name"] == F.lit(column)), 1)
+
+
+def _lane(encoded: DataFrame, s, field: str):
+    """``s[field]`` of a :func:`_stats_entry`, or a null of the lane's
+    manifest-schema type when this manifest predates the lane."""
+    if _has_lane(encoded, field):
+        return s[field]
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    from .encode import _STATS_STRUCT
+
+    return F.lit(None).cast(
+        from_arrow_type(_STATS_STRUCT.field(field).type))
+
+
+def _proves(column: str, pred):
+    """Predicate: the chunk's stats entry for ``column`` satisfies
+    ``pred`` — the shape of every chunk-skipping proof. A missing
+    entry proves nothing (the chunk is kept)."""
+    return F.exists(
+        "column_stats",
+        lambda s: (s["name"] == F.lit(column)) & pred(s))
 
 
 def _stats_disjoint(column: str, lo: int, hi: int):
@@ -362,22 +400,8 @@ def _stats_disjoint(column: str, lo: int, hi: int):
     never prove anything — the chunk is kept and the residual filter
     decides (the ADVICE-r2 silent-miss rule: pruning must only ever
     act on bounds that are known to describe the probed column)."""
-    from pyspark.sql import functions as F
-
-    return F.exists(
-        "column_stats",
-        lambda s: (s["name"] == F.lit(column))
-        & s["vmin"].isNotNull()
-        & ((s["vmin"] > F.lit(int(hi))) | (s["vmax"] < F.lit(int(lo)))))
-
-
-def _has_float_stats(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r4 float lanes
-    (``fmin``/``fmax``) — older manifests degrade to no float pruning."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "fmin" in elem.fieldNames()
+    return _proves(column, lambda s: s["vmin"].isNotNull() & (
+        (s["vmin"] > F.lit(int(hi))) | (s["vmax"] < F.lit(int(lo)))))
 
 
 def _fstats_disjoint(column: str, lo: float, hi: float):
@@ -385,24 +409,8 @@ def _fstats_disjoint(column: str, lo: float, hi: float):
     bounds. Null bounds (all-null/all-NaN chunks, pre-r4 rows) never
     prove anything — the chunk is kept and the residual filter
     decides."""
-    from pyspark.sql import functions as F
-
-    return F.exists(
-        "column_stats",
-        lambda s: (s["name"] == F.lit(column))
-        & s["fmin"].isNotNull()
-        & ((s["fmin"] > F.lit(float(hi)))
-           | (s["fmax"] < F.lit(float(lo)))))
-
-
-def _has_string_stats(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 string lanes
-    (``smin``/``smax``) — older manifests degrade to no string
-    pruning."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "smin" in elem.fieldNames()
+    return _proves(column, lambda s: s["fmin"].isNotNull() & (
+        (s["fmin"] > F.lit(float(hi))) | (s["fmax"] < F.lit(float(lo)))))
 
 
 def _sstats_disjoint(column: str, lo: str, hi: str):
@@ -414,24 +422,9 @@ def _sstats_disjoint(column: str, lo: str, hi: str):
     disjointness; ``smax < lo`` only when smax is present. Both
     comparisons are binary-collation string compares, the same total
     order the bounds were computed in (UTF-8 bytes == codepoints)."""
-    from pyspark.sql import functions as F
-
-    return F.exists(
-        "column_stats",
-        lambda s: (s["name"] == F.lit(column))
-        & s["smin"].isNotNull()
-        & ((s["smin"] > F.lit(hi))
-           | (s["smax"].isNotNull() & (s["smax"] < F.lit(lo)))))
-
-
-def _has_null_stats(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the ``null_count`` lane —
-    written since the r3 stats schema; older manifests degrade to no
-    null-predicate pruning."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "null_count" in elem.fieldNames()
+    return _proves(column, lambda s: s["smin"].isNotNull() & (
+        (s["smin"] > F.lit(hi))
+        | (s["smax"].isNotNull() & (s["smax"] < F.lit(lo)))))
 
 
 def _null_disjoint(column: str):
@@ -444,13 +437,8 @@ def _null_disjoint(column: str):
     still implies zero row nulls. A missing stats entry or a null
     ``null_count`` never proves anything — the chunk is kept and the
     residual filter decides."""
-    from pyspark.sql import functions as F
-
-    return F.exists(
-        "column_stats",
-        lambda s: (s["name"] == F.lit(column))
-        & s["null_count"].isNotNull()
-        & (s["null_count"] == F.lit(0)))
+    return _proves(column, lambda s: s["null_count"].isNotNull()
+                   & (s["null_count"] == F.lit(0)))
 
 
 def _notnull_disjoint(column: str):
@@ -461,96 +449,33 @@ def _notnull_disjoint(column: str):
     conflates row and element nulls, so equality with ``n_rows`` does
     not prove all-null rows — callers must not emit this term for
     list kinds (keeping the chunk is always correct)."""
-    from pyspark.sql import functions as F
-
-    return F.exists(
-        "column_stats",
-        lambda s: (s["name"] == F.lit(column))
-        & s["null_count"].isNotNull()
-        & (s["null_count"] == F.col("n_rows")))
+    return _proves(column, lambda s: s["null_count"].isNotNull()
+                   & (s["null_count"] == F.col("n_rows")))
 
 
-def _has_column_blooms(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 per-column ``bloom``
-    membership sidecar — older manifests degrade to zone-map-only
-    pruning."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "bloom" in elem.fieldNames()
-
-
-def _int_bloom_keep(column: str, values: list[int]):
-    """Predicate: this chunk MAY contain some probe value of the int
-    column, per its ``column_stats.bloom`` sidecar — the int twin of
-    :func:`_bloom_prune`'s probe. Pure Catalyst: per probe value the
-    driver contributes ``(word, mask)`` int literals per geometry
-    (wrap-around uint64 arithmetic stays in Python — ANSI-safe plan);
-    a missing stats entry, a null bloom (pre-r5 manifest, non-int
-    kind, ``bloom=False`` encode), or an unknown geometry keeps the
+def _bloom_keep(column: str, values: list, kind: str):
+    """Predicate: this chunk MAY contain some probe value of
+    ``column``, per its ``column_stats.bloom`` membership sidecar
+    (r5 — built over the chunk's distinct lane values with the
+    key-bloom hash family). The lane ``kind`` picks the probe hash:
+    string/binary lanes hash the raw bytes (``str`` probes their
+    UTF-8), int-backed lanes the codec-lane int. Probe hashing happens
+    driver-side per literal (wrap-around uint64 arithmetic stays in
+    Python — ANSI-safe plan); the plan is pure Catalyst bit tests. A
+    missing stats entry, a null bloom (pre-r5 manifest, ``bloom=False``
+    encode, a kind without the lane), or an unknown geometry keeps the
     chunk — correctness never depends on the bloom."""
-    from functools import reduce as _reduce
-    from operator import or_
+    from .bloom import probe_positions, probe_positions_int
 
-    from pyspark.sql import functions as F
-
-    from .bloom import bloom_sizes, probe_positions_int
-
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
+    if kind in ("string", "binary"):
+        probes = [v if isinstance(v, (bytes, bytearray)) else str(v)
+                  for v in values]
+        positions = probe_positions
+    else:
+        probes, positions = [int(v) for v in values], probe_positions_int
+    s = _stats_entry(column)
     blm = s["bloom"]
-    probes = []
-    for v in values:
-        sized = None
-        for m_bits in bloom_sizes():
-            cond = F.size(blm) == m_bits // 64
-            tests = [
-                F.element_at(blm, F.lit(widx))
-                .bitwiseAND(F.lit(mask)) != 0
-                for widx, mask in probe_positions_int(int(v), m_bits)]
-            hit = _reduce(lambda a, b: a & b, tests)
-            sized = F.when(cond, hit) if sized is None \
-                else sized.when(cond, hit)
-        probes.append(sized.otherwise(F.lit(True)))
-    return s.isNull() | blm.isNull() | _reduce(or_, probes)
-
-
-def _str_bloom_keep(column: str, values: list):
-    """String/binary twin of :func:`_int_bloom_keep`: this chunk MAY
-    contain some probe value, per the column's ``column_stats.bloom``
-    membership sidecar (r5 — built over the chunk's distinct values
-    with the key-bloom hash family; ``bytes`` probes hash the raw
-    bytes, ``str`` probes their UTF-8). Probe hashing happens
-    driver-side per literal (``probe_positions``); the plan is pure
-    Catalyst bit tests. Missing entry / null bloom / unknown geometry
-    keeps the chunk — correctness never depends on the bloom."""
-    from functools import reduce as _reduce
-    from operator import or_
-
-    from pyspark.sql import functions as F
-
-    from .bloom import bloom_sizes, probe_positions
-
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    blm = s["bloom"]
-    probes = []
-    for v in values:
-        sized = None
-        for m_bits in bloom_sizes():
-            cond = F.size(blm) == m_bits // 64
-            probe = v if isinstance(v, (bytes, bytearray)) else str(v)
-            tests = [
-                F.element_at(blm, F.lit(widx))
-                .bitwiseAND(F.lit(mask)) != 0
-                for widx, mask in probe_positions(probe, m_bits)]
-            hit = _reduce(lambda a, b: a & b, tests)
-            sized = F.when(cond, hit) if sized is None \
-                else sized.when(cond, hit)
-        probes.append(sized.otherwise(F.lit(True)))
-    return s.isNull() | blm.isNull() | _reduce(or_, probes)
+    return s.isNull() | blm.isNull() | _bloom_hits(blm, probes, positions)
 
 
 def lookup_values(encoded: DataFrame, column: str, values: list[int],
@@ -582,61 +507,12 @@ def lookup_values(encoded: DataFrame, column: str, values: list[int],
     or a BINARY column: probes are ``bytes``, pruning is bloom-only
     (content-digest point lookups; binary has no zone map).
 
-    The column analog of the reference's skip-without-decode
+    The IN-list form of :func:`scan_where` (``isin={column:
+    values}``), so every proof above is the one prune engine's. The
+    column analog of the reference's skip-without-decode
     (``src/io/lib_bra_io_file_ctx.c:596-602``)."""
-    from pyspark.sql import functions as F
-
-    from .encode import TOKEN_SPECS as _TS
-    from .encode import _int_kind
-
-    kinds = dict(specs or _TS)
-    kind = kinds.get(column)
-    if kind is None:
-        raise ValueError(f"lookup_values: {column!r} not in encode "
-                         "specs")
-    if not values:
-        raise ValueError("lookup_values: empty probe list")
-    if kind == "binary":
-        # content-digest point lookup: bloom-only pruning (binary has
-        # no zone map), exact isin residual on the decoded bytes
-        bvals = sorted({bytes(v) for v in values})
-        pruned = encoded
-        if _has_column_blooms(encoded) and len(bvals) <= 64:
-            pruned = pruned.where(_str_bloom_keep(column, bvals))
-        dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
-                           global_dict=global_dict)
-        return dec.where(F.col(column).isin(bvals))
-    if kind == "string":
-        svals = sorted({str(v) for v in values})
-        pruned = encoded
-        if _has_string_stats(encoded):
-            pruned = pruned.where(
-                ~_sstats_disjoint(column, svals[0], svals[-1]))
-        # when this column is the chunk's key zone-map column, its
-        # membership filter lives in key_bloom (no column bloom is
-        # stored — encode skips the duplicate); _bloom_prune keeps
-        # every chunk whose key_col differs, so both probes compose
-        pruned = _bloom_prune(pruned, column, svals)
-        if _has_column_blooms(encoded) and len(svals) <= 64:
-            pruned = pruned.where(_str_bloom_keep(column, svals))
-        dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
-                           global_dict=global_dict)
-        return dec.where(F.col(column).isin(svals))
-    if not _int_kind(kind) or kind == "int_list":
-        raise ValueError(f"lookup_values: {column!r} is {kind!r} — "
-                         "point lookups need a scalar int-backed, "
-                         "string, or binary column (use lookup_docs "
-                         "for the key)")
-    ivals = sorted({int(v) for v in values})
-    pruned = encoded
-    if _has_numeric_stats(encoded):
-        pruned = pruned.where(
-            ~_stats_disjoint(column, ivals[0], ivals[-1]))
-    if _has_column_blooms(encoded) and len(ivals) <= 64:
-        pruned = pruned.where(_int_bloom_keep(column, ivals))
-    dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
-                       global_dict=global_dict)
-    return dec.where(_int_view(column, kind).isin(ivals))
+    return scan_where(encoded, [], specs=specs, with_n_tok=with_n_tok,
+                      global_dict=global_dict, isin={column: values})
 
 
 def _int_view(column: str, kind: str):
@@ -644,8 +520,6 @@ def _int_view(column: str, kind: str):
     (the unit ``column_stats`` bounds are recorded in): days for date,
     epoch micros for timestamp, unscaled int for decimal(p,s). All
     JVM-side expressions — the residual filter stays in codegen."""
-    from pyspark.sql import functions as F
-
     if kind == "int":
         return F.col(column).cast("long")
     if kind == "bool":
@@ -701,18 +575,19 @@ def scan_range(encoded: DataFrame, column: str, lo: int, hi: int,
     from .encode import TOKEN_SPECS
 
     specs = specs or TOKEN_SPECS
-    kind = dict(specs).get(column)
-    if kind is None:
-        raise ValueError(f"scan_range: {column!r} not in encode specs")
-    if kind == "float":
-        band = (column, float(lo), float(hi))
-    elif kind == "string":
-        band = (column, str(lo), str(hi))
-    else:
-        band = (column, int(lo), int(hi))
-    return scan_where(encoded, [band],
+    return scan_where(encoded, [_band(specs, column, lo, hi, "scan_range")],
                       specs=specs, with_n_tok=with_n_tok,
                       global_dict=global_dict, project=project)
+
+
+def _band(specs, column: str, lo, hi, fn: str) -> tuple:
+    """``(column, lo, hi)`` with the bounds coerced to the column's
+    lane type: double for float, str for string, int otherwise."""
+    kind = dict(specs).get(column)
+    if kind is None:
+        raise ValueError(f"{fn}: {column!r} not in encode specs")
+    cast = {"float": float, "string": str}.get(kind, int)
+    return column, cast(lo), cast(hi)
 
 
 def _normalize_isin(kinds: dict, isin: dict) -> dict:
@@ -744,17 +619,16 @@ def _normalize_isin(kinds: dict, isin: dict) -> dict:
 def _scan_drop(encoded: DataFrame, kinds: dict,
                bands, null_cols, not_null_cols, ivals):
     """The OR of every predicate's chunk-disjointness proof — the
-    shared prune engine behind :func:`scan_where` (chunk-level WHERE)
-    and :func:`scan_where_files` (file-level metadata pass). Missing
-    stats lanes (older manifests) contribute no proof and the chunk
-    is kept; ``None`` when nothing can prove anything."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    has_int = _has_numeric_stats(encoded)
-    has_f = _has_float_stats(encoded)
-    has_s = _has_string_stats(encoded)
-    has_b = _has_column_blooms(encoded)
-    has_n = _has_null_stats(encoded)
+    shared prune engine behind :func:`scan_where` (chunk-level WHERE),
+    :func:`scan_where_files` (file-level metadata pass) and
+    :func:`scan_estimate`. Missing stats lanes (older manifests)
+    contribute no proof and the chunk is kept; ``None`` when nothing
+    can prove anything."""
+    has_int = _has_lane(encoded, "vmin")
+    has_f = _has_lane(encoded, "fmin")
+    has_s = _has_lane(encoded, "smin")
+    has_b = _has_lane(encoded, "bloom")
+    has_n = _has_lane(encoded, "null_count")
     drop = None
     if has_n:
         for c in null_cols:
@@ -766,48 +640,58 @@ def _scan_drop(encoded: DataFrame, kinds: dict,
             d = _notnull_disjoint(c)
             drop = d if drop is None else (drop | d)
     for column, lo, hi in bands:
-        if kinds[column] == "float":
+        kind = kinds[column]
+        if kind == "float":
             if not has_f:
                 continue            # pre-r4 manifest: no float pruning
             d = _fstats_disjoint(column, float(lo), float(hi))
-        elif kinds[column] == "string":
+        elif kind == "string":
             if not has_s:
                 continue            # pre-r5 manifest: no string pruning
             d = _sstats_disjoint(column, str(lo), str(hi))
-            if has_b and lo == hi:
-                # point predicate: membership beats min/max on hash
-                # layouts; null bloom keeps (negation is null-safe)
-                d = d | ~_str_bloom_keep(column, [str(lo)])
         else:
             if not has_int:
                 continue
             d = _stats_disjoint(column, lo, hi)
-            if has_b and lo == hi:
-                d = d | ~_int_bloom_keep(column, [int(lo)])
+        if kind != "float" and has_b and lo == hi:
+            # point predicate: membership beats min/max on hash
+            # layouts; null bloom keeps (negation is null-safe)
+            d = d | ~_bloom_keep(column, [lo], kind)
         drop = d if drop is None else (drop | d)
     for column, vals in ivals.items():
-        # IN-list: zone-map envelope [min, max] (lookup_values' probe
-        # band) OR bloom proof that EVERY probe value is absent
+        # IN-list: zone-map envelope [min, max] (binary lanes have
+        # none) OR bloom proof that EVERY probe value is absent
         kind = kinds[column]
         d = None
-        if kind == "string":
-            if has_s:
-                d = _sstats_disjoint(column, vals[0], vals[-1])
-            if has_b and len(vals) <= 64:
-                b = ~_str_bloom_keep(column, vals)
-                d = b if d is None else (d | b)
-        elif kind == "binary":
-            if has_b and len(vals) <= 64:
-                d = ~_str_bloom_keep(column, vals)
-        else:
-            if has_int:
-                d = _stats_disjoint(column, vals[0], vals[-1])
-            if has_b and len(vals) <= 64:
-                b = ~_int_bloom_keep(column, vals)
-                d = b if d is None else (d | b)
+        if kind == "string" and has_s:
+            d = _sstats_disjoint(column, vals[0], vals[-1])
+        elif kind not in ("string", "binary") and has_int:
+            d = _stats_disjoint(column, vals[0], vals[-1])
+        if has_b and len(vals) <= 64:
+            b = ~_bloom_keep(column, vals, kind)
+            d = b if d is None else (d | b)
         if d is not None:
             drop = d if drop is None else (drop | d)
     return drop
+
+
+def _scan_prune(encoded: DataFrame, kinds: dict,
+                bands, null_cols, not_null_cols, ivals) -> DataFrame:
+    """The manifest rows a scan decodes: chunks no :func:`_scan_drop`
+    proof drops, with the key bloom composed in for string point and
+    IN-list probes (the chunk's KEY column stores no column bloom —
+    its filter is ``key_bloom``; :func:`_bloom_prune` keeps every
+    chunk whose ``key_col`` differs, so this composes)."""
+    drop = _scan_drop(encoded, kinds, bands, null_cols, not_null_cols,
+                      ivals)
+    pruned = encoded.where(~drop) if drop is not None else encoded
+    for column, lo, hi in bands:
+        if kinds[column] == "string" and lo == hi:
+            pruned = _bloom_prune(pruned, column, [str(lo)])
+    for column, vals in ivals.items():
+        if kinds[column] == "string":
+            pruned = _bloom_prune(pruned, column, vals)
+    return pruned
 
 
 def scan_where(encoded: DataFrame,
@@ -860,8 +744,6 @@ def scan_where(encoded: DataFrame,
     """
     import math
 
-    from pyspark.sql import functions as F
-
     from .encode import TOKEN_SPECS, _float_kind, _int_kind
 
     null_cols = list(null_cols or [])
@@ -912,18 +794,8 @@ def scan_where(encoded: DataFrame,
         need = (set(project) | {c for c, _, _ in bands}
                 | set(null_cols) | set(not_null_cols) | set(ivals))
         dec_specs = [s for s in specs if s[0] in need]
-    drop = _scan_drop(encoded, kinds, bands, null_cols,
-                      not_null_cols, ivals)
-    pruned = encoded.where(~drop) if drop is not None else encoded
-    for column, lo, hi in bands:
-        # a string point band on the chunk's KEY column probes
-        # key_bloom (no column bloom is stored for it); _bloom_prune
-        # keeps every chunk whose key_col differs, so this composes
-        if kinds[column] == "string" and lo == hi:
-            pruned = _bloom_prune(pruned, column, [str(lo)])
-    for column, vals in ivals.items():
-        if kinds[column] == "string":
-            pruned = _bloom_prune(pruned, column, vals)
+    pruned = _scan_prune(encoded, kinds, bands, null_cols,
+                         not_null_cols, ivals)
     dec = decode_table(pruned, specs=dec_specs, with_n_tok=with_n_tok,
                        global_dict=global_dict)
     cond = None
@@ -977,42 +849,18 @@ def scan_range_files(spark, manifest_path: str, column: str,
     reach parquet row-group stats). The surviving-file list transits
     the driver; it is bounded by the shard count, the same scale as
     Spark's own file index.
+
+    The single-band form of :func:`scan_where_files`, so phase 1 runs
+    the full ``_scan_drop`` proof — point bands on int and string
+    columns also prune files by their membership blooms.
     """
-    from pyspark.sql import functions as F
+    from .encode import TOKEN_SPECS
 
-    from .encode import TOKEN_SPECS as _TS
-
-    man = spark.read.parquet(manifest_path)
-    kind = dict(specs or _TS).get(column)
-    is_float, is_str = kind == "float", kind == "string"
-    if (is_float and not _has_float_stats(man)) \
-            or (is_str and not _has_string_stats(man)) \
-            or (not is_float and not is_str
-                and not _has_numeric_stats(man)):
-        # pre-stats manifest: no file skipping possible; fall through
-        # to the (prune-free) chunk scan rather than miss rows
-        return scan_range(man, column, lo, hi, specs=specs,
-                          with_n_tok=with_n_tok,
-                          global_dict=global_dict)
-    if is_float:
-        disjoint = _fstats_disjoint(column, float(lo), float(hi))
-    elif is_str:
-        disjoint = _sstats_disjoint(column, str(lo), str(hi))
-    else:
-        disjoint = _stats_disjoint(column, lo, hi)
-    phase1 = (man.withColumn("_f", F.input_file_name())
-              .where(~disjoint)
-              .select("_f").distinct())
-    keep = [r[0] for r in phase1.collect()]
-    if not keep:
-        from .encode import TOKEN_SPECS
-
-        dec_schema = _decoded_spark_schema(specs or TOKEN_SPECS,
-                                           with_n_tok)
-        return _empty_frame(spark, dec_schema)
-    enc = spark.read.parquet(*keep)
-    return scan_range(enc, column, lo, hi, specs=specs,
-                      with_n_tok=with_n_tok, global_dict=global_dict)
+    specs = specs or TOKEN_SPECS
+    return scan_where_files(
+        spark, manifest_path,
+        [_band(specs, column, lo, hi, "scan_range_files")],
+        specs=specs, with_n_tok=with_n_tok, global_dict=global_dict)
 
 
 def scan_where_files(spark, manifest_path: str,
@@ -1025,7 +873,7 @@ def scan_where_files(spark, manifest_path: str,
                      not_null_cols: list[str] | None = None,
                      isin: dict[str, list] | None = None) -> DataFrame:
     """File-skipping form of :func:`scan_where` — the two-phase
-    metadata-pass pattern of :func:`scan_range_files` generalized to
+    metadata-pass scan described at :func:`scan_range_files`, over
     the full predicate family (range + equality + IN-list + null
     bands, conjunctive). Phase 1 evaluates the SAME prune disjunction
     (``_scan_drop``) over only ``column_stats`` + file names (the
@@ -1035,8 +883,6 @@ def scan_where_files(spark, manifest_path: str,
     key-bloom composition, and the exact residual all re-apply. A
     manifest predating every probed stats lane falls through to the
     prune-free scan rather than miss rows."""
-    from pyspark.sql import functions as F
-
     from .encode import TOKEN_SPECS as _TS
 
     man = spark.read.parquet(manifest_path)
@@ -1088,31 +934,19 @@ def agg_encoded(encoded: DataFrame, column: str) -> DataFrame:
     the reference answering ``unbra -l`` from headers alone
     (``src/io/lib_bra_io_file_ctx.c:701-804``).
     """
-    from pyspark.sql import functions as F
-
-    if not _has_numeric_stats(encoded):
+    if not _has_lane(encoded, "vmin"):
         raise ValueError(
             "agg_encoded: manifest predates numeric column_stats "
             "(no vmin/vmax lanes) — decode_table + agg instead, or "
             "re-encode")
     _check_stats_column(encoded, column, "agg_encoded")
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    has_f = _has_float_stats(encoded)
-    has_s = _has_string_stats(encoded)
+    s = _stats_entry(column)
     per = encoded.select(
         s["vmin"].alias("c_vmin"), s["vmax"].alias("c_vmax"),
         s["vsum"].alias("c_vsum"), s["n_vals"].alias("c_n"),
         s["null_count"].alias("c_nulls"),
-        (s["fmin"] if has_f
-         else F.lit(None).cast("double")).alias("c_fmin"),
-        (s["fmax"] if has_f
-         else F.lit(None).cast("double")).alias("c_fmax"),
-        (s["smin"] if has_s
-         else F.lit(None).cast("string")).alias("c_smin"),
-        (s["smax"] if has_s
-         else F.lit(None).cast("string")).alias("c_smax"))
+        *[_lane(encoded, s, f).alias(f"c_{f}")
+          for f in ("fmin", "fmax", "smin", "smax")])
     # a chunk whose stats are unusable (missing entry, or values
     # present but no exact sum) poisons only the lanes it cannot serve
     bad_sum = F.max(F.when(F.col("c_vsum").isNull()
@@ -1160,15 +994,6 @@ def _check_stats_column(encoded: DataFrame, column: str,
             f"{sorted(names)}")
 
 
-def _has_hll(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 ``hll`` sketch lane —
-    older manifests degrade to "no estimate", never a guess."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "hll" in elem.fieldNames()
-
-
 def ndv_encoded(encoded: DataFrame, column: str) -> int:
     """Approximate ``COUNT(DISTINCT column)`` answered ENTIRELY from
     the manifest — the cardinality question every layout, join
@@ -1189,19 +1014,15 @@ def ndv_encoded(encoded: DataFrame, column: str) -> int:
     chunks would be a wrong answer, the same no-silent-miss rule as
     every pruning lane."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from .bloom import HLL_M, hll_estimate
 
-    if not _has_hll(encoded):
+    if not _has_lane(encoded, "hll"):
         raise ValueError(
             "ndv_encoded: manifest predates hll sketches (pre-r5) — "
             "decode_table + countDistinct instead, or re-encode")
     _check_stats_column(encoded, column, "ndv_encoded")
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    per = encoded.select(s["hll"].alias("hll"))
+    per = encoded.select(_stats_entry(column)["hll"].alias("hll"))
     if per.where(F.col("hll").isNull()).limit(1).count():
         raise ValueError(
             f"ndv_encoded: column {column!r} has chunks without a "
@@ -1213,15 +1034,6 @@ def ndv_encoded(encoded: DataFrame, column: str) -> int:
     for row in merged:
         regs[row["pos"]] = row["r"]
     return int(round(hll_estimate(regs)))
-
-
-def _has_topk(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 ``topk`` value-counts
-    lane — older manifests degrade to "no summary", never a guess."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "topk" in elem.fieldNames()
 
 
 def topk_encoded(encoded: DataFrame, column: str,
@@ -1249,17 +1061,12 @@ def topk_encoded(encoded: DataFrame, column: str,
     column lacks a summary (non-summarizable kind — float, binary,
     int_list — or ``bloom=False``): a distribution that silently
     ignored chunks would be a wrong answer."""
-    from pyspark.sql import functions as F
-
-    if not _has_topk(encoded):
+    if not _has_lane(encoded, "topk"):
         raise ValueError(
             "topk_encoded: manifest predates topk value-counts "
             "(pre-r5) — decode_table + groupBy count instead")
     _check_stats_column(encoded, column, "topk_encoded")
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
-    per = encoded.select(s["topk"].alias("topk"))
+    per = encoded.select(_stats_entry(column)["topk"].alias("topk"))
     if per.where(F.col("topk").isNull()).limit(1).count():
         raise ValueError(
             f"topk_encoded: column {column!r} has chunks without a "
@@ -1374,23 +1181,6 @@ def _qcut_bounds(cuts: list, n: int, lo, hi) -> tuple[int, int]:
             max(0, f_hi_max - g_lo_min))
 
 
-def _has_qcut(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 quantile-cut lanes."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "qcut" in elem.fieldNames()
-
-
-def _has_hist(encoded: DataFrame) -> bool:
-    """Whether ``column_stats`` carries the r5 ``hist`` selectivity
-    lane — older manifests degrade to "no histogram", never a guess."""
-    if "column_stats" not in encoded.columns:
-        return False
-    elem = encoded.schema["column_stats"].dataType.elementType
-    return "hist" in elem.fieldNames()
-
-
 def hist_encoded(encoded: DataFrame, column: str,
                  lo, hi) -> tuple[int, int]:
     """RIGOROUS bounds on ``COUNT(*) WHERE lo <= column <= hi``
@@ -1429,11 +1219,9 @@ def hist_encoded(encoded: DataFrame, column: str,
     binary, list lanes —, ``bloom=False`` encode, or a float chunk
     with ±Inf bounds): bounds that silently ignored chunks would be a
     wrong answer, the same no-silent-miss rule as every other lane."""
-    from pyspark.sql import functions as F
-
     from .encode import _int_kind
 
-    if not _has_hist(encoded):
+    if not _has_lane(encoded, "hist"):
         raise ValueError(
             "hist_encoded: manifest predates hist lane (pre-r5) — "
             "decode_table + filter/count instead, or re-encode")
@@ -1448,17 +1236,11 @@ def hist_encoded(encoded: DataFrame, column: str,
         raise ValueError(
             f"hist_encoded: column {column!r} has kind {kind!r} — "
             "histograms cover scalar int-backed and float lanes only")
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
+    s = _stats_entry(column)
     per = encoded.select(
-        s["hist"].alias("hist"), s["n_vals"].alias("n_vals"),
-        s["vmin"].alias("vmin"), s["vmax"].alias("vmax"),
-        s["fmin"].alias("fmin"), s["fmax"].alias("fmax"),
-        (s["qcut"] if _has_qcut(encoded)
-         else F.lit(None).cast("array<bigint>")).alias("qcut"),
-        (s["fqcut"] if _has_qcut(encoded)
-         else F.lit(None).cast("array<double>")).alias("fqcut"))
+        *[_lane(encoded, s, f).alias(f)
+          for f in ("hist", "n_vals", "vmin", "vmax", "fmin", "fmax",
+                    "qcut", "fqcut")])
     if per.where(F.col("hist").isNull()
                  & (F.coalesce(F.col("n_vals"), F.lit(1)) > 0)
                  ).limit(1).count():
@@ -1552,8 +1334,6 @@ def quantile_encoded(encoded: DataFrame, column: str, q: float,
     (the rank bound needs every chunk accounted for)."""
     import math
 
-    from pyspark.sql import functions as F
-
     from .encode import _int_kind
 
     if not 0.0 < q <= 1.0:
@@ -1589,30 +1369,27 @@ def quantile_encoded(encoded: DataFrame, column: str, q: float,
     # expression an oracle computes — rank consistency beats
     # idealized rational arithmetic here
     k = min(n, max(1, int(math.ceil(q * n))))
-    has_q = _has_qcut(encoded)
-    s = F.element_at(
-        F.filter("column_stats",
-                 lambda c: c["name"] == F.lit(column)), 1)
+    s = _stats_entry(column)
     per = encoded.select(
-        s["hist"].alias("hist"),
-        s["vmin"].alias("vmin"), s["vmax"].alias("vmax"),
-        s["fmin"].alias("fmin"), s["fmax"].alias("fmax"),
-        (s["qcut"] if has_q
-         else F.lit(None).cast("array<bigint>")).alias("qcut"),
-        (s["fqcut"] if has_q
-         else F.lit(None).cast("array<double>")).alias("fqcut")
-    ).cache()
+        *[_lane(encoded, s, f).alias(f)
+          for f in ("hist", "vmin", "vmax", "fmin", "fmax", "qcut",
+                    "fqcut")]).cache()
     try:
         # invariant: quantile in (ex_lo, hi_val]; ex_lo None = -inf
         ex_lo, hi_val = None, vmax
         for _ in range(max(1, rounds)):
             glo = vmin if ex_lo is None else ex_lo
             if is_float:
-                width = float(hi_val) - float(glo)
-                if width <= 0:
+                glo, hi_f = float(glo), float(hi_val)
+                if hi_f <= glo:
                     break
-                grid = [float(glo) + width * i / 128
-                        for i in range(128)] + [float(hi_val)]
+                # half-domain arithmetic (as _hist_float): the width of
+                # a [-DBL_MAX, DBL_MAX] gap overflows to inf; points
+                # clamp into the gap, so rounding never leaves it
+                half = hi_f * 0.5 - glo * 0.5
+                grid = [min(hi_f, max(glo, (glo * 0.5 + half * i / 128)
+                                      * 2.0))
+                        for i in range(128)] + [hi_f]
             else:
                 span = int(hi_val) - int(glo)
                 if span <= 1:
@@ -1679,10 +1456,12 @@ def quantile_encoded(encoded: DataFrame, column: str, q: float,
             i0 = max((i for i in range(len(grid))
                       if f_max[i] < k), default=None)
             prev = (ex_lo, hi_val)
+            # accept tightening proofs only
             if j is not None:
-                hi_val = grid[j]
+                hi_val = min(hi_val, grid[j])
             if i0 is not None:
-                ex_lo = grid[i0]
+                ex_lo = grid[i0] if ex_lo is None \
+                    else max(ex_lo, grid[i0])
             if (ex_lo, hi_val) == prev:
                 break                   # no proof gained: stop
         if is_float:
@@ -1738,8 +1517,6 @@ def scan_estimate(encoded: DataFrame,
     semantics)."""
     import math
 
-    from pyspark.sql import functions as F
-
     from .encode import TOKEN_SPECS, _int_kind
 
     bands = list(bands or [])
@@ -1771,31 +1548,17 @@ def scan_estimate(encoded: DataFrame,
              or (_int_kind(kinds[c]) and kinds[c] != "int_list")]
     lower_valid = (len(hcols) == len(bands) and not ivals
                    and not null_cols and not not_null_cols)
+    pre_r5 = bool(hcols) and not _has_lane(encoded, "hist")
     cols = [F.col("n_rows"), kept.alias("kept")]
-
-    def _stats_of(name):
-        # NB: F.filter treats a 2-arg lambda as (element, index), so
-        # bind the column name via a closure, never a default arg
-        return F.element_at(
-            F.filter("column_stats",
-                     lambda e: e["name"] == F.lit(name)), 1)
-
-    has_q = _has_qcut(encoded)
-    for i, (c, _lo, _hi, _f) in enumerate(hcols):
-        s = _stats_of(c)
-        cols += [s["hist"].alias(f"h{i}"),
-                 s["vmin"].alias(f"vlo{i}"), s["vmax"].alias(f"vhi{i}"),
-                 s["fmin"].alias(f"flo{i}"), s["fmax"].alias(f"fhi{i}"),
-                 s["n_vals"].alias(f"nv{i}"),
-                 (s["qcut"] if has_q
-                  else F.lit(None).cast("array<bigint>"))
-                 .alias(f"qc{i}"),
-                 (s["fqcut"] if has_q
-                  else F.lit(None).cast("array<double>"))
-                 .alias(f"fqc{i}")]
-    per = encoded.select(*cols) if _has_hist(encoded) or not hcols \
-        else encoded.select(F.col("n_rows"), kept.alias("kept"))
-    pre_r5 = hcols and not _has_hist(encoded)
+    if not pre_r5:
+        lanes = {"hist": "h", "vmin": "vlo", "vmax": "vhi", "fmin": "flo",
+                 "fmax": "fhi", "n_vals": "nv", "qcut": "qc",
+                 "fqcut": "fqc"}
+        for i, (c, _lo, _hi, _f) in enumerate(hcols):
+            s = _stats_entry(c)
+            cols += [_lane(encoded, s, f).alias(f"{a}{i}")
+                     for f, a in lanes.items()]
+    per = encoded.select(*cols)
 
     def probe(batches):
         # per-CHUNK metadata rows; Python-int arithmetic keeps the
@@ -1906,8 +1669,6 @@ def lookup_rows(encoded: DataFrame, doc_ids: list[str],
     requires full payloads — use ``decode_table(verify_checksums=True)``
     for audits).
     """
-    from pyspark.sql import functions as F  # noqa: F401
-
     from .chunk import decode_column, decode_column_rows
 
     wanted = sorted(set(doc_ids))
@@ -2113,8 +1874,6 @@ def decode_table(encoded: DataFrame,
             "columns"]
     pruned = encoded.select(*cols)
     if not verify_checksums:
-        from pyspark.sql import functions as F
-
         wanted = F.array(*[F.lit(n) for n, _ in specs])
         pruned = pruned.withColumn(
             "columns",

@@ -563,251 +563,66 @@ def _qcut_vals(vals: np.ndarray) -> list:
     return s[[(j * n) // 16 for j in range(1, 16)]].tolist()
 
 
-def _entry_stats(kind: str, data, validity,
-                 bloom: bool = True, sketch: bool | None = None) -> dict:
-    """Per-chunk numeric stats over the NON-NULL values of one column:
-    ``{vmin, vmax, vsum, null_count}``, plus (r5, ``bloom=True``) a
-    per-column membership bloom over the distinct lane values of
-    scalar int-backed kinds.
+# column_stats element = the entry's identity/size fields + its lanes;
+# every lane a builder leaves unset defaults to null ("no proof")
+_STATS_STRUCT = MANIFEST_SCHEMA.field("column_stats").type.value_type
+_ENTRY_FIELDS = ("name", "kind", "codec", "orig_bytes", "enc_bytes")
+_STATS_LANES = tuple(f.name for f in _STATS_STRUCT
+                     if f.name not in _ENTRY_FIELDS)
 
-    * ``vmin``/``vmax``: element bounds (int64) for int-backed kinds,
-      None otherwise or when every value is null. Unit follows the
-      codec lane mapping: days for date, epoch micros for timestamp,
-      unscaled integer for decimal(p,s).
-    * ``vsum``: exact sum of the non-null values, or None when the
-      bound ``max(|vmin|,|vmax|) * n`` does not provably fit int64 —
-      a consumer that sees a null vsum with values present must decode
-      instead of trusting the manifest.
-    * ``n_vals``: how many non-null values the bounds/sum describe
-      (elements for ``int_list``, rows otherwise) — the COUNT lane of
-      aggregate pushdown. None for kinds without numeric stats.
-    * ``null_count``: null rows + null list elements (matches SQL
-      aggregate semantics, which skip nulls).
 
-    These feed :func:`~br_archive_spark.operators.decode.scan_range`
-    (chunk pruning — the reference's skip-without-decode,
-    src/io/lib_bra_io_file_ctx.c:596-602, generalized to every numeric
-    column) and ``agg_encoded`` (manifest-only SUM/MIN/MAX/COUNT).
-    ``data``/``validity`` are :func:`_extract` output — null slots in
-    ``data`` are zero-filled, so masking by validity is REQUIRED before
-    any stat (a zero-filled null must not become the chunk min).
-    """
-    # ``bloom`` gates the membership sidecar (the key zone-map column
-    # passes False — its filter is key_bloom); ``sketch`` gates the
-    # hll NDV registers independently, defaulting to ``bloom`` so the
-    # key column still gets a sketch (there is no key-level twin)
-    sketch = bloom if sketch is None else sketch
-    null_count = 0
-    if kind == "int_list":
-        values, _lengths = data
-        mask = None
-        if validity is not None:
-            row_valid, elem_valid = validity
-            if row_valid is not None:
-                null_count += int((~row_valid).sum())
-            if elem_valid is not None:
-                null_count += int((~elem_valid).sum())
-                mask = elem_valid
-        vals = values if mask is None else values[mask]
-    elif _int_kind(kind):
-        mask = None
-        if validity is not None:
-            row_valid = validity[0]
-            if row_valid is not None:
-                null_count += int((~row_valid).sum())
-                mask = row_valid
-        vals = data if mask is None else data[mask]
-    elif _float_kind(kind):
-        # typed double zone map: bounds over non-null, non-NaN values
-        # (a finite-bound range predicate never matches NaN in Spark,
-        # so NaN-free bounds prune exactly); all-NaN/all-null chunks
-        # get null bounds — kept conservatively, never pruned. No
-        # vsum lane: float addition isn't exact/order-independent.
-        if kind == "float":
-            mask = None
-            if validity is not None and validity[0] is not None:
-                null_count += int((~validity[0]).sum())
-                mask = validity[0]
-            fvals = data if mask is None else data[mask]
-        else:
-            values, _lengths = data
-            mask = None
-            if validity is not None:
-                row_valid, elem_valid = validity
-                if row_valid is not None:
-                    null_count += int((~row_valid).sum())
-                if elem_valid is not None:
-                    null_count += int((~elem_valid).sum())
-                    mask = elem_valid
-            fvals = values if mask is None else values[mask]
-        finite = fvals[~np.isnan(fvals)] if len(fvals) else fvals
-        # hist/qcut over the scalar float lane only: float_list
-        # element summaries (embedding dimensions pooled) answer no
-        # range question a consumer asks, and the lane is the bulk of
-        # the bytes — same cost logic as the int_list sketch exclusion
-        hist = _hist_float(finite) if sketch and kind == "float" \
-            else None
-        fq = None
-        if hist is not None:        # co-gated: ±Inf bounds drop both
-            fq = _qcut_vals(finite) if len(finite) else []
-        return {"vmin": None, "vmax": None, "vsum": None,
-                "n_vals": len(fvals), "null_count": null_count,
-                "fmin": float(finite.min()) if len(finite) else None,
-                "fmax": float(finite.max()) if len(finite) else None,
-                "smin": None, "smax": None, "bloom": None,
-                "hll": None, "topk": None, "hist": hist,
-                "qcut": None, "fqcut": fq}
-    elif kind == "string":
-        # string zone map (r5): truncate(16) bounds, Iceberg
-        # semantics — smin a prefix of the true min (lower bound),
-        # smax the true max or its bumped prefix (upper bound, null =
-        # unbounded above). min/max runs vectorized on a zero-copy
-        # rebuild of the Arrow array; UTF-8 byte order equals
-        # codepoint order, so Python/Spark/Arrow comparisons agree.
-        blob, offs = data
-        n = len(offs) - 1
-        row_valid = validity[0] if validity is not None else None
-        if row_valid is not None:
-            null_count += int((~row_valid).sum())
-        arr = pa.Array.from_buffers(
-            pa.large_utf8(), n,
-            [None, pa.py_buffer(np.ascontiguousarray(offs)),
-             pa.py_buffer(blob)])
-        if row_valid is not None:
-            arr = arr.filter(pa.array(row_valid))
-        if len(arr) == 0:
+def _stats_row(entry: dict, stats: dict) -> dict:
+    """One ``column_stats`` element: an encoded entry's identity and
+    size fields plus its :func:`_entry_stats` lanes."""
+    return {**{k: entry[k] for k in _ENTRY_FIELDS}, **stats}
+
+
+def _valid_mask(kind: str, validity):
+    """``(mask, null_count)`` for one :func:`_extract` column: the
+    validity mask over the lane values (row validity for scalar and
+    string kinds, element validity for list kinds; None = no nulls)
+    and null rows + null list elements (SQL aggregate semantics)."""
+    if validity is None:
+        return None, 0
+    row_valid, elem_valid = validity
+    nulls = 0 if row_valid is None else int((~row_valid).sum())
+    if not kind.endswith("_list"):
+        return row_valid, nulls
+    if elem_valid is not None:
+        nulls += int((~elem_valid).sum())
+    return elem_valid, nulls
+
+
+def _int_lanes(kind: str, vals: np.ndarray, bloom: bool,
+               sketch: bool) -> dict:
+    """Int-backed lanes over the non-null values: ``vmin``/``vmax``
+    element bounds; ``vsum``, the exact sum, or None when
+    ``max(|vmin|,|vmax|) * n`` does not provably fit int64 (a consumer
+    that sees a null vsum with values present must decode instead of
+    trusting the manifest); ``n_vals``, how many values the bounds and
+    sum describe (elements for int_list, rows otherwise — the COUNT
+    lane of aggregate pushdown); plus for SCALAR lanes the
+    bloom/hll/topk sidecars over one distinct pass and the hist/qcut
+    selectivity lanes. int_list (token) lanes are excluded from every
+    sidecar: element membership isn't a chunk-prune predicate, the
+    vocabulary would saturate the filter, and the per-chunk unique
+    over millions of token elements would tax the hot encode path
+    (vocab NDV comes from build_global_dict instead)."""
+    scalar = kind != "int_list"
+    if len(vals) == 0:
+        lanes = {"vsum": 0, "n_vals": 0}
+        if sketch and scalar:
             from .bloom import HLL_M
 
-            return {"vmin": None, "vmax": None, "vsum": None,
-                    "n_vals": 0, "null_count": null_count,
-                    "fmin": None, "fmax": None,
-                    "smin": None, "smax": None, "bloom": None,
-                    "hll": [0] * HLL_M if sketch else None,
-                    "topk": [] if sketch else None,
-                    "hist": None, "qcut": None, "fqcut": None}
-        import pyarrow.compute as pc
-
-        mm = pc.min_max(arr)
-        blm = hll = topk = None
-        if bloom or sketch:
-            # string membership + sketch sidecars (r5): bloom words,
-            # HLL registers, AND the top-16 value-counts summary over
-            # ONE distinct pass (value_counts) — same hash family as
-            # the key bloom (hash_key over UTF-8 bytes), so point
-            # probes on non-key string columns prune under hash
-            # layouts where smin/smax span the whole domain,
-            # ndv_encoded estimates distincts, and topk_encoded
-            # answers value-distribution questions from the manifest
-            from .bloom import (bloom_from_hashes, hll_from_hashes,
-                                string_hashes)
-
-            vc = pc.value_counts(arr)
-            u = vc.field("values")
-            uoff = np.frombuffer(u.buffers()[1], np.int64)
-            uoff = uoff[u.offset:u.offset + len(u) + 1]
-            ubuf = u.buffers()[2]
-            ublob = np.frombuffer(ubuf, np.uint8)[uoff[0]:uoff[-1]] \
-                if ubuf is not None else b""
-            h1 = string_hashes(ublob, uoff - uoff[0])
-            if bloom:
-                blm = bloom_from_hashes(h1)
-            if sketch:
-                hll = hll_from_hashes(h1)
-                topk = _topk_str(u, vc.field("counts").to_numpy())
-        return {"vmin": None, "vmax": None, "vsum": None,
-                "n_vals": len(arr), "null_count": null_count,
-                "fmin": None, "fmax": None,
-                "smin": _trunc_lower(mm["min"].as_py()),
-                "smax": _trunc_upper(mm["max"].as_py()),
-                "bloom": blm, "hll": hll, "topk": topk,
-                "hist": None, "qcut": None, "fqcut": None}
-    elif kind == "binary":
-        # binary membership sidecar (r5): bloom over the distinct
-        # byte values — content-digest point lookups (media hashes,
-        # dedup keys stored as raw bytes) prune like the string lane;
-        # no zone map (byte order bounds carry no prune value)
-        blob, offs = data
-        n = len(offs) - 1
-        row_valid = validity[0] if validity is not None else None
-        if row_valid is not None:
-            null_count += int((~row_valid).sum())
-        blm = hll = None
-        if bloom or sketch:
-            from .bloom import (HLL_M, bloom_from_hashes,
-                                hll_from_hashes, string_hashes)
-
-            arr = pa.Array.from_buffers(
-                pa.large_binary(), n,
-                [None, pa.py_buffer(np.ascontiguousarray(offs)),
-                 pa.py_buffer(blob)])
-            if row_valid is not None:
-                arr = arr.filter(pa.array(row_valid))
-            if len(arr):
-                import pyarrow.compute as pc
-
-                u = pc.unique(arr)
-                uoff = np.frombuffer(u.buffers()[1], np.int64)
-                uoff = uoff[u.offset:u.offset + len(u) + 1]
-                ubuf = u.buffers()[2]
-                ublob = np.frombuffer(
-                    ubuf, np.uint8)[uoff[0]:uoff[-1]] \
-                    if ubuf is not None else b""
-                h1 = string_hashes(ublob, uoff - uoff[0])
-                if bloom:
-                    blm = bloom_from_hashes(h1)
-                if sketch:
-                    hll = hll_from_hashes(h1)
-            elif sketch:
-                hll = [0] * HLL_M
-        # n_vals stays None: binary carries no numeric agg lanes, and
-        # consumers (agg_encoded, verify --stats) key off that; no
-        # topk either (bytes don't fit the string lane, and digest
-        # columns are near-unique — a truncated histogram says nothing)
-        return {"vmin": None, "vmax": None, "vsum": None,
-                "n_vals": None, "null_count": null_count,
-                "fmin": None, "fmax": None, "smin": None,
-                "smax": None, "bloom": blm, "hll": hll,
-                "topk": None, "hist": None, "qcut": None,
-                "fqcut": None}
-    else:
-        if validity is not None:
-            for v in validity:
-                if v is not None:
-                    null_count += int((~v).sum())
-        return {"vmin": None, "vmax": None, "vsum": None,
-                "n_vals": None, "null_count": null_count,
-                "fmin": None, "fmax": None, "smin": None,
-                "smax": None, "bloom": None, "hll": None,
-                "topk": None, "hist": None, "qcut": None,
-                "fqcut": None}
-    if len(vals) == 0:
-        from .bloom import HLL_M
-
-        scalar_sketch = sketch and kind != "int_list"
-        return {"vmin": None, "vmax": None, "vsum": 0,
-                "n_vals": 0, "null_count": null_count,
-                "fmin": None, "fmax": None, "smin": None,
-                "smax": None, "bloom": None,
-                "hll": [0] * HLL_M if scalar_sketch else None,
-                "topk": [] if scalar_sketch else None,
-                "hist": [] if scalar_sketch else None,
-                "qcut": [] if scalar_sketch else None,
-                "fqcut": None}
+            lanes.update(hll=[0] * HLL_M, topk=[], hist=[], qcut=[])
+        return lanes
     vmin = int(vals.min())
     vmax = int(vals.max())
-    if max(abs(vmin), abs(vmax)) * len(vals) < (1 << 62):
-        vsum = int(vals.sum(dtype=np.int64))
-    else:
-        vsum = None
-    blm = hll = topk = None
-    if (bloom or sketch) and kind != "int_list":
-        # scalar int lane: membership + sketch sidecars over ONE
-        # distinct pass (operators/bloom.py) — int_list lanes (token
-        # arrays) are excluded: element membership isn't a
-        # chunk-prune predicate, the vocabulary would saturate the
-        # filter, and the per-chunk unique over millions of token
-        # elements would tax the hot encode path (vocab NDV comes
-        # from build_global_dict instead)
+    lanes = {"vmin": vmin, "vmax": vmax, "n_vals": len(vals),
+             "vsum": int(vals.sum(dtype=np.int64))
+             if max(abs(vmin), abs(vmax)) * len(vals) < (1 << 62)
+             else None}
+    if scalar and (bloom or sketch):
         from .bloom import (bloom_from_hashes, hll_from_hashes,
                             int_hashes)
 
@@ -815,19 +630,140 @@ def _entry_stats(kind: str, data, validity,
                               return_counts=True)
         h1 = int_hashes(u)
         if bloom:
-            blm = bloom_from_hashes(h1)
+            lanes["bloom"] = bloom_from_hashes(h1)
         if sketch:
-            hll = hll_from_hashes(h1)
-            topk = _topk_int(u, counts)
-    # hist shares the sketch gate and the scalar-int-only rule
-    # (int_list token lanes stay cost-free on the hot encode path)
-    hist = _hist_int(vals) if sketch and kind != "int_list" else None
-    qcut = _qcut_vals(vals) if hist is not None else None
-    return {"vmin": vmin, "vmax": vmax, "vsum": vsum,
-            "n_vals": len(vals), "null_count": null_count,
-            "fmin": None, "fmax": None, "smin": None, "smax": None,
-            "bloom": blm, "hll": hll, "topk": topk, "hist": hist,
-            "qcut": qcut, "fqcut": None}
+            lanes["hll"] = hll_from_hashes(h1)
+            lanes["topk"] = _topk_int(u, counts)
+    if scalar and sketch:
+        lanes["hist"] = _hist_int(vals)
+        lanes["qcut"] = _qcut_vals(vals)
+    return lanes
+
+
+def _float_lanes(kind: str, fvals: np.ndarray, sketch: bool) -> dict:
+    """Typed double zone map over the non-null, non-NaN values (a
+    finite-bound range predicate never matches NaN in Spark, so
+    NaN-free bounds prune exactly; all-NaN/all-null chunks keep null
+    bounds). No vsum lane: float addition isn't exact or
+    order-independent. hist/fqcut cover the scalar float lane only —
+    float_list element summaries (embedding dimensions pooled) answer
+    no range question a consumer asks, and that lane is the bulk of
+    the bytes; ±Inf bounds drop both (co-gated)."""
+    finite = fvals[~np.isnan(fvals)] if len(fvals) else fvals
+    lanes = {"n_vals": len(fvals)}
+    if len(finite):
+        lanes["fmin"] = float(finite.min())
+        lanes["fmax"] = float(finite.max())
+    hist = _hist_float(finite) if sketch and kind == "float" else None
+    if hist is not None:
+        lanes["hist"] = hist
+        lanes["fqcut"] = _qcut_vals(finite) if len(finite) else []
+    return lanes
+
+
+def _bytes_lanes(kind: str, data, mask, bloom: bool,
+                 sketch: bool) -> dict:
+    """String and binary lanes over one distinct pass
+    (``value_counts``) of the non-null values, hashed with the key
+    bloom's family (``hash_key`` over the raw bytes / UTF-8), so point
+    probes prune under hash layouts where bounds span the whole
+    domain: ``bloom`` words and ``hll`` registers for both kinds.
+    Strings add ``n_vals``, the top-16 ``topk`` summary, and the
+    Iceberg-style truncate(16) zone map — ``smin`` a prefix of the
+    true min (lower bound), ``smax`` the true max or its bumped prefix
+    (upper bound, null = unbounded above); UTF-8 byte order equals
+    codepoint order, so Python/Spark/Arrow comparisons agree. Binary
+    keeps ``n_vals`` null (no numeric agg lanes — agg_encoded and
+    verify --stats key off that), no zone map (byte-order bounds
+    carry no prune value) and no topk (bytes don't fit the string
+    lane, and digest columns are near-unique — a truncated histogram
+    says nothing)."""
+    import pyarrow.compute as pc
+
+    is_str = kind == "string"
+    blob, offs = data
+    arr = pa.Array.from_buffers(
+        pa.large_utf8() if is_str else pa.large_binary(), len(offs) - 1,
+        [None, pa.py_buffer(np.ascontiguousarray(offs)),
+         pa.py_buffer(blob)])
+    if mask is not None:
+        arr = arr.filter(pa.array(mask))
+    lanes = {}
+    if is_str:
+        lanes["n_vals"] = len(arr)
+    if len(arr) == 0:
+        if sketch:
+            from .bloom import HLL_M
+
+            lanes["hll"] = [0] * HLL_M
+            if is_str:
+                lanes["topk"] = []
+        return lanes
+    if is_str:
+        mm = pc.min_max(arr)
+        lanes["smin"] = _trunc_lower(mm["min"].as_py())
+        lanes["smax"] = _trunc_upper(mm["max"].as_py())
+    if bloom or sketch:
+        from .bloom import (bloom_from_hashes, hll_from_hashes,
+                            string_hashes)
+
+        vc = pc.value_counts(arr)
+        u = vc.field("values")
+        uoff = np.frombuffer(u.buffers()[1], np.int64)
+        uoff = uoff[u.offset:u.offset + len(u) + 1]
+        ubuf = u.buffers()[2]
+        ublob = np.frombuffer(ubuf, np.uint8)[uoff[0]:uoff[-1]] \
+            if ubuf is not None else b""
+        h1 = string_hashes(ublob, uoff - uoff[0])
+        if bloom:
+            lanes["bloom"] = bloom_from_hashes(h1)
+        if sketch:
+            lanes["hll"] = hll_from_hashes(h1)
+            if is_str:
+                lanes["topk"] = _topk_str(
+                    u, vc.field("counts").to_numpy())
+    return lanes
+
+
+def _entry_stats(kind: str, data, validity,
+                 bloom: bool = True, sketch: bool | None = None) -> dict:
+    """Per-chunk ``column_stats`` lanes over the NON-NULL values of one
+    column — every lane of the manifest schema, null where the kind's
+    builder (:func:`_int_lanes`, :func:`_float_lanes`,
+    :func:`_bytes_lanes`) sets nothing ("no proof": consumers never
+    prune on it). ``null_count`` (null rows + null list elements)
+    covers every kind. Int-backed values are in the codec-lane unit:
+    days for date, epoch micros for timestamp, unscaled integer for
+    decimal(p,s).
+
+    These feed :func:`~br_archive_spark.operators.decode.scan_where`
+    (chunk pruning — the reference's skip-without-decode,
+    src/io/lib_bra_io_file_ctx.c:596-602, generalized to every
+    column) and the manifest-only answers (``agg_encoded``,
+    ``ndv_encoded``, ``topk_encoded``, ``hist_encoded``).
+    ``data``/``validity`` are :func:`_extract` output — null slots in
+    ``data`` are zero-filled, so masking by validity is REQUIRED before
+    any stat (a zero-filled null must not become the chunk min).
+    """
+    # ``bloom`` gates the membership sidecar (the key zone-map column
+    # passes False — its filter is key_bloom); ``sketch`` gates the
+    # hll/topk/hist/qcut lanes independently, defaulting to ``bloom``
+    # so the key column still gets a sketch (there is no key-level
+    # twin)
+    sketch = bloom if sketch is None else sketch
+    mask, null_count = _valid_mask(kind, validity)
+    if kind in ("string", "binary"):
+        lanes = _bytes_lanes(kind, data, mask, bloom, sketch)
+    else:
+        vals = data[0] if kind.endswith("_list") else data
+        if mask is not None:
+            vals = vals[mask]
+        if _int_kind(kind):
+            lanes = _int_lanes(kind, vals, bloom, sketch)
+        else:
+            lanes = _float_lanes(kind, vals, sketch)
+    return {**dict.fromkeys(_STATS_LANES), **lanes,
+            "null_count": null_count}
 
 
 def _key_bounds(tbl: pa.Table, specs: list[tuple[str, str]],
@@ -924,11 +860,8 @@ def _make_encode_fn(specs: list[tuple[str, str]], target_values: int,
                 "checksum": checksum,
                 "checksum_algo": CHECKSUM_ALGO,
                 "columns": entries,
-                "column_stats": [
-                    {**{k: e[k] for k in ("name", "kind", "codec",
-                                          "orig_bytes", "enc_bytes")},
-                     **st}
-                    for e, st in zip(entries, stats)],
+                "column_stats": [_stats_row(e, st)
+                                 for e, st in zip(entries, stats)],
                 "key_col": key_bounds[0],
                 "key_min": key_bounds[1],
                 "key_max": key_bounds[2],

@@ -302,7 +302,7 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
 
     from .chunk import encode_column
     from .decode import _arrow_type, manifest_specs
-    from .encode import _entry_stats, _extract
+    from .encode import _entry_stats, _extract, _stats_row
 
     specs = specs or manifest_specs(encoded)
     known = dict(specs)
@@ -386,10 +386,8 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
                 data, validity = _extract(tbl, name, kind)
                 e = encode_column(name, kind, data, validity=validity)
                 entries.append(e)
-                s = {k: e[k] for k in ("name", "kind", "codec",
-                                       "orig_bytes", "enc_bytes")}
-                s.update(_entry_stats(kind, data, validity))
-                stats_rows.append(s)
+                stats_rows.append(
+                    _stats_row(e, _entry_stats(kind, data, validity)))
 
             # interleave: row i = old entries, then its new entry
             total_old = int(offs[-1])
@@ -621,7 +619,8 @@ def _rewrite_masked(row: dict, mask, known: dict[str, str], key: str,
     from .bloom import build_bloom
     from .chunk import decode_column, encode_column
     from .decode import _rebuild
-    from .encode import _entry_stats, _extract, _key_bounds, _n_values
+    from .encode import (_entry_stats, _extract, _key_bounds,
+                         _n_values, _stats_row)
 
     specs = _chunk_specs(row, known)
     entries = {e["name"]: e for e in row["columns"]}
@@ -640,11 +639,9 @@ def _rewrite_masked(row: dict, mask, known: dict[str, str], key: str,
         new_entries.append(e)
         # mirror encode: the key zone-map column's membership filter
         # is key_bloom (refreshed below), never a column bloom
-        new_stats.append(
-            {**{k: e[k] for k in ("name", "kind", "codec",
-                                  "orig_bytes", "enc_bytes")},
-             **_entry_stats(kind, data, validity,
-                            bloom=name != kb[0], sketch=True)})
+        new_stats.append(_stats_row(
+            e, _entry_stats(kind, data, validity,
+                            bloom=name != kb[0], sketch=True)))
     row["columns"] = new_entries
     if row.get("column_stats") is not None:
         row["column_stats"] = new_stats
@@ -880,8 +877,7 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
     import pyarrow.compute as pc  # noqa: F401  (parity with delete_rows)
 
     from .chunk import decode_column
-    from .decode import (_fstats_disjoint, _has_float_stats,
-                         _has_numeric_stats, _stats_disjoint,
+    from .decode import (_fstats_disjoint, _has_lane, _stats_disjoint,
                          manifest_specs)
     from .encode import _float_kind, _int_kind
 
@@ -898,7 +894,7 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
         if math.isnan(lo) or math.isnan(hi):
             raise ValueError("delete_where: NaN bound — a NaN band "
                              "matches nothing by definition")
-        have_stats = _has_float_stats(encoded)
+        have_stats = _has_lane(encoded, "fmin")
         disjoint = _fstats_disjoint(column, lo, hi)
     elif _int_kind(kind) and kind != "int_list":
         import math
@@ -908,7 +904,7 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
         # zero, which WIDENS a negative fractional bound (hi=-3.7 ->
         # -3 would delete value -3 the caller asked to keep)
         lo, hi = math.ceil(lo), math.floor(hi)
-        have_stats = _has_numeric_stats(encoded)
+        have_stats = _has_lane(encoded, "vmin")
         disjoint = _stats_disjoint(column, lo, hi)
     else:
         hint = (" (list kinds have no scalar row value)"

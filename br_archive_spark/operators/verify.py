@@ -183,9 +183,9 @@ def verify_stats(encoded: DataFrame,
     # so for fixed data this is a fixed — not flaky — check). Columns
     # without a sketch (float/int_list kinds, bloom=False encodes,
     # pre-r5 manifests) are skipped, never guessed at.
-    from .decode import _has_hll, ndv_encoded
+    from .decode import _has_lane, ndv_encoded
 
-    if _has_hll(encoded):
+    if _has_lane(encoded, "hll"):
         for name, _kind in specs:
             try:
                 est = ndv_encoded(encoded, name)
@@ -203,9 +203,9 @@ def verify_stats(encoded: DataFrame,
     # must EQUAL the decoded GROUP BY's top values; at slack > 0
     # every reported count must be a lower bound within slack of the
     # true count (truncation only ever drops occurrences).
-    from .decode import _has_topk, _int_view, topk_encoded
+    from .decode import topk_encoded
 
-    if _has_topk(encoded):
+    if _has_lane(encoded, "topk"):
         for name, kind in specs:
             try:
                 top, slack = topk_encoded(encoded, name, k=5)
@@ -234,13 +234,14 @@ def verify_stats(encoded: DataFrame,
     # RIGOROUS bracket, so it is directly checkable — the full-domain
     # band must come back EXACT (every bucket fully contained ⇒
     # cmin == cmax == decoded non-null count) and an interior
-    # half-domain band must bracket the decoded count. Columns
-    # without the lane (string/binary/list kinds, bloom=False
-    # encodes, ±Inf float chunks, pre-r5 manifests) are skipped —
-    # hist_encoded refuses for them by design.
-    from .decode import _has_hist, hist_encoded
+    # half-domain band must bracket the decoded count. Kinds without
+    # the lane (string/binary/list) and pre-r5 manifests are refused
+    # by design and skipped silently; a histogrammable column whose
+    # chunks lack a histogram (bloom=False increments, ±Inf float
+    # chunks) is a coverage gap and is reported as skipped.
+    from .decode import _stats_entry, hist_encoded
 
-    if _has_hist(encoded):
+    if _has_lane(encoded, "hist"):
         for name, kind in specs:
             if kind == "float":
                 lane = F.when(~F.isnan(F.col(name)), F.col(name))
@@ -253,19 +254,24 @@ def verify_stats(encoded: DataFrame,
                           F.count(lane).alias("nn")).collect()[0]
             if row["lo"] is None:
                 continue                 # no values: nothing to audit
+            entry = out.setdefault(name, {"ok": True})
+            st = _stats_entry(name)
+            gaps = encoded.where(
+                st["hist"].isNull()
+                & (F.coalesce(st["n_vals"], F.lit(1)) > 0)).count()
+            if gaps:
+                entry["hist"] = {
+                    "skipped": f"{gaps} chunks without histogram"}
+                continue
             lo, hi, nn = row["lo"], row["hi"], int(row["nn"])
             mid = (lo + (hi - lo) / 2 if kind == "float"
                    else lo + (hi - lo) // 2)
-            try:
-                full = hist_encoded(encoded, name, lo, hi)
-                part = hist_encoded(encoded, name, lo, mid)
-            except ValueError:
-                continue                 # lane absent: refused, skip
+            full = hist_encoded(encoded, name, lo, hi)
+            part = hist_encoded(encoded, name, lo, mid)
             t_part = dec.where((lane >= F.lit(lo))
                                & (lane <= F.lit(mid))).count()
             h_ok = (full == (nn, nn)
                     and part[0] <= t_part <= part[1])
-            entry = out.setdefault(name, {"ok": True})
             entry["hist"] = {"full_domain": list(full),
                              "decoded_n": nn,
                              "band": list(part),
@@ -283,9 +289,9 @@ def _verify_string_lanes(encoded, dec, name: str):
     Count lanes stay exact."""
     from pyspark.sql import functions as F
 
-    from .decode import _has_string_stats, agg_encoded
+    from .decode import _has_lane, agg_encoded
 
-    if not _has_string_stats(encoded):
+    if not _has_lane(encoded, "smin"):
         return {"ok": True, "skipped": "manifest predates string "
                 "stats (no smin/smax lanes)"}, True
     truth = dec.agg(
@@ -316,9 +322,9 @@ def _verify_float_lanes(encoded, dec, name: str, kind: str):
     bounds; no vsum lane exists for floats (sums always decode)."""
     from pyspark.sql import functions as F
 
-    from .decode import _has_float_stats, agg_encoded
+    from .decode import _has_lane, agg_encoded
 
-    if not _has_float_stats(encoded):
+    if not _has_lane(encoded, "fmin"):
         return {"ok": True, "skipped": "manifest predates float "
                 "stats (no fmin/fmax lanes)"}, True
     extra_nulls = 0

@@ -203,7 +203,7 @@ def test_lookup_values_prunes_hash_layout_and_matches(spark):
     the probed rows, and absent probes inside the range return 0 rows
     after dropping ~every chunk."""
     from br_archive_spark.operators import encode_table, lookup_values
-    from br_archive_spark.operators.decode import (_int_bloom_keep,
+    from br_archive_spark.operators.decode import (_bloom_keep,
                                                    _stats_disjoint)
 
     docs = _int_docs(spark)
@@ -215,7 +215,7 @@ def test_lookup_values_prunes_hash_layout_and_matches(spark):
         ~_stats_disjoint("okey", min(present), max(present))).count()
     assert zone_kept == total            # zone map blind under hash
     bloom_kept = enc.where(
-        _int_bloom_keep("okey", present)).count()
+        _bloom_keep("okey", present, "int")).count()
     assert bloom_kept <= len(present) + 1, (bloom_kept, total)
 
     got = lookup_values(enc, "okey", present, specs=INT_SPECS,
@@ -225,7 +225,7 @@ def test_lookup_values_prunes_hash_layout_and_matches(spark):
         sorted(map(tuple, exp.collect()))
 
     absent = [4, 7 * 1000 + 4, 7 * 5999 + 2]   # in-range, not ≡3 mod 7
-    assert enc.where(_int_bloom_keep("okey", absent)).count() <= 1
+    assert enc.where(_bloom_keep("okey", absent, "int")).count() <= 1
     assert lookup_values(enc, "okey", absent, specs=INT_SPECS,
                          with_n_tok=False).count() == 0
 
@@ -283,8 +283,8 @@ def test_lookup_values_string_column_bloom(spark):
     hash-random), so the string bloom must do the pruning; absent
     probes drop every chunk; values equal the plain isin."""
     from br_archive_spark.operators import encode_table, lookup_values
-    from br_archive_spark.operators.decode import (_sstats_disjoint,
-                                                   _str_bloom_keep)
+    from br_archive_spark.operators.decode import (_bloom_keep,
+                                                   _sstats_disjoint)
 
     docs = spark.range(6000).select(
         F.col("id").cast("string").alias("doc_id"),
@@ -300,7 +300,7 @@ def test_lookup_values_string_column_bloom(spark):
         ~_sstats_disjoint("name", min(present), max(present))).count()
     assert zone_kept == total            # string zone map blind here
     bloom_kept = enc.where(
-        _str_bloom_keep("name", present)).count()
+        _bloom_keep("name", present, "string")).count()
     assert bloom_kept <= len(present) + 1, (bloom_kept, total)
 
     got = lookup_values(enc, "name", present, specs=specs,
@@ -310,7 +310,7 @@ def test_lookup_values_string_column_bloom(spark):
         sorted(map(tuple, exp.collect()))
 
     absent = ["Name#00000001", "zzz", ""]
-    assert enc.where(_str_bloom_keep("name", absent)).count() <= 1
+    assert enc.where(_bloom_keep("name", absent, "string")).count() <= 1
     assert lookup_values(enc, "name", absent, specs=specs,
                          with_n_tok=False).count() == 0
     # bloom=False: string lane null, lookups still exact via residual
@@ -328,7 +328,7 @@ def test_lookup_values_binary_column_bloom(spark):
     import hashlib
 
     from br_archive_spark.operators import encode_table, lookup_values
-    from br_archive_spark.operators.decode import _str_bloom_keep
+    from br_archive_spark.operators.decode import _bloom_keep
 
     docs = spark.range(3000).select(
         F.col("id").cast("string").alias("doc_id"),
@@ -339,12 +339,12 @@ def test_lookup_values_binary_column_bloom(spark):
                        target_values=256).cache()
     present = [hashlib.sha256(str(i).encode()).digest()
                for i in (17, 2345)]
-    assert enc.where(_str_bloom_keep("digest", present)).count() <= 3
+    assert enc.where(_bloom_keep("digest", present, "binary")).count() <= 3
     got = lookup_values(enc, "digest", present, specs=specs,
                         with_n_tok=False)
     assert sorted(r["doc_id"] for r in got.collect()) == ["17", "2345"]
     absent = [hashlib.sha256(b"nope").digest()]
-    assert enc.where(_str_bloom_keep("digest", absent)).count() <= 1
+    assert enc.where(_bloom_keep("digest", absent, "binary")).count() <= 1
     assert lookup_values(enc, "digest", absent, specs=specs,
                          with_n_tok=False).count() == 0
     # nulls in the column never break the bloom build or the residual

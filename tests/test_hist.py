@@ -422,3 +422,32 @@ def test_hist_only_manifest_still_answers(spark):
     assert cmin <= truth <= cmax
     assert hist_encoded(hist_only, "v", -(1 << 63), (1 << 63) - 1) \
         == (6000, 6000)
+
+
+def test_verify_stats_reports_hist_coverage_gap(spark):
+    """A bloom=True manifest unioned with a bloom=False increment:
+    the histogrammable column has chunks without a histogram, so the
+    hist audit reports the gap on the column instead of skipping it
+    silently; the other lanes still verify green."""
+    from br_archive_spark.operators.verify import verify_stats
+
+    def part(lo, n, bloom):
+        df = spark.range(lo, lo + n).select(
+            F.col("id").alias("okey"),
+            F.col("id").cast("string").alias("doc_id"),
+            (F.col("id") * 13 % 500).alias("v"))
+        return encode_table(df, specs=specs, mode="scan", num_parts=2,
+                            target_values=1500, bloom=bloom)
+
+    specs = [("okey", "int"), ("doc_id", "string"), ("v", "int")]
+    full, bare = part(0, 3000, True).cache(), part(3000, 3000, False)
+    bare = bare.cache()
+    try:
+        res = verify_stats(full.unionByName(bare), specs=specs)
+        gap = f"{bare.count()} chunks without histogram"
+        assert res["columns"]["v"]["hist"] == {"skipped": gap}, res
+        assert res["columns"]["okey"]["hist"] == {"skipped": gap}, res
+        assert res["ok"], res
+    finally:
+        full.unpersist()
+        bare.unpersist()

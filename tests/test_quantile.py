@@ -167,3 +167,25 @@ def test_quantile_cli_agg_flag(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     qb = out["quantile"]
     assert qb["value_min"] <= 2500 <= qb["value_max"]
+
+
+def test_quantile_float_full_double_domain(spark):
+    """A float column spanning [-DBL_MAX, DBL_MAX]: the full-domain
+    width overflows to inf, so the grid is built in half-domain
+    arithmetic and every refinement only tightens — the bracket stays
+    finite and contains the exact k-th smallest."""
+    big = 1.7976931348623157e308
+    vals = [-big, -1.0, 0.0, 1.0, 2.0, 3.0, big] * 50
+    df = spark.createDataFrame(
+        [(str(i), v) for i, v in enumerate(vals)], "doc_id string, x double")
+    specs = [("doc_id", "string"), ("x", "float")]
+    enc = encode_table(df, specs=specs, mode="scan", num_parts=2,
+                       target_values=200).cache()
+    try:
+        for q in (0.3, 0.5):
+            lo, hi = quantile_encoded(enc, "x", q)
+            exact = _exact_kth(df, "x", q, len(vals))
+            assert math.isfinite(lo) and math.isfinite(hi), (q, lo, hi)
+            assert lo <= exact <= hi, (q, lo, exact, hi)
+    finally:
+        enc.unpersist()

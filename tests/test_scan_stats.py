@@ -343,7 +343,7 @@ def test_scan_where_isin_bands(spark):
     lane (string/int/binary), exact residual. On a hash layout only
     the blooms can prune; results must equal the plain isin filter."""
     from br_archive_spark.operators import scan_where
-    from br_archive_spark.operators.decode import _str_bloom_keep
+    from br_archive_spark.operators.decode import _bloom_keep
 
     # seg runs with the cluster key (name = zero-padded id), so each
     # chunk holds ~2 of the 10 segs and the seg column bloom — NOT
@@ -361,7 +361,7 @@ def test_scan_where_isin_bands(spark):
     try:
         total = enc.count()
         kept = enc.where(
-            _str_bloom_keep("seg", ["seg3", "seg7"])).count()
+            _bloom_keep("seg", ["seg3", "seg7"], "string")).count()
         assert kept < total, (kept, total)   # membership prunes
         got = sorted(r["okey"] for r in scan_where(
             enc, [], specs=specs, with_n_tok=False,
@@ -1058,8 +1058,7 @@ def test_scan_where_equality_bands_use_blooms(spark):
     import pyspark.sql.functions as F
 
     from br_archive_spark.operators import encode_table, scan_where
-    from br_archive_spark.operators.decode import (_int_bloom_keep,
-                                                   _str_bloom_keep,
+    from br_archive_spark.operators.decode import (_bloom_keep,
                                                    _sstats_disjoint,
                                                    _stats_disjoint)
 
@@ -1076,11 +1075,11 @@ def test_scan_where_equality_bands_use_blooms(spark):
 
     # blooms prune strictly harder than the zone maps on this layout
     zi = enc.where(~_stats_disjoint("okey", 24, 24)).count()
-    bi = enc.where(_int_bloom_keep("okey", [24])).count()
+    bi = enc.where(_bloom_keep("okey", [24], "int")).count()
     assert bi <= 2 and bi < zi <= total
     zs = enc.where(
         ~_sstats_disjoint("name", "N#00033", "N#00033")).count()
-    bs = enc.where(_str_bloom_keep("name", ["N#00033"])).count()
+    bs = enc.where(_bloom_keep("name", ["N#00033"], "string")).count()
     assert bs <= 2 and bs < zs <= total
 
     got = scan_where(enc, [("okey", 24, 24)], specs=specs,
