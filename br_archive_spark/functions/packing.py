@@ -12,6 +12,7 @@ actually consumes.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -96,9 +97,10 @@ def pack_sequences(df: DataFrame, max_len: int,
     for pid in sorted(totals):
         offsets[pid] = acc
         acc += totals[pid]
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()],
-        "_pid int, _off long")
+    # Arrow-built: a LocalTableScan, not a Python-list ExistingRDD
+    off_df = spark.createDataFrame(pa.table({
+        "_pid": pa.array(list(offsets), pa.int32()),
+        "_off": pa.array(list(offsets.values()), pa.int64())}))
 
     g = (local.join(F.broadcast(off_df), "_pid")
          .withColumn("_before", F.col("_off") + F.col("_cum")
@@ -236,8 +238,10 @@ def sample_by_tokens(df: DataFrame, budgets: dict[str, int],
         for b, t in sorted(bs):
             rows.append((s, b, acc))
             acc += t
-    off_df = spark.createDataFrame(
-        rows, f"{strata_col} string, _b int, _off long")
+    off_df = spark.createDataFrame(pa.table({
+        strata_col: pa.array([r[0] for r in rows], pa.string()),
+        "_b": pa.array([r[1] for r in rows], pa.int32()),
+        "_off": pa.array([r[2] for r in rows], pa.int64())}))
 
     pairs = []
     for s in strata:

@@ -1030,18 +1030,20 @@ def encode_files(spark, input_path,
     Units are then packed into byte-budget BUCKETS of
     ``target_unit_bytes`` (contiguous by (path, rg) via a running-sum
     window over the tiny unit table) and one task processes one bucket.
-    A Python task costs ~0.3 s of CPU even when its work is trivial.
-    Most of it is pyspark's per-task ``setup_spark_files``: its
-    ``importlib.invalidate_caches()`` makes every zipimporter the
-    worker holds re-read the directory of ``pyspark.zip`` (Python
-    3.11's ``zipimporter.invalidate_caches`` is eager). So Python
-    tasks must be few and large, their work seconds-scale: small files
-    batch together, while a 128 MB row group is a healthy task on its
-    own; and the bucket table itself is built from Arrow
-    (``fsutil._bucket_frame``), so scheduling it runs no Python task
-    at all. Chunk ids stay ``filecrc:rowgroup:index`` — a pure
-    function of the input layout, independent of bucketing, so resumes
-    reproduce identical ids.
+    A trivial Python task costs ~0.03–0.04 s of CPU in pyspark's set-up
+    (4 cores, Python 3.11). It cost ~0.2–0.3 s while the workers
+    imported pyspark from ``SPARK_HOME``'s archives: each task's
+    ``setup_spark_files`` → ``importlib.invalidate_caches()`` made
+    every zipimporter re-read its archive's directory. ``get_spark``
+    now avoids that at session start by launching the workers through
+    ``br_archive_spark._daemon`` where it can (local masters); on other
+    sessions the old cost stands. So Python tasks stay few and large,
+    their work seconds-scale: small files batch together, while a
+    128 MB row group is a healthy task on its own; and the bucket
+    table itself is built from Arrow (``fsutil._bucket_frame``), so
+    scheduling it runs no Python task at all. Chunk ids stay
+    ``filecrc:rowgroup:index`` — a pure function of the input layout,
+    independent of bucketing, so resumes reproduce identical ids.
 
     ``skip_files``: files already present in the output manifest
     (lineage resume) — pruned before any footer is read.
@@ -1207,9 +1209,9 @@ def encode_files(spark, input_path,
 
     from pyspark.sql import Window
 
-    # a footer read is ~1 ms but a Python task costs ~0.3 s of pyspark
-    # set-up (see the docstring) — batch many footers per task; 2 waves
-    # across the cluster is plenty
+    # a footer read is ~1 ms but a Python task costs ~0.04 s of pyspark
+    # set-up, ~0.2–0.3 s on the stock daemon (see the docstring) —
+    # batch many footers per task; 2 waves across the cluster is plenty
     enum_parallelism = max(1, min(
         len(paths), spark.sparkContext.defaultParallelism * 2))
     paths_df = spark.createDataFrame(

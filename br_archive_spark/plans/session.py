@@ -10,10 +10,43 @@ fraction of a chunk per batch without blowing executor memory at
 from __future__ import annotations
 
 import os
+import re
+import site
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark"]
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+
+
+def _daemon_conf(master: str | None) -> dict:
+    """Start the Python workers through ``br_archive_spark._daemon``
+    (pyspark's daemon on the installed pyspark, not on SPARK_HOME's
+    archives) where the daemon can import it at launch: a ``local``
+    master, whose daemon inherits the JVM's cwd and environment, and
+    this package first found, on the daemon's path, in that cwd, a
+    ``PYTHONPATH`` entry or site-packages. Anywhere else the stock
+    daemon stays: one that failed to start would break every Python
+    UDF of the session."""
+    if not master or not re.fullmatch(r"local(\[.*\])?", master):
+        return {}
+    jvm = SparkContext._jvm
+    if jvm is None:  # the JVM starts from the driver's cwd and env
+        cwd, pythonpath = os.getcwd(), os.environ.get("PYTHONPATH")
+    else:  # a JVM kept from an earlier session keeps its own
+        system = getattr(jvm, "java.lang.System")
+        cwd = system.getProperty("user.dir")
+        pythonpath = system.getenv("PYTHONPATH")
+    search = [cwd, *(pythonpath or "").split(os.pathsep),
+              *site.getsitepackages()]
+    first = next((d for d in search if d and os.path.isfile(
+        os.path.join(d, "br_archive_spark", "__init__.py"))), None)
+    if first and os.path.realpath(first) == os.path.realpath(_PACKAGE_PARENT):
+        return {"spark.python.daemon.module": "br_archive_spark._daemon"}
+    return {}
 
 
 def get_spark(master: str | None = None,
@@ -35,6 +68,7 @@ def get_spark(master: str | None = None,
         "spark.sql.parquet.compression.codec": "zstd",
         "spark.sql.session.timeZone": "UTC",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        **_daemon_conf(master),
     }
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

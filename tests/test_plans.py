@@ -433,3 +433,35 @@ def test_bulk_paths_schedule_from_a_local_table(spark, tmp_path):
                       if re.search(r"Python|Pandas|Arrow", op)}
         want = set() if label.endswith("empty input") else {"MapInArrow"}
         assert python_ops == want, (label, python_ops)
+
+
+def test_packing_offsets_are_local_tables(spark):
+    """``pack_sequences`` and ``sample_by_tokens`` broadcast their
+    per-bucket start offsets from driver-built Arrow tables: a
+    ``LocalTableScan``, never a Python-list ``Scan ExistingRDD`` (a
+    ``parallelize`` + ``map`` stage on a second pool of Python
+    workers). Both stay free of Python operators."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from br_archive_spark.functions.packing import (pack_sequences,
+                                                    sample_by_tokens)
+
+    docs = spark.range(0, 60, 1, 3).select(
+        F.format_string("d%03d", "id").alias("doc_id"),
+        F.sequence(F.lit(1), (F.col("id") % 9 + 1).cast("int"))
+        .alias("tokens"),
+        (F.col("id") % 9 + 1).cast("int").alias("n_tok"),
+        F.when(F.col("id") % 2 == 0, "web").otherwise("code")
+        .alias("source"))
+    plans = {
+        "pack_sequences": pack_sequences(docs, 16, num_parts=3),
+        "sample_by_tokens": sample_by_tokens(
+            docs, {"web": 40, "code": 30}, num_buckets=4),
+    }
+    for label, df in plans.items():
+        plan = _plan(df)
+        assert "LocalTableScan" in plan, label
+        assert "ExistingRDD" not in plan, label
+        assert not re.search(r"Python|Pandas|Arrow", plan), label
