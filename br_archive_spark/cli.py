@@ -95,12 +95,13 @@ def cmd_decode(args) -> int:
             # match spark-mode overwrite semantics: a previous decode's
             # shards (possibly from a different manifest) must not stay
             # mixed into the new dataset. Delete ONLY files this tool
-            # wrote (dec-*.parquet + tmp leftovers) — never rmtree a
-            # directory the user may have pointed at by mistake
-            # (ADVICE r2 #3); refuse if unrecognized files are present.
+            # wrote (dec-*.parquet and the .dec-*.tmp-* staging
+            # leftovers of a crashed task) — never rmtree a directory
+            # the user may have pointed at by mistake (ADVICE r2 #3);
+            # refuse if unrecognized files are present.
             entries = os.listdir(args.output)
             ours = [f for f in entries
-                    if f.startswith("dec-") and ".parquet" in f]
+                    if f.startswith(("dec-", ".dec-")) and ".parquet" in f]
             foreign = [f for f in entries if f not in ours]
             if foreign:
                 print(json.dumps({

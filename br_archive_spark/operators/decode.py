@@ -29,9 +29,9 @@ from pyspark.sql import functions as F
 
 from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
 from .chunk import decode_column
-from .fsutil import (_bucket_frame, _empty_frame, ensure_dir, file_size,
-                     join_path, path_tag, read_parquet,
-                     write_parquet_atomic)
+from .fsutil import (_empty_frame, bucket_target, byte_buckets, ensure_dir,
+                     file_size, join_path, list_files, path_tag,
+                     read_parquet, run_buckets, write_parquet_atomic)
 
 __all__ = ["decode_table", "decode_files", "lookup_rows",
            "lookup_range", "ChecksumError"]
@@ -1770,74 +1770,55 @@ def decode_files(spark, manifest_path,
 
     specs = specs or TOKEN_SPECS
 
-    paths = sorted(spark.read.parquet(manifest_path).inputFiles()) \
+    paths = list_files(manifest_path, filesystem) \
         if isinstance(manifest_path, str) else sorted(manifest_path)
     if output_dir is not None:
         ensure_dir(output_dir, filesystem)
+    out_schema = "shard string, n_rows long, n_values long" \
+        if output_dir is not None \
+        else _decoded_spark_schema(specs, with_n_tok)
     if not paths:
-        schema = "shard string, n_rows long, n_values long" \
-            if output_dir is not None \
-            else _decoded_spark_schema(specs, with_n_tok)
-        return _empty_frame(spark, schema)
+        return _empty_frame(spark, out_schema)
 
     sizes = [file_size(p, filesystem) for p in paths]
-    total = sum(sizes)
-    if target_unit_bytes is not None:
-        target = max(int(target_unit_bytes), 1)
-    else:
-        par = max(spark.sparkContext.defaultParallelism, 1)
-        target = int(min(64 << 20, max(4 << 20, total // (par * 6) + 1)))
-    buckets: dict[int, list] = {}
-    cum = 0
-    for p, nbytes in zip(paths, sizes):
-        buckets.setdefault(cum // target, []).append(p)
-        cum += nbytes
-    rows = [v for _, v in sorted(buckets.items())]
+    target = bucket_target(spark, target_unit_bytes, sum(sizes),
+                           4 << 20, 64 << 20)
 
     fn = _make_decode_fn(specs, with_n_tok, verify_checksums,
                          global_dict=global_dict)
     man_cols = ["chunk_id", "n_rows", "n_values", "checksum",
                 "checksum_algo", "columns"]
 
-    def decode_bucket(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for shard_paths in batch.column("paths").to_pylist():
-                for mp_ in shard_paths:
-                    tbl = read_parquet(mp_, filesystem, columns=man_cols,
-                                       use_threads=False)
-                    dec = fn(iter(
-                        tbl.drop_columns(["n_values"]).to_batches()))
-                    if output_dir is None:
-                        # stream: a 128 MB compacted shard never sits
-                        # decoded in memory whole
-                        yield from dec
-                        continue
-                    dec_batches = list(dec)
-                    n_values = sum(tbl.column("n_values").to_pylist())
-                    # tag by full path: basenames alone can repeat
-                    # across manifest dirs feeding one decode
-                    base = mp_.rstrip("/").rsplit("/", 1)[-1]
-                    shard = join_path(output_dir,
-                                      f"dec-{path_tag(mp_)}-{base}")
-                    out_tbl = pa.Table.from_batches(dec_batches)
-                    # snappy: the decoded output is the user-facing
-                    # uncompressed table (the reference's extracted
-                    # files); zstd here would re-pay a full entropy
-                    # encode on data the caller asked to be decoded
-                    write_parquet_atomic(out_tbl, shard, filesystem,
-                                         compression="snappy")
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([shard]),
-                         pa.array([out_tbl.num_rows], pa.int64()),
-                         pa.array([n_values], pa.int64())],
-                        names=["shard", "n_rows", "n_values"])
+    def decode_bucket(shard_paths: list[str]) -> Iterator[pa.RecordBatch]:
+        for mp_ in shard_paths:
+            tbl = read_parquet(mp_, filesystem, columns=man_cols,
+                               use_threads=False)
+            dec = fn(iter(tbl.drop_columns(["n_values"]).to_batches()))
+            if output_dir is None:
+                # stream: a 128 MB compacted shard never sits decoded
+                # in memory whole
+                yield from dec
+                continue
+            n_values = sum(tbl.column("n_values").to_pylist())
+            # tag by full path: basenames alone can repeat across
+            # manifest dirs feeding one decode
+            base = mp_.rstrip("/").rsplit("/", 1)[-1]
+            shard = join_path(output_dir, f"dec-{path_tag(mp_)}-{base}")
+            out_tbl = pa.Table.from_batches(list(dec))
+            # snappy: the decoded output is the user-facing
+            # uncompressed table (the reference's extracted files);
+            # zstd here would re-pay a full entropy encode on data the
+            # caller asked to be decoded
+            write_parquet_atomic(out_tbl, shard, filesystem,
+                                 compression="snappy")
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([shard]),
+                 pa.array([out_tbl.num_rows], pa.int64()),
+                 pa.array([n_values], pa.int64())],
+                names=["shard", "n_rows", "n_values"])
 
-    bucketed = _bucket_frame(spark, pa.table(
-        {"paths": pa.array(rows, pa.list_(pa.string()))}))
-    out_schema = "shard string, n_rows long, n_values long" \
-        if output_dir is not None \
-        else _decoded_spark_schema(specs, with_n_tok)
-    return bucketed.mapInArrow(decode_bucket, out_schema)
+    return run_buckets(spark, byte_buckets(paths, sizes, target),
+                       decode_bucket, out_schema)
 
 
 def decode_table(encoded: DataFrame,

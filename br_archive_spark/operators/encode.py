@@ -46,8 +46,9 @@ from pyspark.sql import functions as F
 from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
 from ..codecs.strcodecs import strings_from_arrow
 from .chunk import encode_column
-from .fsutil import (_bucket_frame, _empty_frame, ensure_dir, join_path,
-                     open_parquet, path_tag, write_parquet_atomic)
+from .fsutil import (_empty_frame, bucket_target, byte_buckets, ensure_dir,
+                     join_path, list_files, open_parquet, path_tag,
+                     run_buckets, write_parquet_atomic)
 
 __all__ = ["encode_table", "encode_files", "infer_specs",
            "MANIFEST_SCHEMA", "MANIFEST_SPARK_SCHEMA", "TOKEN_SPECS"]
@@ -1024,31 +1025,27 @@ def encode_files(spark, input_path,
     is the natural split, so one giant file does not pin one task (the
     reference's implicit skew story — a huge file is many chunks,
     ``src/io/lib_bra_io_file_chunks.c:199`` — kept at cluster scale).
-    Row-group enumeration is itself distributed (footer reads happen in
-    tasks, not on the driver — 100 k footers would serialize a driver).
+    Above ``driver_enum_threshold`` files the footer reads run in tasks
+    (100 k footers would serialize a driver) and the ``(path, rg,
+    bytes)`` units are collected back to the driver.
 
-    Units are then packed into byte-budget BUCKETS of
-    ``target_unit_bytes`` (contiguous by (path, rg) via a running-sum
-    window over the tiny unit table) and one task processes one bucket.
+    The source is listed by ``fsutil.list_files`` (no Spark job), the
+    units are packed by ``fsutil.byte_buckets`` into contiguous
+    byte-budget BUCKETS of ``target_unit_bytes``, and
+    ``fsutil.run_buckets`` runs one bucket per task with no exchange.
     A trivial Python task costs ~0.03–0.04 s of CPU in pyspark's set-up
-    (4 cores, Python 3.11). It cost ~0.2–0.3 s while the workers
-    imported pyspark from ``SPARK_HOME``'s archives: each task's
-    ``setup_spark_files`` → ``importlib.invalidate_caches()`` made
-    every zipimporter re-read its archive's directory. ``get_spark``
-    now avoids that at session start by launching the workers through
-    ``br_archive_spark._daemon`` where it can (local masters); on other
-    sessions the old cost stands. So Python tasks stay few and large,
-    their work seconds-scale: small files batch together, while a
-    128 MB row group is a healthy task on its own; and the bucket
-    table itself is built from Arrow (``fsutil._bucket_frame``), so
-    scheduling it runs no Python task at all. Chunk ids stay
+    (4 cores, Python 3.11); ~0.2–0.3 s where the workers import pyspark
+    from ``SPARK_HOME``'s archives (each task's
+    ``importlib.invalidate_caches()`` re-reads every zipimporter's
+    directory — ``get_spark`` avoids it on local masters by launching
+    the workers through ``br_archive_spark._daemon``). So Python tasks
+    stay few and large: small files batch together, while a 128 MB row
+    group is a healthy task on its own. Chunk ids stay
     ``filecrc:rowgroup:index`` — a pure function of the input layout,
     independent of bucketing, so resumes reproduce identical ids.
 
     ``skip_files``: files already present in the output manifest
     (lineage resume) — pruned before any footer is read.
-    Chunk ids are content-addressed as ``filecrc:rowgroup:index`` so a
-    resumed run reproduces identical ids.
 
     ``output_dir``: when set, each task writes its manifest rows to its
     OWN parquet shard in-process (tmp-name + atomic rename) and the
@@ -1065,14 +1062,12 @@ def encode_files(spark, input_path,
     accepts an explicit FileSystem (tested with ``SubTreeFileSystem``
     standing in for a remote store) that is pickled into the tasks.
     """
-    from pyspark.sql import functions as F  # noqa: F811
-
     specs = specs or TOKEN_SPECS
 
     if isinstance(input_path, (list, tuple)):
         paths = sorted(input_path)
     else:
-        paths = sorted(spark.read.parquet(input_path).inputFiles())
+        paths = list_files(input_path, filesystem)
     if skip_files:
         paths = [p for p in paths if p not in skip_files]
     if output_dir is not None:
@@ -1080,165 +1075,97 @@ def encode_files(spark, input_path,
     if not paths:
         return _empty_frame(spark, MANIFEST_SPARK_SCHEMA)
 
-    def enumerate_rgs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            out_paths, out_rgs, out_bytes = [], [], []
-            for p in batch.column("path").to_pylist():
-                meta = open_parquet(p, filesystem).metadata
-                for i in range(meta.num_row_groups):
-                    out_paths.append(p)
-                    out_rgs.append(i)
-                    out_bytes.append(meta.row_group(i).total_byte_size)
-            if out_paths:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_paths, pa.string()),
-                     pa.array(out_rgs, pa.int32()),
-                     pa.array(out_bytes, pa.int64())],
-                    names=["path", "rg", "bytes"])
+    def footer_units(paths: list[str]) -> Iterator[pa.RecordBatch]:
+        out_paths, out_rgs, out_bytes = [], [], []
+        for p in paths:
+            meta = open_parquet(p, filesystem).metadata
+            for i in range(meta.num_row_groups):
+                out_paths.append(p)
+                out_rgs.append(i)
+                out_bytes.append(meta.row_group(i).total_byte_size)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(out_paths, pa.string()),
+             pa.array(out_rgs, pa.int32()),
+             pa.array(out_bytes, pa.int64())],
+            names=["path", "rg", "bytes"])
 
-    def encode_units(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def encode_units(units: list) -> Iterator[pa.RecordBatch]:
         fn = _make_encode_fn(specs, target_values, snapshot_id, codecs,
                              part_from_task=False, track_file=False,
                              str_codecs=str_codecs, global_dict=global_dict)
         cols = [name for name, _ in specs]
-        open_path, open_pf = None, None
-        for batch in batches:
-            units = [(p, rg)
-                     for paths_a, rgs_a in zip(
-                         batch.column("paths").to_pylist(),
-                         batch.column("rgs").to_pylist())
-                     for p, rg in zip(paths_a, rgs_a)]
-            for path, rg in units:
-                if path != open_path:
-                    open_path = path
-                    open_pf = open_parquet(path, filesystem)
-                pf = open_pf
-                ftag = path_tag(path)
+        open_path = pf = None
+        for path, rg in units:
+            if path != open_path:
+                open_path, pf = path, open_parquet(path, filesystem)
+            ftag = path_tag(path)
 
-                def feed() -> Iterator[pa.RecordBatch]:
-                    # use_threads=False: every core already runs its own
-                    # task; per-task arrow thread pools (default = all
-                    # cores) would oversubscribe the executor 16x
-                    for rb in pf.iter_batches(batch_size=8192,
-                                              row_groups=[rg],
-                                              columns=cols,
-                                              use_threads=False):
-                        arrays = [rb.column(c) for c in cols]
-                        part = pa.array(
-                            np.zeros(rb.num_rows, dtype=np.int32))
-                        yield pa.RecordBatch.from_arrays(
-                            arrays + [part], names=cols + ["_part"])
+            def feed() -> Iterator[pa.RecordBatch]:
+                # use_threads=False: every core already runs its own
+                # task; per-task arrow thread pools (default = all
+                # cores) would oversubscribe the executor 16x
+                for rb in pf.iter_batches(batch_size=8192,
+                                          row_groups=[rg],
+                                          columns=cols,
+                                          use_threads=False):
+                    arrays = [rb.column(c) for c in cols]
+                    part = pa.array(
+                        np.zeros(rb.num_rows, dtype=np.int32))
+                    yield pa.RecordBatch.from_arrays(
+                        arrays + [part], names=cols + ["_part"])
 
-                unit_batches = []
-                for out in fn(feed()):
-                    idx = out.column("chunk_idx")[0].as_py()
-                    patched = {
-                        "chunk_id": pa.array(
-                            [f"{ftag}:{rg:05d}:{idx:05d}"]),
-                        "part_id": pa.array([rg], pa.int32()),
-                        "input_file": pa.array([path]),
-                    }
-                    row = pa.RecordBatch.from_arrays(
-                        [patched.get(name) or out.column(name)
-                         for name in MANIFEST_SCHEMA.names],
-                        schema=MANIFEST_SCHEMA)
-                    if output_dir is None:
-                        yield row
-                    else:
-                        unit_batches.append(row)
-                if output_dir is not None and unit_batches:
-                    # in-process sink: one shard per (file, row-group),
-                    # named by content address → bucketing-independent,
-                    # idempotent under retry/resume (atomic write)
-                    shard = join_path(output_dir,
-                                      f"man-{ftag}-{rg:05d}.parquet")
-                    write_parquet_atomic(
-                        pa.Table.from_batches(unit_batches), shard,
-                        filesystem)
-                    empty_cols = pa.array(
-                        [[] for _ in unit_batches],
-                        type=MANIFEST_SCHEMA.field("columns").type)
-                    stats = pa.Table.from_batches(unit_batches) \
-                        .set_column(
-                            MANIFEST_SCHEMA.get_field_index("columns"),
-                            "columns", empty_cols)
-                    yield from stats.to_batches()
-
-    def _bucket_target(total_bytes: int) -> tuple[int, int]:
-        # explicit budget → exact (buckets become a pure function of the
-        # input layout — e.g. the scaling bench must execute identical
-        # unit lists at both parallelism levels); None → auto: ~6 waves
-        # of tasks across the cluster (measured sweet spot — straggler
-        # absorption beats per-task overhead down to ~13 s/16-core on
-        # the bench workload), capped at 256 MB, never slivers <16 MB
-        if target_unit_bytes is not None:
-            target = max(int(target_unit_bytes), 1)
-        else:
-            par = max(spark.sparkContext.defaultParallelism, 1)
-            target = int(min(256 << 20,
-                             max(16 << 20, total_bytes // (par * 6) + 1)))
-        return target, int(total_bytes // target) + 1
+            unit_batches = []
+            for out in fn(feed()):
+                idx = out.column("chunk_idx")[0].as_py()
+                patched = {
+                    "chunk_id": pa.array(
+                        [f"{ftag}:{rg:05d}:{idx:05d}"]),
+                    "part_id": pa.array([rg], pa.int32()),
+                    "input_file": pa.array([path]),
+                }
+                row = pa.RecordBatch.from_arrays(
+                    [patched.get(name) or out.column(name)
+                     for name in MANIFEST_SCHEMA.names],
+                    schema=MANIFEST_SCHEMA)
+                if output_dir is None:
+                    yield row
+                else:
+                    unit_batches.append(row)
+            if output_dir is not None and unit_batches:
+                # in-process sink: one shard per (file, row-group),
+                # named by content address → bucketing-independent,
+                # idempotent under retry/resume (atomic write)
+                shard = join_path(output_dir,
+                                  f"man-{ftag}-{rg:05d}.parquet")
+                write_parquet_atomic(
+                    pa.Table.from_batches(unit_batches), shard,
+                    filesystem)
+                empty_cols = pa.array(
+                    [[] for _ in unit_batches],
+                    type=MANIFEST_SCHEMA.field("columns").type)
+                stats = pa.Table.from_batches(unit_batches) \
+                    .set_column(
+                        MANIFEST_SCHEMA.get_field_index("columns"),
+                        "columns", empty_cols)
+                yield from stats.to_batches()
 
     if len(paths) <= driver_enum_threshold:
-        # FAST PATH: enumerate footers on the driver (~1 ms each) and
-        # build the bucketed unit table in one createDataFrame — one
-        # Spark job, one metadata-sized shuffle. The distributed path
-        # below costs 2 extra jobs + a window stage (~2-3 s of fixed
-        # time), which at high core counts can rival the encode itself.
-        units: list[tuple[str, int, int]] = []
-        for p in paths:
-            meta = open_parquet(p, filesystem).metadata
-            for i in range(meta.num_row_groups):
-                units.append((p, i, meta.row_group(i).total_byte_size))
-        total_bytes = sum(u[2] for u in units)
-        target, _ = _bucket_target(total_bytes)
-        buckets: dict[int, tuple[list, list]] = {}
-        cum = 0
-        for p, rg, nbytes in units:
-            b = buckets.setdefault(cum // target, ([], []))
-            b[0].append(p)
-            b[1].append(rg)
-            cum += nbytes
-        rows = [v for _, v in sorted(buckets.items())]
-        bucketed = _bucket_frame(spark, pa.table({
-            "paths": pa.array([r[0] for r in rows],
-                              pa.list_(pa.string())),
-            "rgs": pa.array([r[1] for r in rows], pa.list_(pa.int32())),
-        }))
-        return bucketed.mapInArrow(encode_units, MANIFEST_SPARK_SCHEMA)
-
-    from pyspark.sql import Window
-
-    # a footer read is ~1 ms but a Python task costs ~0.04 s of pyspark
-    # set-up, ~0.2–0.3 s on the stock daemon (see the docstring) —
-    # batch many footers per task; 2 waves across the cluster is plenty
-    enum_parallelism = max(1, min(
-        len(paths), spark.sparkContext.defaultParallelism * 2))
-    paths_df = spark.createDataFrame(
-        pa.table({"path": pa.array(paths, pa.string())})
-    ).repartition(enum_parallelism)
-    units_df = paths_df.mapInArrow(enumerate_rgs,
-                                   "path string, rg int, bytes long")
-    # pack units into byte-budget buckets: running sum over the unit
-    # table (tiny — one row per row group, no payload bytes move), then
-    # bucket = floor(cum/target). The single-reducer window sort is over
-    # metadata rows only (~1 row per 128 MB of data).
-    units_df = units_df.cache()
-    total_bytes = units_df.agg(F.sum("bytes")).collect()[0][0] or 0
-    target, n_buckets = _bucket_target(total_bytes)
-    w = (Window.orderBy("path", "rg")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    units_df = (units_df
-                .withColumn("_cum", F.sum("bytes").over(w))
-                .withColumn("_bucket", F.floor(
-                    (F.col("_cum") - F.col("bytes")) / F.lit(target))))
-    # one row per bucket, then round-robin with an explicit partition
-    # count, as in fsutil._bucket_frame (one bucket per task)
-    bucketed = (units_df
-                .groupBy("_bucket")
-                .agg(F.sort_array(F.collect_list(
-                    F.struct("path", "rg"))).alias("u"))
-                .select(F.expr("transform(u, x -> x.path)").alias("paths"),
-                        F.expr("transform(u, x -> x.rg)").alias("rgs")))
-    bucketed = bucketed.repartition(max(n_buckets, 1))
-    return bucketed.mapInArrow(encode_units, MANIFEST_SPARK_SCHEMA)
+        # footer reads on the driver, ~1 ms each
+        units = next(footer_units(paths))
+    else:
+        # footer reads in tasks: a footer is ~1 ms but a Python task
+        # costs ~0.04 s of pyspark set-up (~0.2–0.3 s on the stock
+        # daemon, see the docstring) — many footers per task, 2 waves
+        # across the cluster; the (path, rg, bytes) units come back to
+        # the driver in path order for the bucketing below
+        step = -(-len(paths) // (spark.sparkContext.defaultParallelism * 2))
+        groups = [paths[i:i + step] for i in range(0, len(paths), step)]
+        units = run_buckets(spark, groups, footer_units,
+                            "path string, rg int, bytes long").toArrow()
+    sizes = units.column("bytes").to_pylist()
+    target = bucket_target(spark, target_unit_bytes, sum(sizes),
+                           16 << 20, 256 << 20)
+    buckets = byte_buckets(
+        list(zip(units.column("path").to_pylist(),
+                 units.column("rg").to_pylist())), sizes, target)
+    return run_buckets(spark, buckets, encode_units, MANIFEST_SPARK_SCHEMA)

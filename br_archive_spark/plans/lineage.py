@@ -28,15 +28,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.encode import encode_table
+from ..operators.fsutil import has_files, list_files
 
 __all__ = ["encode_with_checkpoint", "lineage_report"]
 
 
 def _existing_files(spark: SparkSession, output_dir: str) -> set[str]:
-    try:
-        man = spark.read.parquet(output_dir)
-    except Exception:
+    """Input files the output manifest already covers. An output with
+    no shard files covers none; any other failure to read it raises
+    before the resume writes anything."""
+    if not has_files(output_dir):
         return set()
+    man = spark.read.parquet(output_dir)
     return {r["input_file"] for r in
             man.select("input_file").distinct().collect()}
 
@@ -49,7 +52,7 @@ def encode_with_checkpoint(spark: SparkSession, input_dir: str,
 
     Returns {"total_files", "skipped_files", "encoded_files", "chunks"}.
     """
-    all_files = sorted(spark.read.parquet(input_dir).inputFiles())
+    all_files = list_files(input_dir)
     done = _existing_files(spark, output_dir)
     mode = encode_kwargs.get("mode", "direct")
     if mode in ("hash", "range") and done:

@@ -49,10 +49,10 @@ def stream_changes(spark: SparkSession, table_dir: str, output_dir: str,
     from ..operators.snapshots import snapshot_diff
 
     # ingest ONLY canonical log rows (NNNNNNNN-<sid>.parquet): the log
-    # dir also holds write_parquet_atomic's ``*.tmp-<pid>`` staging
-    # files and _claim_seq's ``NNNNNNNN.claim`` markers — a mid-write
-    # listing that picked either up would fail the parquet read and
-    # kill the query (ADVICE r3 #4)
+    # dir also holds _claim_seq's ``NNNNNNNN.claim`` markers (and, from
+    # older writers, visible ``*.tmp-<pid>`` staging files) — a listing
+    # that picked either up would fail the parquet read and kill the
+    # query (ADVICE r3 #4)
     log_stream = (spark.readStream
                   .schema(_LOG_STREAM_SCHEMA)
                   .option("pathGlobFilter", "[0-9]*-*.parquet")

@@ -39,6 +39,7 @@ def encode_stream(spark: SparkSession, input_dir: str, output_dir: str,
     the batch-catchup mode; without it, it runs continuously.
     """
     from ..operators.encode import encode_table
+    from ..operators.fsutil import has_files
 
     stream = (spark.readStream
               .schema(TOKEN_STREAM_SCHEMA)
@@ -46,14 +47,11 @@ def encode_stream(spark: SparkSession, input_dir: str, output_dir: str,
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         snap = f"batch-{batch_id}"
-        sess = batch_df.sparkSession
-        try:
-            existing = (sess.read.parquet(output_dir)
-                        .where(F.col("snapshot_id") == snap).limit(1)
-                        .count())
-        except Exception:
-            existing = 0
-        if existing:
+        # a manifest with shards it cannot read raises, never counts
+        # as empty
+        if has_files(output_dir) and (
+                batch_df.sparkSession.read.parquet(output_dir)
+                .where(F.col("snapshot_id") == snap).limit(1).count()):
             return  # replayed micro-batch: already committed
         enc = encode_table(batch_df, snapshot_id=snap, **encode_kwargs)
         enc.write.mode("append").parquet(output_dir)

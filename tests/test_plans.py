@@ -395,11 +395,13 @@ def test_scan_where_isin_band_is_pure_catalyst(spark, tmp_path):
 
 
 def test_bulk_paths_schedule_from_a_local_table(spark, tmp_path):
-    """The bulk operators' bucket tables are driver-built Arrow
-    tables: the JVM reads them as a LocalTableScan. A frame built from
-    a Python list would show ``Scan ExistingRDD`` — a Python
+    """The bulk operators schedule one bucket per task with no
+    exchange: ``fsutil.run_buckets`` runs bucket *i* in partition *i*
+    of a ``Range``, the bucket list held in the closure. Their
+    empty-input returns are driver-built Arrow tables (a
+    LocalTableScan). Neither shows ``Scan ExistingRDD`` — a Python
     ``parallelize`` + ``map`` stage run by a second pool of Python
-    workers, one extra Python task per partition. The codec
+    workers, one extra Python task per partition — and the codec
     ``MapInArrow`` stays the only Python operator."""
     import re
 
@@ -426,13 +428,58 @@ def test_bulk_paths_schedule_from_a_local_table(spark, tmp_path):
     }
     for label, df in plans.items():
         plan = _plan(df)
-        assert "LocalTableScan" in plan, label
+        empty = label.endswith("empty input")
+        if empty:
+            assert "LocalTableScan" in plan, label
+        else:
+            assert "Exchange" not in plan, label
         assert "ExistingRDD" not in plan, label
         python_ops = {op for op in re.findall(r"^\(\d+\) (\w+)", plan,
                                               re.M)
                       if re.search(r"Python|Pandas|Arrow", op)}
-        want = set() if label.endswith("empty input") else {"MapInArrow"}
+        want = set() if empty else {"MapInArrow"}
         assert python_ops == want, (label, python_ops)
+
+
+def _jobs_and_stages(spark, action) -> tuple[int, int]:
+    """Spark jobs and stages ``action()`` runs, from the status
+    tracker."""
+    sc = spark.sparkContext
+    group = f"count-{id(action)}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return len(jobs), len(stages)
+
+
+def test_bulk_pass_runs_two_jobs(spark, tmp_path):
+    """A bulk pass plus the caller's count or aggregate is 2 Spark
+    jobs and 3 stages: no listing job (``fsutil.list_files`` lists
+    with pyarrow) and no exchange in front of the ``MapInArrow``. A
+    ``spark.read.parquet(p).inputFiles()`` listing and a round-robin
+    bucket exchange made it 4 jobs and 7 stages."""
+    from pyspark.sql import functions as F
+
+    from br_archive_spark.datagen import token_table
+    from br_archive_spark.operators import decode_files, encode_files
+
+    src = str(tmp_path / "src")
+    token_table(spark, 400).repartition(3).write.parquet(src)
+    man = str(tmp_path / "man")
+    encode_files(spark, src, output_dir=man).collect()
+    passes = {
+        "decode_files count": lambda: decode_files(spark, man).count(),
+        "encode_files aggregate": lambda: encode_files(spark, src).agg(
+            F.sum("n_values")).collect(),
+    }
+    for label, action in passes.items():
+        jobs, stages = _jobs_and_stages(spark, action)
+        assert jobs <= 2 and stages <= 3, (label, jobs, stages)
 
 
 def test_packing_offsets_are_local_tables(spark):
