@@ -128,11 +128,6 @@ def _dec_str_zstd(params: bytes, payload: bytes) -> tuple[bytes, np.ndarray]:
 
 # ------------------------------------------------------------ STR_DICT
 
-def _split(blob: bytes, offsets: np.ndarray) -> list[bytes]:
-    mv = memoryview(blob)
-    return [bytes(mv[offsets[i]:offsets[i + 1]]) for i in range(len(offsets) - 1)]
-
-
 def _enc_str_dict(blob: bytes, offsets: np.ndarray) -> tuple[bytes, bytes]:
     """Zero-copy whole-string dictionary via Arrow.
 

@@ -53,8 +53,7 @@ def compact_manifest(spark, manifest_path, output_dir: str,
     ``(shard, input_files, chunks, n_rows, enc_bytes)``.
     """
 
-    paths = list_files(manifest_path, filesystem) \
-        if isinstance(manifest_path, str) else sorted(manifest_path)
+    paths = list_files(manifest_path, filesystem)
     ensure_dir(output_dir, filesystem)
     if not paths:
         return _empty_frame(spark, _STATS_SCHEMA)

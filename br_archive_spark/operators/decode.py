@@ -1770,8 +1770,7 @@ def decode_files(spark, manifest_path,
 
     specs = specs or TOKEN_SPECS
 
-    paths = list_files(manifest_path, filesystem) \
-        if isinstance(manifest_path, str) else sorted(manifest_path)
+    paths = list_files(manifest_path, filesystem)
     if output_dir is not None:
         ensure_dir(output_dir, filesystem)
     out_schema = "shard string, n_rows long, n_values long" \

@@ -1034,13 +1034,10 @@ def encode_files(spark, input_path,
     byte-budget BUCKETS of ``target_unit_bytes``, and
     ``fsutil.run_buckets`` runs one bucket per task with no exchange.
     A trivial Python task costs ~0.03–0.04 s of CPU in pyspark's set-up
-    (4 cores, Python 3.11); ~0.2–0.3 s where the workers import pyspark
-    from ``SPARK_HOME``'s archives (each task's
-    ``importlib.invalidate_caches()`` re-reads every zipimporter's
-    directory — ``get_spark`` avoids it on local masters by launching
-    the workers through ``br_archive_spark._daemon``). So Python tasks
-    stay few and large: small files batch together, while a 128 MB row
-    group is a healthy task on its own. Chunk ids stay
+    (4 cores, Python 3.11; ~0.2–0.3 s on workers that import pyspark
+    from ``SPARK_HOME``'s archives, see ``br_archive_spark._daemon``).
+    So Python tasks stay few and large: small files batch together,
+    while a 128 MB row group is a healthy task on its own. Chunk ids stay
     ``filecrc:rowgroup:index`` — a pure function of the input layout,
     independent of bucketing, so resumes reproduce identical ids.
 
@@ -1064,10 +1061,7 @@ def encode_files(spark, input_path,
     """
     specs = specs or TOKEN_SPECS
 
-    if isinstance(input_path, (list, tuple)):
-        paths = sorted(input_path)
-    else:
-        paths = list_files(input_path, filesystem)
+    paths = list_files(input_path, filesystem)
     if skip_files:
         paths = [p for p in paths if p not in skip_files]
     if output_dir is not None:

@@ -15,7 +15,7 @@ Four concerns every bulk operator shares:
 * **Listing.** ``list_files`` (``pyarrow.fs.FileSelector``) names
   the files Spark's ``read.parquet(path).inputFiles`` names, with no
   Spark job: the same ``file:///abs`` URIs (chunk ids hash that
-  string), ``key=value`` recursion and hidden-name rule.
+  string), relative-path base, recursion and hidden-name rule.
 
 * **Bucketing and scheduling.** ``byte_buckets`` packs work items into
   contiguous byte-budget buckets; ``run_buckets`` runs one bucket per
@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import unicodedata
 from urllib.parse import quote, unquote
 
 __all__ = ["path_tag", "local_path", "list_files", "has_files",
@@ -38,6 +39,8 @@ __all__ = ["path_tag", "local_path", "list_files", "has_files",
 
 # characters a java.net.URI path leaves unescaped, as Spark's URIs do
 _URI_SAFE = "/-_.!~*'();:@&=+$,"
+# non-ASCII it escapes: space separators and ISO controls
+_URI_ESCAPED_CATS = ("Zs", "Zl", "Zp", "Cc")
 
 
 def _hidden(name: str) -> bool:
@@ -47,36 +50,41 @@ def _hidden(name: str) -> bool:
             or name.endswith("._COPYING_"))
 
 
-def list_files(path: str, filesystem=None) -> list[str]:
-    """Sorted data files under ``path``, as Spark lists them for
-    ``read.parquet(path)``: a file lists itself, a directory its
-    visible files and visible ``key=value`` subdirectories. Local
+def list_files(path, filesystem=None) -> list[str]:
+    """Sorted data files under ``path`` (a list of paths: itself,
+    sorted), as Spark lists them for ``read.parquet(path)``: a file
+    lists itself, a directory its visible files and, in a
+    ``key=value`` layout, those of every visible subdirectory. Local
     paths come back as ``file:///abs`` URIs, ``scheme://`` paths keep
     their scheme, paths under any other explicit ``filesystem`` stay
-    relative to it. A missing path raises ``FileNotFoundError``."""
+    relative to it. A path with no data file raises
+    ``FileNotFoundError``, where Spark fails to read it."""
     from pyarrow import fs as pafs
 
+    if not isinstance(path, str):
+        return sorted(path)
     fs, root = resolve_fs(path, filesystem)
     local = isinstance(fs, pafs.LocalFileSystem)
     if local:
         root = os.path.abspath(root)
     info = fs.get_file_info(root)
-    if info.type == pafs.FileType.NotFound:
-        raise FileNotFoundError(f"path does not exist: {path}")
-    if info.type == pafs.FileType.Directory:
-        files, dirs = [], [root]
-    else:
-        files, dirs = [root], []
+    files = [root] if info.type == pafs.FileType.File else []
+    dirs = [root] if info.type == pafs.FileType.Directory else []
     while dirs:
         for f in fs.get_file_info(pafs.FileSelector(dirs.pop())):
             if _hidden(f.base_name):
                 continue
             if f.type == pafs.FileType.File:
                 files.append(f.path)
-            elif f.type == pafs.FileType.Directory and "=" in f.base_name:
+            elif f.type == pafs.FileType.Directory:
                 dirs.append(f.path)
+    # outside a key=value layout Spark reads the top level only
+    if not any("=" in os.path.dirname(f[len(root):]) for f in files):
+        files = [f for f in files if "/" not in f[len(root) + 1:]]
+    if not files:
+        raise FileNotFoundError(f"no data file at: {path}")
     if local:
-        files = ["file://" + quote(f, safe=_URI_SAFE) for f in files]
+        files = ["file://" + _uri_escape(f) for f in files]
     elif filesystem is None:
         # s3://bucket/key lists as bucket/key/..., hdfs://nn:8020/p
         # as /p/...: put back what resolve_fs took off
@@ -85,8 +93,31 @@ def list_files(path: str, filesystem=None) -> list[str]:
     return sorted(files)
 
 
+def _spark_abspath(path: str) -> str:
+    """``path`` made absolute where Spark resolves it: in the JVM's
+    ``user.dir``, which no ``os.chdir`` of the driver moves (a local
+    master's workers start there); without a JVM, in the cwd."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if os.path.isabs(path) or sc is None:
+        return os.path.abspath(path)
+    return os.path.join(sc._jvm.System.getProperty("user.dir"), path)
+
+
+def _uri_escape(path: str) -> str:
+    """``path`` percent-escaped as ``java.net.URI`` escapes a path:
+    non-ASCII characters stay, but for space separators and controls."""
+    if path.isascii():
+        return quote(path, safe=_URI_SAFE)
+    return "".join(
+        quote(c, safe=_URI_SAFE)
+        if c.isascii() or unicodedata.category(c) in _URI_ESCAPED_CATS
+        else c for c in path)
+
+
 def has_files(path: str) -> bool:
-    """Whether ``list_files(path)`` names a file (a missing path: no)."""
+    """Whether ``path`` holds a data file (a missing path: no)."""
     try:
         return bool(list_files(path))
     except FileNotFoundError:
@@ -165,7 +196,8 @@ def resolve_fs(path: str, filesystem=None):
     * ``scheme://...`` URIs (s3://, hdfs://, gs://...): delegated to
       ``pyarrow.fs.FileSystem.from_uri`` — the bulk operators work
       against object stores without local-FS assumptions;
-    * ``file:`` URIs and plain paths: the local filesystem.
+    * ``file:`` URIs and plain paths: the local filesystem (a relative
+      path resolved where Spark resolves it).
     """
     from pyarrow import fs as pafs
 
@@ -173,9 +205,7 @@ def resolve_fs(path: str, filesystem=None):
         return filesystem, local_path(path)
     if "://" in path and not path.startswith("file://"):
         return pafs.FileSystem.from_uri(path)
-    if path.startswith("file:"):
-        return pafs.LocalFileSystem(), local_path(path)
-    return pafs.LocalFileSystem(), path
+    return pafs.LocalFileSystem(), _spark_abspath(local_path(path))
 
 
 def join_path(base: str, name: str) -> str:

@@ -21,8 +21,6 @@ duplicate and no missing chunks.
 
 from __future__ import annotations
 
-import os
-
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,8 +83,7 @@ def encode_with_checkpoint(spark: SparkSession, input_dir: str,
         track = mode == "scan"
         enc = encode_table(df, snapshot_id=snapshot_id,
                            track_input_file=track, **encode_kwargs)
-    mode = "append" if os.path.exists(output_dir) else "overwrite"
-    enc.write.mode(mode).parquet(output_dir)
+    enc.write.mode("append").parquet(output_dir)
     # broadcast-join against a files DataFrame, not .isin(remaining):
     # a 100k-literal IN expression is a plan-size hazard (analysis
     # cost + codegen blowup), while a file list is a tiny broadcast

@@ -41,27 +41,82 @@ def test_list_files_matches_spark_input_files(spark, tmp_path,
     parted = str(tmp_path / "parted")
     df.write.partitionBy("source").parquet(parted)
     assert any("=" in n for n in os.listdir(parted))
+    # plain subdirectories of a partition directory are read too
+    df.coalesce(1).write.parquet(
+        os.path.join(parted, sorted(os.listdir(parted))[-1], "sub", "deeper"))
+    # outside a key=value layout Spark reads the top level only
+    mixed = str(tmp_path / "mixed")
+    df.coalesce(1).write.parquet(mixed)
+    df.coalesce(1).write.parquet(os.path.join(mixed, "2024", "01"))
+    # java.net.URI escapes ASCII and non-ASCII space/control
+    # characters, and keeps other non-ASCII characters as they are
     odd = str(tmp_path / "sp ace%x,y")
     df.repartition(2).write.parquet(odd)
+    uni = str(tmp_path / "donn\u00e9es\u00a0\u4e2d\U0001F600")
+    df.coalesce(1).write.parquet(uni)
     single = os.path.join(
         plain, sorted(n for n in names if n.endswith(".parquet"))[0])
-    for path in (plain, parted, odd, single):
+    for path in (plain, parted, mixed, odd, uni, single):
         assert list_files(path) == _spark_files(spark, path), path
+    assert all("/2024/" not in f for f in list_files(mixed))
+    assert any("/sub/deeper/" in f for f in list_files(parted))
+    assert "donn\u00e9es%C2%A0\u4e2d\U0001F600/" in list_files(uni)[0]
     # escaped URIs open: the bulk path reads a dir Spark escapes
-    assert encode_files(spark, odd).agg(
-        F.sum("n_rows")).collect()[0][0] == 300
+    for path in (odd, uni):
+        assert encode_files(spark, path).agg(
+            F.sum("n_rows")).collect()[0][0] == 300
+    # a directory with only nested plain directories, or none at all,
+    # has no data file for Spark or the lister
+    nest = str(tmp_path / "nest")
+    df.write.parquet(os.path.join(nest, "a"))
+    os.makedirs(tmp_path / "empty")
+    for path in (nest, str(tmp_path / "empty"), str(tmp_path / "missing")):
+        with pytest.raises(FileNotFoundError):
+            list_files(path)
+        with pytest.raises(Exception):
+            _spark_files(spark, path)
     # under an explicit filesystem, paths stay relative to it
     sub = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
     assert list_files("plain", sub) == sorted(
         f"plain/{n}" for n in names if n.startswith("part-"))
 
-    # relative paths resolve against the JVM's working directory
+    # relative paths resolve against the JVM's working directory,
+    # wherever the driver's cwd has moved since
     jvm_cwd = spark.sparkContext._jvm.System.getProperty("user.dir")
-    monkeypatch.chdir(jvm_cwd)
     rel = os.path.relpath(plain, jvm_cwd)
-    assert list_files(rel) == _spark_files(spark, rel)
-    with pytest.raises(FileNotFoundError):
-        list_files(str(tmp_path / "missing"))
+    away = tmp_path / "away"
+    away.mkdir()
+    monkeypatch.chdir(away)
+    assert list_files(rel) == _spark_files(spark, rel) == list_files(plain)
+
+
+def test_resume_with_relative_paths_after_chdir(spark, tmp_path,
+                                                monkeypatch):
+    """Listing, reading and writing a relative input and manifest all
+    resolve in the JVM's working directory, so a resume run after the
+    driver ``chdir``s skips every file the first run encoded."""
+    from br_archive_spark.plans.lineage import encode_with_checkpoint
+
+    src = str(tmp_path / "src")
+    token_table(spark, 1000).repartition(3).write.parquet(src)
+    jvm_cwd = spark.sparkContext._jvm.System.getProperty("user.dir")
+    rel_src = os.path.relpath(src, jvm_cwd)
+    rel_out = os.path.relpath(str(tmp_path / "out"), jvm_cwd)
+    away = tmp_path / "away"
+    away.mkdir()
+    monkeypatch.chdir(away)
+    s1 = encode_with_checkpoint(spark, rel_src, rel_out)
+    assert s1["encoded_files"] == s1["total_files"] == 3
+    shards = sorted(os.listdir(tmp_path / "out"))
+    s2 = encode_with_checkpoint(spark, rel_src, rel_out)
+    assert (s2["skipped_files"], s2["encoded_files"]) == (3, 0)
+    assert sorted(os.listdir(tmp_path / "out")) == shards
+    assert os.listdir(away) == []
+    # the bulk path's own output dir lands there too
+    stats = encode_files(spark, rel_src, output_dir=rel_out + "-bulk")
+    assert sum(r["n_rows"] for r in stats.collect()) == 1000
+    assert os.listdir(away) == []
+    assert decode_files(spark, rel_out + "-bulk").count() == 1000
 
 
 def test_encode_files_ids_match_enumeration_modes(spark, tmp_path):
