@@ -67,6 +67,8 @@ def cmd_encode(args) -> int:
 
 
 def cmd_decode(args) -> int:
+    from .operators.decode import decode_files, decode_table, manifest_specs
+
     spark = _spark(args)
     gd = _load_gdict(args.global_dict)
     if os.path.exists(args.output) and not args.yes:
@@ -75,7 +77,6 @@ def cmd_decode(args) -> int:
     if getattr(args, "at", None) is not None:
         # time travel: input is a snapshot table dir; decode the head
         # (--at with no id) or the named snapshot
-        from .operators.decode import decode_table, manifest_specs
         from .operators.snapshots import load_snapshot
 
         man = load_snapshot(spark, args.input, args.at or None)
@@ -89,8 +90,6 @@ def cmd_decode(args) -> int:
     if args.mode == "direct":
         # bulk path: tasks read manifest shards and write decoded
         # shards in-process (operators.decode.decode_files)
-        from .operators.decode import decode_files
-
         if args.yes and os.path.isdir(args.output):
             # match spark-mode overwrite semantics: a previous decode's
             # shards (possibly from a different manifest) must not stay
@@ -112,15 +111,16 @@ def cmd_decode(args) -> int:
             for f in ours:
                 os.unlink(os.path.join(args.output, f))
 
-        stats = decode_files(spark, args.input, global_dict=gd,
-                             output_dir=args.output).collect()
+        stats = decode_files(
+            spark, args.input,
+            specs=manifest_specs(spark.read.parquet(args.input)),
+            global_dict=gd, output_dir=args.output).collect()
         print(json.dumps({"rows": int(sum(r["n_rows"] for r in stats)),
                           "shards": len(stats)}))
         return 0
-    from .operators.decode import decode_table
-
     man = spark.read.parquet(args.input)
-    decode_table(man, global_dict=gd).write.mode(
+    decode_table(man, specs=manifest_specs(man),
+                 global_dict=gd).write.mode(
         "overwrite" if args.yes else "errorifexists").parquet(args.output)
     print(json.dumps({"rows": spark.read.parquet(args.output).count()}))
     return 0

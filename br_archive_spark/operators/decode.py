@@ -82,34 +82,20 @@ def _rebuild(kind: str, data, n_rows: int, validity=None) -> pa.Array:
             [vbuf,
              pa.py_buffer(offsets.astype(np.int32, copy=False).tobytes()),
              pa.py_buffer(blob)], null_count=vnc if vbuf else 0)
-    if kind == "int_list":
+    if kind.endswith("_list"):
         values, lengths = data
-        offsets = np.zeros(n_rows + 1, dtype=np.int32)
-        np.cumsum(lengths, out=offsets[1:])
-        ebuf, enc_ = _mask_buf(elem_valid)
-        child = pa.Array.from_buffers(
-            pa.int32(), len(values),
-            [ebuf, pa.py_buffer(np.ascontiguousarray(
-                values.astype(np.int32, copy=False)).tobytes())],
-            null_count=enc_ if ebuf else 0)
-        return pa.Array.from_buffers(
-            pa.list_(pa.int32()), n_rows,
-            [vbuf, pa.py_buffer(offsets.tobytes())],
-            null_count=vnc if vbuf else 0, children=[child])
-    if kind in ("float_list", "double_list"):
-        values, lengths = data
-        vt = pa.float32() if kind == "float_list" else pa.float64()
-        npt = np.float32 if kind == "float_list" else np.float64
+        atype = _arrow_type(kind)
+        vt = atype.value_type
         offsets = np.zeros(n_rows + 1, dtype=np.int32)
         np.cumsum(lengths, out=offsets[1:])
         ebuf, enc_ = _mask_buf(elem_valid)
         child = pa.Array.from_buffers(
             vt, len(values),
-            [ebuf, pa.py_buffer(np.ascontiguousarray(
-                values.astype(npt, copy=False)).tobytes())],
+            [ebuf, pa.py_buffer(np.ascontiguousarray(values.astype(
+                vt.to_pandas_dtype(), copy=False)).tobytes())],
             null_count=enc_ if ebuf else 0)
         return pa.Array.from_buffers(
-            pa.list_(vt), n_rows,
+            atype, n_rows,
             [vbuf, pa.py_buffer(offsets.tobytes())],
             null_count=vnc if vbuf else 0, children=[child])
     if kind == "int":
@@ -149,12 +135,32 @@ def _rebuild(kind: str, data, n_rows: int, validity=None) -> pa.Array:
     raise ValueError(kind)
 
 
+def _decoded_schema(specs: list[tuple[str, str]],
+                    with_n_tok: bool) -> pa.Schema:
+    """Arrow schema of decoded rows: one field per spec, then ``n_tok``
+    (the length of the last int_list column) when asked for AND the
+    specs hold an int_list — a table without one has no n_tok to emit,
+    so every decode path derives the flag here rather than failing deep
+    in the UDF with an opaque NoneType error."""
+    fields = [pa.field(name, _arrow_type(kind)) for name, kind in specs]
+    if with_n_tok and any(k == "int_list" for _, k in specs):
+        fields.append(pa.field("n_tok", pa.int32()))
+    return pa.schema(fields)
+
+
+def _decoded_spark_schema(specs: list[tuple[str, str]],
+                          with_n_tok: bool) -> str:
+    """:func:`_decoded_schema` as a Spark DDL string."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    return ", ".join(f"{f.name} {from_arrow_type(f.type).simpleString()}"
+                     for f in _decoded_schema(specs, with_n_tok))
+
+
 def _make_decode_fn(specs: list[tuple[str, str]], with_n_tok: bool,
                     verify_checksums: bool, global_dict=None):
-    fields = [pa.field(name, _arrow_type(kind)) for name, kind in specs]
-    if with_n_tok:
-        fields.append(pa.field("n_tok", pa.int32()))
-    out_schema = pa.schema(fields)
+    out_schema = _decoded_schema(specs, with_n_tok)
+    with_n_tok = len(out_schema) > len(specs)
 
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -197,23 +203,26 @@ def _make_decode_fn(specs: list[tuple[str, str]], with_n_tok: bool,
     return decode_fn
 
 
-def _zone_prune(encoded: DataFrame, key: str, lo: str, hi: str) -> DataFrame:
-    """Prune chunks by the manifest zone map ONLY where the bounds
-    describe ``key``: a chunk whose ``key_col`` differs (or is unknown —
-    pre-r3 manifest, or a table with no string column) is kept, never
-    silently filtered out (ADVICE r2 #1 — pruning on the wrong column's
-    bounds drops matching rows with no error)."""
+def _key_may_hold(encoded: DataFrame, key: str, lo: str, hi: str):
+    """Predicate: the chunk MAY hold a ``key`` value in ``[lo, hi]`` —
+    the zone map proves otherwise ONLY where its bounds describe
+    ``key``. A chunk whose ``key_col`` differs or is unknown (pre-r3
+    manifest, a table with no string column, or NULL after
+    ``drop_columns`` of the zone-map key) is kept, never silently
+    filtered out (ADVICE r2 #1 — pruning on the wrong column's bounds
+    drops matching rows with no error). Without the isNull() arm both
+    sides of the OR are NULL and a WHERE drops the chunk (ADVICE r3
+    #2)."""
     if "key_col" not in encoded.columns:
-        return encoded
-    # key_col can be NULL inside a non-null manifest column (e.g. after
-    # drop_columns() of the zone-map key): without the isNull() arm both
-    # sides of the OR are NULL and the WHERE silently drops the chunk —
-    # the exact silent-miss this function exists to prevent (ADVICE r3
-    # #2; delete_rows already guards the same case).
-    return encoded.where(
-        F.col("key_col").isNull()
-        | (F.col("key_col") != key)
-        | ((F.col("key_min") <= hi) & (F.col("key_max") >= lo)))
+        return F.lit(True)
+    return (F.col("key_col").isNull()
+            | (F.col("key_col") != key)
+            | ((F.col("key_min") <= hi) & (F.col("key_max") >= lo)))
+
+
+def _zone_prune(encoded: DataFrame, key: str, lo: str, hi: str) -> DataFrame:
+    """Prune chunks by the manifest zone map (:func:`_key_may_hold`)."""
+    return encoded.where(_key_may_hold(encoded, key, lo, hi))
 
 
 def _bloom_hits(words, probes: list, positions):
@@ -1720,26 +1729,6 @@ def lookup_rows(encoded: DataFrame, doc_ids: list[str],
         fetch, f"{key} string, {value_col} {value_kind}")
 
 
-def _decoded_spark_schema(specs: list[tuple[str, str]],
-                          with_n_tok: bool) -> str:
-    parts = []
-    for name, kind in specs:
-        if kind.startswith("decimal"):
-            spark_t = kind
-        else:
-            spark_t = {"string": "string", "int_list": "array<int>",
-                       "int": "long", "binary": "binary",
-                       "float_list": "array<float>",
-                       "double_list": "array<double>",
-                       "float": "double",
-                       "date": "date", "timestamp": "timestamp",
-                       "bool": "boolean"}[kind]
-        parts.append(f"{name} {spark_t}")
-    if with_n_tok:
-        parts.append("n_tok int")
-    return ", ".join(parts)
-
-
 def decode_files(spark, manifest_path,
                  specs: list[tuple[str, str]] | None = None,
                  with_n_tok: bool = True,
@@ -1843,10 +1832,6 @@ def decode_table(encoded: DataFrame,
     from .encode import TOKEN_SPECS
 
     specs = specs or TOKEN_SPECS
-    # n_tok is the length of the (last) int_list column; a table
-    # without one has no n_tok to emit — silently derive rather than
-    # failing deep in the UDF with an opaque NoneType error
-    with_n_tok = with_n_tok and any(k == "int_list" for _, k in specs)
     out_spark_schema = _decoded_spark_schema(specs, with_n_tok)
     fn = _make_decode_fn(specs, with_n_tok, verify_checksums,
                          global_dict=global_dict)

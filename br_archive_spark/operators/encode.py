@@ -782,6 +782,58 @@ def _key_bounds(tbl: pa.Table, specs: list[tuple[str, str]],
     return (name, mm["min"].as_py() or "", mm["max"].as_py() or "")
 
 
+def _build_chunk(tbl: pa.Table, specs: list[tuple[str, str]],
+                 key: str | None,
+                 codecs: tuple[str, ...] | None = None,
+                 str_codecs: tuple[str, ...] | None = None,
+                 global_dict=None, bloom: bool = True) -> dict:
+    """The one chunk writer: encode every ``specs`` column of ``tbl``
+    and return a manifest row's content fields — entries, stats lanes,
+    sizes, checksum and the ``key`` zone map with its bloom. Fresh
+    encodes add the chunk's identity fields; copy-on-write rewrites
+    (operators/evolve.py) keep the identity of the chunk they replace.
+    """
+    entries = []
+    stats = []
+    key_bounds = _key_bounds(tbl, specs, key)
+    for name, kind in specs:
+        data, validity = _extract(tbl, name, kind)
+        entries.append(encode_column(
+            name, kind, data, codecs, str_codecs,
+            gdict=global_dict, validity=validity))
+        # the key zone-map column already gets key_bloom — don't store
+        # the same membership filter twice (lookup_values consults
+        # key_bloom for that column)
+        stats.append(_entry_stats(
+            kind, data, validity,
+            bloom=bloom and name != key_bounds[0], sketch=bloom))
+    key_bloom = None
+    if bloom and key_bounds[0]:
+        from .bloom import build_bloom
+
+        kblob, koffs = _extract(tbl, key_bounds[0], "string")[0]
+        key_bloom = build_bloom(kblob, koffs)
+    return {
+        "n_rows": tbl.num_rows,
+        "n_values": _n_values(tbl, specs),
+        "orig_bytes": sum(e["orig_bytes"] for e in entries),
+        "enc_bytes": sum(e["enc_bytes"] for e in entries),
+        # cover params too: codec tags, offsets streams, and the
+        # null-validity bitmaps all live there — a flipped mask bit
+        # must fail verification just like a flipped payload byte
+        "checksum": chunk_checksum(
+            *[b for e in entries for b in (e["params"], e["payload"])]),
+        "checksum_algo": CHECKSUM_ALGO,
+        "columns": entries,
+        "column_stats": [_stats_row(e, st)
+                         for e, st in zip(entries, stats)],
+        "key_col": key_bounds[0],
+        "key_min": key_bounds[1],
+        "key_max": key_bounds[2],
+        "key_bloom": key_bloom,
+    }
+
+
 def _make_encode_fn(specs: list[tuple[str, str]], target_values: int,
                     snapshot_id: str, codecs: tuple[str, ...] | None,
                     part_from_task: bool = False,
@@ -813,33 +865,6 @@ def _make_encode_fn(specs: list[tuple[str, str]], target_values: int,
             pending_vals.pop(key)
             idx = chunk_counters.get(key, 0)
             chunk_counters[key] = idx + 1
-            entries = []
-            stats = []
-            key_bounds = _key_bounds(tbl, specs, key_col)
-            for name, kind in specs:
-                data, validity = _extract(tbl, name, kind)
-                entries.append(encode_column(
-                    name, kind, data, codecs, str_codecs,
-                    gdict=global_dict, validity=validity))
-                # the key zone-map column already gets key_bloom —
-                # don't store the same membership filter twice
-                # (lookup_values consults key_bloom for that column)
-                stats.append(_entry_stats(
-                    kind, data, validity,
-                    bloom=bloom and name != key_bounds[0],
-                    sketch=bloom))
-            key_bloom = None
-            if bloom and key_bounds[0]:
-                from .bloom import build_bloom
-
-                kblob, koffs = _extract(
-                    tbl, key_bounds[0], "string")[0]
-                key_bloom = build_bloom(kblob, koffs)
-            # cover params too: codec tags, offsets streams, and the
-            # null-validity bitmaps all live there — a flipped mask bit
-            # must fail verification just like a flipped payload byte
-            checksum = chunk_checksum(
-                *[b for e in entries for b in (e["params"], e["payload"])])
             if infile:
                 # file-content-addressed id: stable across resumed runs.
                 # 64-bit sha256 prefix: a 32-bit hash birthday-collides
@@ -854,19 +879,8 @@ def _make_encode_fn(specs: list[tuple[str, str]], target_values: int,
                 "chunk_idx": idx,
                 "snapshot_id": snapshot_id,
                 "input_file": infile,
-                "n_rows": tbl.num_rows,
-                "n_values": _n_values(tbl, specs),
-                "orig_bytes": sum(e["orig_bytes"] for e in entries),
-                "enc_bytes": sum(e["enc_bytes"] for e in entries),
-                "checksum": checksum,
-                "checksum_algo": CHECKSUM_ALGO,
-                "columns": entries,
-                "column_stats": [_stats_row(e, st)
-                                 for e, st in zip(entries, stats)],
-                "key_col": key_bounds[0],
-                "key_min": key_bounds[1],
-                "key_max": key_bounds[2],
-                "key_bloom": key_bloom,
+                **_build_chunk(tbl, specs, key_col, codecs, str_codecs,
+                               global_dict, bloom),
             }
             return pa.RecordBatch.from_pylist([row], schema=MANIFEST_SCHEMA)
 

@@ -1,19 +1,31 @@
-"""Schema evolution on encoded manifests — without re-encoding.
+"""Schema evolution and row deletes on encoded manifests — chunk by
+chunk, never re-encoding a chunk no row of which changes.
 
 Each chunk stores its columns as independently-coded entries, so a
 column can be dropped by rewriting only manifest metadata plus the
-chunk checksum (never touching the surviving payloads' bits), and
-renamed without touching payloads at all. This is the lakehouse
-DROP/RENAME COLUMN analog the reference cannot express (its archive
-entries are whole files — ``src/io/lib_bra_io_file_meta_entries.c`` —
-so removing a member means rewriting the archive); chunk-granular
-entries make it an O(metadata) rewrite here.
+chunk checksum (never touching the surviving payloads' bits), renamed
+without touching payloads at all, and added by encoding only the new
+entry. This is the lakehouse DROP/RENAME/ADD COLUMN analog the
+reference cannot express (its archive entries are whole files —
+``src/io/lib_bra_io_file_meta_entries.c`` — so removing a member means
+rewriting the archive); chunk-granular entries make it an O(metadata)
+rewrite here.
 
-Scale shape: ``drop_columns`` is one ``mapInArrow`` pass over the
-manifest — embarrassingly parallel, no shuffle, output partitioning
-identical to the input. ``rename_column`` is pure JVM expression work
-(names live outside the checksum domain, which covers params+payload
-bytes only).
+Row deletes (``delete_rows``, ``delete_where``, and the delete half of
+``upsert_rows``) run on one copy-on-write engine, :func:`_cow_delete`:
+the zone maps pass provably-untouched chunks through with no decode,
+one entry decode classifies the rest, and a chunk that loses some rows
+is rebuilt by :func:`_rewrite_masked` through ``encode._build_chunk`` —
+the same chunk writer a fresh encode uses, so a rewritten chunk equals
+a fresh default-option encode of its surviving rows. The join-form delete
+(:func:`_delete_rows_join`) finds its hits with a key join instead and
+reuses the same rewrite.
+
+Scale shape: ``drop_columns`` and the zone-map-driven deletes are
+``mapInArrow`` passes over the manifest — chunk-parallel, no shuffle;
+``add_column`` and the join-form delete add one key join.
+``rename_column`` is pure JVM expression work (names live outside the
+checksum domain, which covers params+payload bytes only).
 """
 
 from __future__ import annotations
@@ -25,7 +37,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum, crc32c_fast
+from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
 
 __all__ = ["drop_columns", "rename_column", "add_column",
            "delete_rows", "delete_where", "upsert_rows"]
@@ -144,21 +156,11 @@ def drop_columns(encoded: DataFrame, cols: list[str]) -> DataFrame:
                 cs = np.concatenate([[0], np.cumsum(v)])
                 return cs[new_offs[1:]] - cs[new_offs[:-1]]
 
-            pviews = _binary_views(new_flat.field("params"))
-            bviews = _binary_views(new_flat.field("payload"))
-            checks = np.empty(n, dtype=np.int64)
-            for i in range(n):
-                c = 0
-                for j in range(new_offs[i], new_offs[i + 1]):
-                    c = crc32c_fast(pviews[j], c)
-                    c = crc32c_fast(bviews[j], c)
-                checks[i] = c
-
             repl = {
                 "columns": new_cols,
                 "orig_bytes": pa.array(row_sums("orig_bytes")),
                 "enc_bytes": pa.array(row_sums("enc_bytes")),
-                "checksum": pa.array(checks),
+                "checksum": _checksums(new_flat, new_offs),
                 "checksum_algo": pa.array([CHECKSUM_ALGO] * n),
             }
             if "column_stats" in names:
@@ -196,6 +198,22 @@ def drop_columns(encoded: DataFrame, cols: list[str]) -> DataFrame:
     # emit the INPUT's own schema: manifests may carry extra columns
     # (e.g. the `input_file` lineage column) that must survive a drop
     return encoded.mapInArrow(fn, encoded.schema)
+
+
+def _checksums(flat, offs, extra=None) -> pa.Array:
+    """Per row, the chunk checksum over entries ``flat[offs[i]:
+    offs[i+1]]`` (then ``extra[i]``'s, when given) — params and payload
+    folded through ``chunk_checksum`` as zero-copy views."""
+    pviews = _binary_views(flat.field("params"))
+    bviews = _binary_views(flat.field("payload"))
+    out = []
+    for i in range(len(offs) - 1):
+        parts = [v for j in range(int(offs[i]), int(offs[i + 1]))
+                 for v in (pviews[j], bviews[j])]
+        if extra is not None:
+            parts += [extra[i]["params"], extra[i]["payload"]]
+        out.append(chunk_checksum(*parts))
+    return pa.array(out, pa.int64())
 
 
 def _entry_dicts_for(batch: pa.RecordBatch, want: str):
@@ -298,8 +316,6 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
     caught as a per-chunk length mismatch (clear error, not silent
     corruption).
     """
-    from pyspark.sql import functions as F
-
     from .chunk import encode_column
     from .decode import _arrow_type, manifest_specs
     from .encode import _entry_stats, _extract, _stats_row
@@ -332,8 +348,7 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
     atype = _arrow_type(kind)
     out_schema = joined.drop("_vals").schema
 
-    def _append_list(arr, new_flat, offs, perm_offs, perm,
-                     null_mask=None):
+    def _append_list(arr, new_flat, null_mask=None):
         """Per row: the old elements then one appended element —
         concat + take, buffer-level, cast back to the input type.
         ``null_mask`` re-applies the source rows' validity so a NULL
@@ -341,6 +356,7 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
         materializing as a one-entry list."""
         import numpy as np
 
+        perm_offs, perm = _append_perm(arr)
         combo = pa.concat_arrays(
             [arr.flatten().combine_chunks()
              if isinstance(arr.flatten(), pa.ChunkedArray)
@@ -389,34 +405,9 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
                 stats_rows.append(
                     _stats_row(e, _entry_stats(kind, data, validity)))
 
-            # interleave: row i = old entries, then its new entry
-            total_old = int(offs[-1])
-            perm = np.empty(total_old + n, dtype=np.int64)
-            perm_offs = np.empty(n + 1, dtype=np.int64)
-            perm_offs[0] = pos = 0
-            for i in range(n):
-                a, b = int(offs[i]), int(offs[i + 1])
-                perm[pos:pos + b - a] = np.arange(a, b)
-                perm[pos + b - a] = total_old + i
-                pos += b - a + 1
-                perm_offs[i + 1] = pos
-
-            new_entries = pa.array(
-                entries, type=flat.type)
-            repl = {"columns": _append_list(cols_arr, new_entries,
-                                            offs, perm_offs, perm)}
-
-            pviews = _binary_views(flat.field("params"))
-            bviews = _binary_views(flat.field("payload"))
-            checks = np.empty(n, dtype=np.int64)
-            for i in range(n):
-                c = 0
-                for j in range(int(offs[i]), int(offs[i + 1])):
-                    c = crc32c_fast(pviews[j], c)
-                    c = crc32c_fast(bviews[j], c)
-                c = crc32c_fast(entries[i]["params"], c)
-                c = crc32c_fast(entries[i]["payload"], c)
-                checks[i] = c
+            new_entries = pa.array(entries, type=flat.type)
+            repl = {"columns": _append_list(cols_arr, new_entries),
+                    "checksum": _checksums(flat, offs, entries)}
             add_ob = np.asarray([e["orig_bytes"] for e in entries],
                                 dtype=np.int64)
             add_eb = np.asarray([e["enc_bytes"] for e in entries],
@@ -427,14 +418,13 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
             repl["enc_bytes"] = pa.array(np.asarray(
                 batch.column(names.index("enc_bytes")),
                 dtype=np.int64) + add_eb)
-            repl["checksum"] = pa.array(checks)
             repl["checksum_algo"] = pa.array([CHECKSUM_ALGO] * n)
             if "column_stats" in names:
                 st_arr = batch.column(names.index("column_stats"))
                 new_stats = pa.array(
                     stats_rows, type=st_arr.type.value_type)
                 repl["column_stats"] = _append_list(
-                    st_arr, new_stats, *_stats_perm(st_arr, n),
+                    st_arr, new_stats,
                     null_mask=np.asarray(pc.is_null(st_arr)))
             arrays = [repl.get(f, batch.column(i))
                       for i, f in enumerate(names) if f != "_vals"]
@@ -445,24 +435,25 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
     return joined.mapInArrow(fn, out_schema)
 
 
-def _stats_perm(st_arr, n):
-    """(offsets, perm_offs, perm) interleaving each row's stats with
-    its appended entry (stats counts can differ from entry counts on
-    exotic manifests, so they get their own permutation)."""
+def _append_perm(arr: pa.Array):
+    """``(perm_offs, perm)`` appending one element per row of list
+    array ``arr``: taking ``perm`` from ``concat(arr.flatten(), new)``
+    gives row ``i`` its old elements then ``new[i]``, and ``perm_offs``
+    are the rows' offsets into the result. Each list (entries, stats)
+    gets its own permutation — their counts can differ on exotic
+    manifests."""
     import numpy as np
 
-    offs, _flat = _list_parts(st_arr)
-    total = int(offs[-1])
+    offs, _flat = _list_parts(arr)
+    total, n = int(offs[-1]), len(offs) - 1
+    perm_offs = offs + np.arange(n + 1)
     perm = np.empty(total + n, dtype=np.int64)
-    perm_offs = np.empty(n + 1, dtype=np.int64)
-    perm_offs[0] = pos = 0
-    for i in range(n):
-        a, b = int(offs[i]), int(offs[i + 1])
-        perm[pos:pos + b - a] = np.arange(a, b)
-        perm[pos + b - a] = total + i
-        pos += b - a + 1
-        perm_offs[i + 1] = pos
-    return offs, perm_offs, perm
+    new_pos = perm_offs[1:] - 1
+    old_pos = np.ones(total + n, dtype=bool)
+    old_pos[new_pos] = False
+    perm[old_pos] = np.arange(total)
+    perm[new_pos] = total + np.arange(n)
+    return perm_offs, perm
 
 
 def _chunk_specs(row: dict, known: dict[str, str]) -> list[tuple[str, str]]:
@@ -495,8 +486,8 @@ def delete_rows(encoded: DataFrame, keys: "list[str] | DataFrame",
     COW analog, at chunk rather than file granularity).
 
     Only chunks whose key zone map CAN contain a deleted key are
-    rewritten (decode → filter → re-encode through the normal codec
-    path, fresh stats/bounds/checksum); every other chunk passes
+    rewritten (:func:`_cow_delete`: decode → filter → the chunk writer
+    fresh encodes use); every other chunk passes
     through byte-identical with no decode — at 100 TB a point delete
     touches O(matching chunks), the same pruning contract as
     ``lookup_docs``. A zone-map false positive (chunk in key range but
@@ -507,7 +498,9 @@ def delete_rows(encoded: DataFrame, keys: "list[str] | DataFrame",
     pre-r3 manifest) conservatively rewrite-check — never skip.
 
     ``key`` must be a string-kind column (the zone-map domain, same as
-    ``lookup_docs``). Re-encoded chunks keep their ``chunk_id``; under
+    ``lookup_docs``). Re-encoded chunks keep their ``chunk_id`` and
+    their zone-map column (``key_col``: a delete by another string
+    column does not move the zone map onto it); under
     ``mode="hash"`` content-addressing the id no longer equals the
     content hash (documented in plans/lineage: resume is refused for
     content-addressed manifests after in-place edits).
@@ -516,12 +509,11 @@ def delete_rows(encoded: DataFrame, keys: "list[str] | DataFrame",
     in the task closure) or a DataFrame of keys (large batches: fully
     distributed — see :func:`_delete_rows_join`).
     """
-    from pyspark.sql import functions as F
+    import numpy as np
 
     import pyarrow.compute as pc
 
-    from .chunk import decode_column
-    from .decode import _rebuild, manifest_specs
+    from .decode import _key_may_hold, _rebuild, manifest_specs
 
     specs = specs or manifest_specs(encoded)
     known = dict(specs)
@@ -535,53 +527,62 @@ def delete_rows(encoded: DataFrame, keys: "list[str] | DataFrame",
         return _delete_rows_join(encoded, keys, key, known, global_dict)
     if not keys:
         return encoded
-    lo, hi = min(keys), max(keys)
-    if "key_col" in encoded.columns:
-        cand = (F.col("key_col").isNull() | (F.col("key_col") != key)
-                | ((F.col("key_min") <= hi) & (F.col("key_max") >= lo)))
-    else:
-        cand = F.lit(True)
-    untouched = encoded.where(~cand)
-    touched = encoded.where(cand)
     key_set = sorted(set(keys))
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
+    def deleted(data, validity, n_rows):
+        karr = _rebuild("string", data, n_rows, validity)
+        # NULL key = not deleted
+        return np.asarray(pc.fill_null(pc.is_in(
+            karr, value_set=pa.array(key_set, karr.type)), False))
 
+    return _cow_delete(
+        encoded, _key_may_hold(encoded, key, min(keys), max(keys)), key,
+        deleted, known, global_dict)
+
+
+def _cow_delete(encoded: DataFrame, may_hit, column: str, deleted,
+                known: dict[str, str], global_dict) -> DataFrame:
+    """The copy-on-write engine behind :func:`delete_rows` and
+    :func:`delete_where`. Chunks where the ``may_hit`` predicate is
+    false pass through with no decode. The rest decode ONLY
+    ``column``'s entry (zero-copy views, other payloads untouched) and
+    ask ``deleted(data, validity, n_rows)`` for a bool mask of the rows
+    to delete: no hit passes the chunk through as a pure Arrow filter
+    (a zone-map false positive), all hit drops it, and a partial hit
+    rewrites it through :func:`_rewrite_masked`."""
+    import numpy as np
+
+    from .chunk import decode_column
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
             nra = batch.column(batch.schema.names.index("n_rows"))
-            # disposition from the KEY entry alone (zero-copy views;
-            # other payloads untouched): false positives pass through
-            # as pure Arrow filter — no Python round-trip at all
             pass_through = np.zeros(n, dtype=bool)
             partial: dict[int, object] = {}
-            for i, kentry in _entry_dicts_for(batch, key):
+            for i, entry in _entry_dicts_for(batch, column):
                 nr = nra[i].as_py()
-                kdata, kvalid = decode_column(kentry, gdict=global_dict)
-                karr = _rebuild("string", kdata, nr, kvalid)
-                mask = pc.fill_null(pc.invert(pc.is_in(
-                    karr, value_set=pa.array(key_set, karr.type))),
-                    True)   # NULL key = not-deleted
-                n_keep = pc.sum(mask).as_py() or 0
-                if n_keep == nr:
+                data, validity = decode_column(entry, gdict=global_dict)
+                gone = deleted(data, validity, nr)
+                n_del = int(gone.sum())
+                if n_del == 0:
                     pass_through[i] = True
-                elif n_keep > 0:
-                    partial[i] = mask
-                # n_keep == 0: whole chunk deleted — emit nothing
+                elif n_del < nr:
+                    partial[i] = pa.array(~gone)
             if pass_through.any():
                 yield batch.filter(pa.array(pass_through))
             if partial:
                 rows = _row_dicts_with_views(batch, sorted(partial))
-                out = [_rewrite_masked(row, partial[i], known, key,
+                out = [_rewrite_masked(row, partial[i], known, column,
                                        global_dict)
                        for i, row in rows]
                 yield pa.RecordBatch.from_pylist(out,
                                                  schema=batch.schema)
 
-    return untouched.unionByName(touched.mapInArrow(fn, encoded.schema))
+    return encoded.where(~may_hit).unionByName(
+        encoded.where(may_hit).mapInArrow(fn, encoded.schema))
 
 
 def _row_dicts_with_views(batch: pa.RecordBatch, idxs):
@@ -614,53 +615,27 @@ def _rewrite_masked(row: dict, mask, known: dict[str, str], key: str,
                     global_dict) -> dict:
     """Rewrite one chunk keeping the ``mask``-true rows: decode every
     entry (the chunk's OWN entry list — see :func:`_chunk_specs`),
-    filter, re-encode through the normal codec path, refresh stats /
-    zone bounds / bloom / checksum. Mutates and returns ``row``."""
-    from .bloom import build_bloom
-    from .chunk import decode_column, encode_column
+    filter, and rebuild through ``encode._build_chunk``, the writer
+    fresh encodes use. The chunk keeps its own zone-map column (``key``
+    only where it has none) and a null ``column_stats`` stays null.
+    Mutates and returns ``row``."""
+    from .chunk import decode_column
     from .decode import _rebuild
-    from .encode import (_entry_stats, _extract, _key_bounds,
-                         _n_values, _stats_row)
+    from .encode import _build_chunk
 
     specs = _chunk_specs(row, known)
     entries = {e["name"]: e for e in row["columns"]}
     cols = {}
     for name, kind in specs:
         data, validity = decode_column(entries[name], gdict=global_dict)
-        arr = _rebuild(kind, data, row["n_rows"], validity)
-        cols[name] = arr.filter(mask)
-    tbl = pa.table(cols)
-    new_entries, new_stats = [], []
-    kb = _key_bounds(tbl, specs, key)
-    for name, kind in specs:
-        data, validity = _extract(tbl, name, kind)
-        e = encode_column(name, kind, data, gdict=global_dict,
-                          validity=validity)
-        new_entries.append(e)
-        # mirror encode: the key zone-map column's membership filter
-        # is key_bloom (refreshed below), never a column bloom
-        new_stats.append(_stats_row(
-            e, _entry_stats(kind, data, validity,
-                            bloom=name != kb[0], sketch=True)))
-    row["columns"] = new_entries
-    if row.get("column_stats") is not None:
-        row["column_stats"] = new_stats
-    row["n_rows"] = tbl.num_rows
-    row["n_values"] = _n_values(tbl, specs)
-    row["orig_bytes"] = sum(e["orig_bytes"] for e in new_entries)
-    row["enc_bytes"] = sum(e["enc_bytes"] for e in new_entries)
-    row["checksum"] = chunk_checksum(
-        *[b for e in new_entries for b in (e["params"], e["payload"])])
-    row["checksum_algo"] = CHECKSUM_ALGO
-    row["key_col"], row["key_min"], row["key_max"] = kb
-    if "key_bloom" in row:
-        # refresh membership alongside the bounds — a stale bloom is
-        # only over-approximate (it still contains deleted keys) but
-        # must track the chunk
-        row["key_bloom"] = None
-        if kb[0]:
-            kblob, koffs = _extract(tbl, kb[0], "string")[0]
-            row["key_bloom"] = build_bloom(kblob, koffs)
+        cols[name] = _rebuild(kind, data, row["n_rows"],
+                              validity).filter(mask)
+    had_stats = row.get("column_stats") is not None
+    row.update(_build_chunk(pa.table(cols), specs,
+                            row.get("key_col") or key,
+                            global_dict=global_dict))
+    if not had_stats:
+        row["column_stats"] = None
     return row
 
 
@@ -680,7 +655,7 @@ def _delete_rows_join(encoded: DataFrame, keys_df: DataFrame, key: str,
     task's closure and ran two driver-side actions per batch)."""
     import numpy as np
 
-    from pyspark.sql import functions as F
+    from .decode import _key_may_hold
 
     kdf = keys_df.select(
         F.col(key if key in keys_df.columns
@@ -689,12 +664,7 @@ def _delete_rows_join(encoded: DataFrame, keys_df: DataFrame, key: str,
     b = kdf.agg(F.min("k").alias("lo"), F.max("k").alias("hi")).first()
     if b["lo"] is None:
         return encoded                  # empty key set
-    lo, hi = b["lo"], b["hi"]
-    if "key_col" in encoded.columns:
-        cand = (F.col("key_col").isNull() | (F.col("key_col") != key)
-                | ((F.col("key_min") <= hi) & (F.col("key_max") >= lo)))
-    else:
-        cand = F.lit(True)
+    cand = _key_may_hold(encoded, key, b["lo"], b["hi"])
     untouched = encoded.where(~cand)
     # freeze ONE evaluation of the candidate set: the hit probe joins
     # back to the candidates on chunk_id, and scan-mode ids embed the
@@ -771,8 +741,6 @@ def upsert_rows(encoded: DataFrame, rows: DataFrame,
 
     import hashlib
 
-    from pyspark.sql import functions as F
-
     n = rows.count()
     if n <= join_threshold:
         keys = [r[0] for r in rows.select(key).distinct().collect()]
@@ -808,8 +776,6 @@ def upsert_rows(encoded: DataFrame, rows: DataFrame,
         "chunk_id", F.concat(F.lit(snap + ":"), F.col("chunk_id")))
     missing = set(remaining.columns) - set(fresh.columns)
     if missing:
-        from pyspark.sql import functions as F
-
         for m in missing:    # lineage columns absent on fresh encodes
             fresh = fresh.withColumn(
                 m, F.lit(None).cast(remaining.schema[m].dataType))
@@ -864,19 +830,17 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
     prove no overlap pass through byte-identical with no decode;
     overlapping chunks decode ONLY the predicate column to classify
     rows; chunks entirely inside the band vanish; partially-matching
-    chunks rewrite copy-on-write through the normal codec path
-    (:func:`_rewrite_masked` — fresh stats/bounds/bloom/checksum).
+    chunks rewrite copy-on-write (:func:`_cow_delete`).
     NULL and NaN values never match a finite band (SQL semantics) and
     are kept. ``lo``/``hi`` are codec-lane ints for int-backed kinds
     (days/micros/unscaled — same units as ``scan_range``) or raw
     doubles for ``float``; list kinds have no scalar row predicate
     and are rejected.
     """
+    import math
+
     import numpy as np
 
-    import pyarrow.compute as pc  # noqa: F401  (parity with delete_rows)
-
-    from .chunk import decode_column
     from .decode import (_fstats_disjoint, _has_lane, _stats_disjoint,
                          manifest_specs)
     from .encode import _float_kind, _int_kind
@@ -888,8 +852,6 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
         raise ValueError(f"delete_where: {column!r} not in specs")
     is_float = kind == "float"
     if is_float:
-        import math
-
         lo, hi = float(lo), float(hi)
         if math.isnan(lo) or math.isnan(hi):
             raise ValueError("delete_where: NaN bound — a NaN band "
@@ -897,8 +859,6 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
         have_stats = _has_lane(encoded, "fmin")
         disjoint = _fstats_disjoint(column, lo, hi)
     elif _int_kind(kind) and kind != "int_list":
-        import math
-
         # snap INWARD so the effective integer band is always
         # contained in the requested band — int() truncates toward
         # zero, which WIDENS a negative fractional bound (hi=-3.7 ->
@@ -912,45 +872,14 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
         raise ValueError(
             f"delete_where: column {column!r} (kind {kind!r}) carries "
             f"no scalar numeric zone map{hint}")
-    if have_stats:
-        untouched = encoded.where(disjoint)
-        touched = encoded.where(~disjoint)
-    else:
-        untouched = encoded.where(F.lit(False))
-        touched = encoded
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            nra = batch.column(batch.schema.names.index("n_rows"))
-            pass_through = np.zeros(n, dtype=bool)
-            partial: dict[int, object] = {}
-            for i, entry in _entry_dicts_for(batch, column):
-                nr = nra[i].as_py()
-                data, validity = decode_column(entry,
-                                               gdict=global_dict)
-                vals = np.asarray(data, dtype=np.float64) if is_float \
-                    else np.asarray(data, dtype=np.int64)
-                matched = (vals >= lo) & (vals <= hi)
-                if validity is not None and validity[0] is not None:
-                    matched &= validity[0]   # NULL rows never match
-                n_del = int(matched.sum())
-                if n_del == 0:
-                    pass_through[i] = True   # zone false positive
-                elif n_del < nr:
-                    partial[i] = pa.array(~matched)
-                # n_del == nr: whole chunk deleted
-            if pass_through.any():
-                yield batch.filter(pa.array(pass_through))
-            if partial:
-                rows = _row_dicts_with_views(batch, sorted(partial))
-                out = [_rewrite_masked(row, partial[i], known,
-                                       row.get("key_col") or column,
-                                       global_dict)
-                       for i, row in rows]
-                yield pa.RecordBatch.from_pylist(out,
-                                                 schema=batch.schema)
+    def deleted(data, validity, n_rows):
+        vals = np.asarray(data, dtype=np.float64 if is_float
+                          else np.int64)
+        hit = (vals >= lo) & (vals <= hi)
+        if validity is not None and validity[0] is not None:
+            hit &= validity[0]           # NULL rows never match
+        return hit
 
-    return untouched.unionByName(touched.mapInArrow(fn, encoded.schema))
+    return _cow_delete(encoded, ~disjoint if have_stats else F.lit(True),
+                       column, deleted, known, global_dict)

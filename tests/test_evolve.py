@@ -571,6 +571,14 @@ def test_null_column_stats_stay_null(spark, encoded):
     dec = decode_table(added, specs=specs + [("s2", "int")],
                        with_n_tok=False, verify_checksums=True)
     assert dec.count() == src.count()
+
+    # a copy-on-write rewrite keeps a NULL column_stats NULL too
+    from br_archive_spark.operators import delete_rows
+
+    deleted = delete_rows(nulled, [str(i) for i in range(0, 2000, 7)],
+                          key="doc_id", specs=specs)
+    for r in deleted.select("chunk_id", "column_stats").collect():
+        assert (r["column_stats"] is None) == (r["chunk_id"] in null_ids)
     nulled.unpersist()
 
 
@@ -599,4 +607,82 @@ def test_delete_where_fractional_bounds_contained(spark):
     noop = delete_where(enc, "v", 2.2, 2.8, specs=specs)
     dec2 = decode_table(noop, specs=specs, with_n_tok=False)
     assert sorted(r["v"] for r in dec2.collect()) == list(range(-10, 11))
+    enc.unpersist()
+
+
+def test_delete_keeps_the_zone_map_key(spark, encoded):
+    """A delete by a string column other than the zone-map key leaves
+    every chunk's ``key_col`` on the encode's key; rewritten chunks'
+    bounds describe that key's surviving values."""
+    from br_archive_spark.operators import delete_rows
+
+    _src, specs, enc = encoded
+    before = {r["chunk_id"]: r["checksum"]
+              for r in enc.select("chunk_id", "checksum").collect()}
+    out = delete_rows(enc, ["txt-5", "txt-1500"], key="text",
+                      specs=specs).cache()
+    rows = out.collect()
+    assert {r["key_col"] for r in rows} == {"doc_id"}
+    rewritten = [r for r in rows if r["checksum"] != before[r["chunk_id"]]]
+    assert len(rewritten) == 2
+    for r in rewritten:
+        ids = [d["doc_id"] for d in decode_table(
+            out.where(F.col("chunk_id") == r["chunk_id"]), specs=specs,
+            with_n_tok=False).collect()]
+        assert (r["key_min"], r["key_max"]) == (min(ids), max(ids))
+    out.unpersist()
+
+
+def _fresh_encode_of(spark, man, chunk_id, specs, key):
+    """The manifest row a fresh single-chunk ``encode_table`` writes
+    for ``chunk_id``'s rows, in their stored order."""
+    dec = decode_table(man.where(F.col("chunk_id") == chunk_id),
+                       specs=specs, with_n_tok=False)
+    one = spark.createDataFrame(dec.collect(), dec.schema).coalesce(1)
+    (fresh,) = encode_table(one, specs=specs, key=key,
+                            target_values=1 << 30).collect()
+    return fresh
+
+
+def test_cow_rewrite_equals_fresh_encode(spark):
+    """Fresh encodes and copy-on-write rewrites share one chunk
+    writer: every chunk that delete_where or delete_rows rewrites
+    equals a fresh single-chunk encode_table of its surviving rows in
+    entries, stats, zone map, key bloom and checksum — also when the
+    delete's key is not the zone-map key."""
+    from br_archive_spark.operators import delete_rows, delete_where
+
+    df = spark.range(1200).select(
+        F.format_string("doc-%05d", "id").alias("doc_id"),
+        F.when(F.col("id") % 11 == 0, None)
+        .otherwise(F.concat(F.lit("s"), (F.col("id") % 7).cast("string")))
+        .alias("src"),
+        F.col("id").alias("v"),
+        F.when(F.col("id") % 13 == 0, None)
+        .otherwise(F.col("id") / 7.0).alias("f"))
+    specs = infer_specs(df)
+    enc = encode_table(df, specs=specs, mode="range", key="doc_id",
+                       num_parts=3, target_values=800).cache()
+    before = {r["chunk_id"]: r["checksum"]
+              for r in enc.select("chunk_id", "checksum").collect()}
+    outs = {
+        "delete_where": delete_where(enc, "v", 150, 450, specs=specs),
+        "delete_rows": delete_rows(enc, ["doc-00010", "doc-00777"],
+                                   specs=specs),
+        "delete_rows by src": delete_rows(enc, ["s3"], key="src",
+                                          specs=specs),
+    }
+    fields = ("columns", "column_stats", "key_col", "key_min", "key_max",
+              "key_bloom", "checksum")
+    for op, out in outs.items():
+        out = out.cache()
+        rewritten = [r for r in out.collect()
+                     if r["checksum"] != before[r["chunk_id"]]]
+        assert rewritten, op
+        for r in rewritten:
+            fresh = _fresh_encode_of(spark, out, r["chunk_id"], specs,
+                                     "doc_id")
+            for f in fields:
+                assert r[f] == fresh[f], (op, r["chunk_id"], f)
+        out.unpersist()
     enc.unpersist()

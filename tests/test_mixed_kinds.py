@@ -70,8 +70,8 @@ def dirs(tmp_path):
     shutil.rmtree(tmp_path, ignore_errors=True)
 
 
-def _assert_tables_equal(a: DataFrame, b: DataFrame):
-    cols = [n for n, _ in MIXED_SPECS]
+def _assert_tables_equal(a: DataFrame, b: DataFrame, specs=MIXED_SPECS):
+    cols = [n for n, _ in specs]
     assert a.select(cols).exceptAll(b.select(cols)).count() == 0
     assert b.select(cols).exceptAll(a.select(cols)).count() == 0
     assert a.count() == b.count()
@@ -169,6 +169,72 @@ def test_decode_table_without_int_list_derives_n_tok(spark):
     got = dec.select("doc_id", "ts")
     assert df.exceptAll(got).count() == 0
     assert got.exceptAll(df).count() == 0
+
+
+def test_decode_files_without_int_list_derives_n_tok(spark, dirs):
+    """decode_files derives the n_tok flag the way decode_table does:
+    a table with no int_list column decodes under the default
+    with_n_tok=True, returned and written in-process."""
+    from br_archive_spark.operators import encode_table
+
+    _, man_dir, out_dir = dirs
+    df = spark.range(800).select(
+        F.format_string("d%04d", "id").alias("doc_id"),
+        (F.col("id") * 7 - 100).alias("v"),
+        F.when(F.col("id") % 9 == 0, None)
+        .otherwise(F.col("id") / 3.0).alias("f"))
+    specs = [("doc_id", "string"), ("v", "int"), ("f", "float")]
+    encode_table(df, specs=specs, num_parts=2, target_values=900) \
+        .write.parquet(man_dir)
+
+    dec = decode_files(spark, man_dir, specs=specs)
+    assert dec.columns == ["doc_id", "v", "f"]
+    _assert_tables_equal(df, dec, specs)
+    decode_files(spark, man_dir, specs=specs, output_dir=out_dir).collect()
+    _assert_tables_equal(df, spark.read.parquet(out_dir), specs)
+
+
+@pytest.mark.parametrize("mode", ["direct", "spark"])
+def test_cli_decode_reads_specs_from_manifest(spark, dirs, mode):
+    """CLI ``decode`` (both modes) decodes a manifest with no token
+    column by the specs the manifest records, not the token specs."""
+    import json
+    from argparse import Namespace
+
+    from br_archive_spark.cli import cmd_decode
+    from br_archive_spark.operators import encode_files
+
+    src_dir, man_dir, out_dir = dirs
+    specs = [s for s in MIXED_SPECS if s[0] != "tokens"]
+    src = mixed_table(spark, 900).drop("tokens").cache()
+    src.repartition(2).write.parquet(src_dir)
+    encode_files(spark, src_dir, specs=specs, output_dir=man_dir).collect()
+
+    args = Namespace(input=man_dir, output=out_dir, mode=mode, yes=True,
+                     global_dict=None, master="local[2]",
+                     shuffle_partitions=4)
+    assert cmd_decode(args) == 0
+    dec = spark.read.parquet(out_dir)
+    assert dec.columns == [n for n, _ in specs]
+    _assert_tables_equal(src, dec, specs)
+    src.unpersist()
+
+
+@pytest.mark.parametrize("kind,ddl", [
+    ("string", "string"), ("int_list", "array<int>"), ("int", "bigint"),
+    ("binary", "binary"), ("float_list", "array<float>"),
+    ("double_list", "array<double>"), ("float", "double"),
+    ("date", "date"), ("timestamp", "timestamp"), ("bool", "boolean"),
+    ("decimal(12,2)", "decimal(12,2)"), ("decimal(18,4)", "decimal(18,4)"),
+])
+def test_decoded_spark_schema_per_kind(kind, ddl):
+    """The decoded Spark type of every kind comes from its Arrow type
+    (one kind->type table); n_tok follows an int_list column only."""
+    from br_archive_spark.operators.decode import _decoded_spark_schema
+
+    assert _decoded_spark_schema([("c", kind)], False) == f"c {ddl}"
+    n_tok = ", n_tok int" if kind == "int_list" else ""
+    assert _decoded_spark_schema([("c", kind)], True) == f"c {ddl}{n_tok}"
 
 
 def test_decode_column_pruning_partial_specs(spark):
