@@ -388,7 +388,7 @@ def cmd_lookup(args) -> int:
     """Point lookups — the partial-extraction analog of `unbra <entry>`:
     zone-map chunk pruning, key-column decode, per-row value decode
     (fsst entries parse only the requested strings)."""
-    from .operators.decode import lookup_docs, lookup_range, lookup_rows
+    from .operators.decode import lookup_rows, manifest_specs, scan_where
 
     spark = _spark(args)
     man = spark.read.parquet(args.input)
@@ -397,8 +397,6 @@ def cmd_lookup(args) -> int:
         # value-membership lookup on any scalar int-backed or string
         # column (r5): zone map + column/key bloom pruning, then exact
         # residual — `lookup --column o_orderkey 42 4242`
-        from .operators.decode import lookup_values, manifest_specs
-
         specs = manifest_specs(man)
         kind = dict(specs).get(args.column)
         if kind == "string":
@@ -407,19 +405,18 @@ def cmd_lookup(args) -> int:
             vals = [bytes.fromhex(v) for v in ids]   # hex on the CLI
         else:
             vals = [int(v) for v in ids]
-        rows = lookup_values(man, args.column, vals, specs=specs,
-                             with_n_tok=False,
-                             global_dict=_load_gdict(args.global_dict)
-                             ).collect()
+        rows = scan_where(man, [], specs=specs, with_n_tok=False,
+                          global_dict=_load_gdict(args.global_dict),
+                          isin={args.column: vals}).collect()
         print(json.dumps({"found": len(rows), "column": args.column,
                           "rows": [r.asDict() for r in rows]},
                          default=str))
         return 0
     if getattr(args, "range", None):
         lo, hi = args.range
-        rows = lookup_range(man, lo, hi,
-                            global_dict=_load_gdict(args.global_dict)) \
-            .collect()
+        rows = scan_where(man, [("doc_id", lo, hi)],
+                          global_dict=_load_gdict(args.global_dict)
+                          ).collect()
         print(json.dumps({"found": len(rows), "range": [lo, hi],
                           "docs": {r["doc_id"]: {"n_tok": r["n_tok"]}
                                    for r in rows}}, default=str))
@@ -429,9 +426,9 @@ def cmd_lookup(args) -> int:
                            key=args.key).collect()
         out = {r[args.key]: r[args.value_col] for r in rows}
     else:
-        rows = lookup_docs(man, ids, key=args.key,
-                           global_dict=_load_gdict(args.global_dict)) \
-            .collect()
+        rows = scan_where(man, [], isin={args.key: ids},
+                          global_dict=_load_gdict(args.global_dict)
+                          ).collect()
         out = {r[args.key]: {"n_tok": r["n_tok"]} for r in rows}
     missing = sorted(set(ids) - set(out))
     print(json.dumps({"found": len(out), "requested": len(set(ids)),
@@ -447,7 +444,7 @@ def cmd_scan(args) -> int:
     per-chunk ``null_count`` lane instead (r5). Specs come from the
     manifest itself (``manifest_specs``); prints prune stats +
     matching rows."""
-    from .operators.decode import _scan_prune, manifest_specs, scan_where
+    from .operators.decode import manifest_specs, scan_estimate, scan_where
 
     spark = _spark(args)
     man = spark.read.parquet(args.input)
@@ -478,30 +475,27 @@ def cmd_scan(args) -> int:
         bands.append((args.column, lo, hi))
     null_cols = [args.column] if want_null else []
     not_null_cols = [args.column] if want_not_null else []
-    if getattr(args, "estimate", False):
-        # planner probe: cost + result-count bracket from the
-        # manifest alone, nothing decoded
-        from .operators.decode import scan_estimate
-
-        est = scan_estimate(man, bands, specs=specs, null_cols=null_cols,
-                            not_null_cols=not_null_cols)
+    estimate = getattr(args, "estimate", False)
+    if not estimate:
+        rows = scan_where(man, bands, specs=specs, with_n_tok=False,
+                          global_dict=_load_gdict(args.global_dict),
+                          null_cols=null_cols,
+                          not_null_cols=not_null_cols)
+    # planner probe: cost + result-count bracket from the manifest
+    # alone, nothing decoded — its kept chunks are the ones the scan
+    # decodes (run after scan_where validated the predicate)
+    est = scan_estimate(man, bands, specs=specs, null_cols=null_cols,
+                        not_null_cols=not_null_cols)
+    if estimate:
         est["column"] = args.column
         est["rows_bracket"] = list(est["rows_bracket"])
         print(json.dumps(est))
         return 0
-    rows = scan_where(man, bands, specs=specs, with_n_tok=False,
-                      global_dict=_load_gdict(args.global_dict),
-                      null_cols=null_cols, not_null_cols=not_null_cols)
-    # count the chunks the scan's own prune engine keeps (after
-    # scan_where validated the predicate)
-    total = man.count()
-    surviving = _scan_prune(man, dict(specs), bands, null_cols,
-                            not_null_cols, {}).count()
     n = rows.count()
     out = {"column": args.column, "lo": lo, "hi": hi,
            "null": bool(want_null), "not_null": bool(want_not_null),
-           "chunks_total": total, "chunks_decoded": surviving,
-           "rows": n}
+           "chunks_total": est["chunks_total"],
+           "chunks_decoded": est["chunks_kept"], "rows": n}
     if args.show:
         out["sample"] = [r.asDict() for r in rows.limit(args.show)
                          .collect()]

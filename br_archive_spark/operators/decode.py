@@ -20,6 +20,8 @@ the reference's trailing-CRC check on extract
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
+from operator import and_, or_
 
 import numpy as np
 import pyarrow as pa
@@ -203,28 +205,6 @@ def _make_decode_fn(specs: list[tuple[str, str]], with_n_tok: bool,
     return decode_fn
 
 
-def _key_may_hold(encoded: DataFrame, key: str, lo: str, hi: str):
-    """Predicate: the chunk MAY hold a ``key`` value in ``[lo, hi]`` —
-    the zone map proves otherwise ONLY where its bounds describe
-    ``key``. A chunk whose ``key_col`` differs or is unknown (pre-r3
-    manifest, a table with no string column, or NULL after
-    ``drop_columns`` of the zone-map key) is kept, never silently
-    filtered out (ADVICE r2 #1 — pruning on the wrong column's bounds
-    drops matching rows with no error). Without the isNull() arm both
-    sides of the OR are NULL and a WHERE drops the chunk (ADVICE r3
-    #2)."""
-    if "key_col" not in encoded.columns:
-        return F.lit(True)
-    return (F.col("key_col").isNull()
-            | (F.col("key_col") != key)
-            | ((F.col("key_min") <= hi) & (F.col("key_max") >= lo)))
-
-
-def _zone_prune(encoded: DataFrame, key: str, lo: str, hi: str) -> DataFrame:
-    """Prune chunks by the manifest zone map (:func:`_key_may_hold`)."""
-    return encoded.where(_key_may_hold(encoded, key, lo, hi))
-
-
 def _bloom_hits(words, probes: list, positions):
     """Predicate: the bloom ``words`` (an ``array<long>`` column) MAY
     hold some probe — per probe, a CASE over the 7 power-of-two bloom
@@ -234,9 +214,6 @@ def _bloom_hits(words, probes: list, positions):
     int literals; Java long arithmetic wraps mod 2^64, matching the
     builder's uint64 math), ORed over the probes. An unknown geometry
     keeps the chunk."""
-    from functools import reduce as _reduce
-    from operator import and_, or_
-
     from .bloom import bloom_sizes
 
     hits = []
@@ -244,47 +221,14 @@ def _bloom_hits(words, probes: list, positions):
         sized = None
         for m_bits in bloom_sizes():
             cond = F.size(words) == m_bits // 64
-            hit = _reduce(and_, [
+            hit = reduce(and_, [
                 F.element_at(words, F.lit(widx))
                 .bitwiseAND(F.lit(mask)) != 0
                 for widx, mask in positions(v, m_bits)])
             sized = F.when(cond, hit) if sized is None \
                 else sized.when(cond, hit)
         hits.append(sized.otherwise(F.lit(True)))
-    return _reduce(or_, hits)
-
-
-def _bloom_prune(encoded: DataFrame, key: str,
-                 doc_ids: list[str]) -> DataFrame:
-    """Membership pruning by the per-chunk key bloom (operators/
-    bloom.py) — the zone map's complement: min/max bounds prune by
-    RANGE (weak on hash layouts, where every partition spans the full
-    key space), the bloom prunes by MEMBERSHIP regardless of layout,
-    and probes for absent keys drop every chunk.
-
-    Entirely Catalyst (:func:`_bloom_hits` over ``key_bloom``). Same
-    silent-miss rule as the zone map: a chunk whose bounds describe a
-    different column, predates blooms (null), or trips any bit test
-    stays/goes accordingly — correctness never depends on the bloom
-    (false positives only cost a wasted decode).
-    """
-    from .bloom import probe_positions
-
-    if "key_bloom" not in encoded.columns \
-            or "key_col" not in encoded.columns or not doc_ids:
-        return encoded
-    if len(doc_ids) > 64:
-        # each probe contributes a 7-geometry CASE of 4 bit tests
-        # (~30 expression nodes); thousands of keys would blow up the
-        # plan (driver planning time, codegen 64KB method limit) past
-        # what the pruning saves — bulk probes keep zone maps only
-        return encoded
-    return encoded.where(
-        F.col("key_col").isNull()
-        | (F.col("key_col") != key)
-        | F.col("key_bloom").isNull()
-        | _bloom_hits(F.col("key_bloom"), [str(k) for k in doc_ids],
-                      probe_positions))
+    return reduce(or_, hits)
 
 
 def lookup_docs(encoded: DataFrame, doc_ids: list[str],
@@ -292,27 +236,24 @@ def lookup_docs(encoded: DataFrame, doc_ids: list[str],
                 key: str = "doc_id",
                 with_n_tok: bool = True,
                 global_dict=None) -> DataFrame:
-    """Random-access decode: fetch specific documents by key.
+    """Random-access decode: fetch specific documents by key — the
+    IN-list form of :func:`scan_where` (``isin={key: doc_ids}``).
 
-    Pruning before any full decode:
-    1. chunk pruning via the manifest zone map (``key_min``/``key_max``)
-       — a plain ``WHERE`` that parquet row-group stats satisfy without
-       reading payload bytes;
-    2. chunk MEMBERSHIP pruning via the per-chunk key bloom
-       (:func:`_bloom_prune`) — effective where the zone map is
-       layout-blind (hash layouts; probes for absent keys);
+    Pruning before any full decode, all of it :func:`_scan_drop`'s:
+    1. the exact key zone map (``key_min``/``key_max`` over the
+       probes' envelope) — plain comparisons that parquet row-group
+       stats satisfy without reading payload bytes;
+    2. MEMBERSHIP pruning via the per-chunk key bloom — effective where
+       the zone map is layout-blind (hash layouts; probes for absent
+       keys), skipped above 64 keys;
     3. row filtering after decoding only the surviving chunks.
 
     The cluster-scale analog of the reference's skip-without-decode
     (``src/io/lib_bra_io_file_ctx.c:596-602``) plus FSST's
     random-access promise (strings decodable without bulk context).
     """
-    lo, hi = min(doc_ids), max(doc_ids)
-    pruned = _bloom_prune(_zone_prune(encoded, key, lo, hi),
-                          key, doc_ids)
-    dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
-                       global_dict=global_dict)
-    return dec.where(F.col(key).isin(doc_ids))
+    return scan_where(encoded, [], specs=specs, with_n_tok=with_n_tok,
+                      global_dict=global_dict, isin={key: doc_ids})
 
 
 def lookup_range(encoded: DataFrame, lo: str, hi: str,
@@ -320,21 +261,19 @@ def lookup_range(encoded: DataFrame, lo: str, hi: str,
                  key: str = "doc_id",
                  with_n_tok: bool = True,
                  global_dict=None) -> DataFrame:
-    """Range scan ``lo <= key <= hi`` over the encoded table.
+    """Range scan ``lo <= key <= hi`` over the encoded table — the
+    string-band form of :func:`scan_where` (``[(key, lo, hi)]``).
 
-    Same two-level pruning as :func:`lookup_docs` — zone-map chunk
-    pruning (a WHERE parquet row-group stats satisfy without payload
-    reads), then decode of surviving chunks only and an exact BETWEEN
-    filter. The range form of the reference's skip-without-decode
-    (``src/io/lib_bra_io_file_ctx.c:596-602``): over a
-    ``mode="range"`` encode (range-clustered chunks with tight,
+    Zone-map chunk pruning (a WHERE parquet row-group stats satisfy
+    without payload reads), then decode of surviving chunks only and an
+    exact BETWEEN filter. The range form of the reference's
+    skip-without-decode (``src/io/lib_bra_io_file_ctx.c:596-602``):
+    over a ``mode="range"`` encode (range-clustered chunks with tight,
     near-disjoint zone maps) a narrow range decodes O(matching
     chunks), not the table.
     """
-    pruned = _zone_prune(encoded, key, lo, hi)
-    dec = decode_table(pruned, specs=specs, with_n_tok=with_n_tok,
-                       global_dict=global_dict)
-    return dec.where((F.col(key) >= lo) & (F.col(key) <= hi))
+    return scan_where(encoded, [(key, lo, hi)], specs=specs,
+                      with_n_tok=with_n_tok, global_dict=global_dict)
 
 
 def manifest_specs(encoded: DataFrame) -> list[tuple[str, str]]:
@@ -373,11 +312,13 @@ def _has_lane(encoded: DataFrame, field: str) -> bool:
 
 def _stats_entry(column: str):
     """The chunk's ``column_stats`` element for ``column`` (null when
-    the chunk has no such entry)."""
+    the chunk has no such entry — ``try_element_at``: under ANSI mode
+    ``element_at`` of the empty match raises instead)."""
     # NB: F.filter treats a 2-arg lambda as (element, index), so bind
     # the column name via a closure, never a default arg
-    return F.element_at(
-        F.filter("column_stats", lambda c: c["name"] == F.lit(column)), 1)
+    return F.try_element_at(
+        F.filter("column_stats", lambda c: c["name"] == F.lit(column)),
+        F.lit(1))
 
 
 def _lane(encoded: DataFrame, s, field: str):
@@ -396,10 +337,11 @@ def _lane(encoded: DataFrame, s, field: str):
 def _proves(column: str, pred):
     """Predicate: the chunk's stats entry for ``column`` satisfies
     ``pred`` — the shape of every chunk-skipping proof. A missing
-    entry proves nothing (the chunk is kept)."""
-    return F.exists(
+    entry, a NULL ``column_stats`` or a ``pred`` that evaluates NULL
+    proves nothing (false, never NULL: the chunk is kept)."""
+    return F.coalesce(F.exists(
         "column_stats",
-        lambda s: (s["name"] == F.lit(column)) & pred(s))
+        lambda s: (s["name"] == F.lit(column)) & pred(s)), F.lit(False))
 
 
 def _stats_disjoint(column: str, lo: int, hi: int):
@@ -625,82 +567,96 @@ def _normalize_isin(kinds: dict, isin: dict) -> dict:
     return ivals
 
 
+def _key_disjoint(encoded: DataFrame, column: str, lo: str, hi: str,
+                  probes: list[str]) -> list:
+    """Proofs from the chunk's KEY zone map that no ``column`` value
+    matches: the exact ``key_min``/``key_max`` are disjoint from
+    ``[lo, hi]``, or the ``key_bloom`` holds none of the point
+    ``probes`` (skipped above 64 probes: each adds a 7-geometry CASE
+    of 4 bit tests, and thousands would blow up the plan — driver
+    planning time, the 64KB codegen method limit — past what pruning
+    saves). The key column stores no column bloom; ``key_bloom`` is
+    its membership filter.
+
+    Both arms hold only where ``key_col`` names ``column`` — pruning
+    on another column's bounds drops matching rows with no error
+    (ADVICE r2 #1) — and a NULL ``key_col``, bound or bloom (pre-r3
+    or pre-bloom manifests, ``drop_columns`` of the key, a
+    ``bloom=False`` encode) proves nothing, so neither arm is ever
+    NULL. The zone arm compares top-level columns only, so its
+    negation reaches the parquet scan as a pushed filter."""
+    if "key_col" not in encoded.columns:
+        return []
+    on_key = F.col("key_col").eqNullSafe(column)
+    arms = [on_key & F.col("key_min").isNotNull()
+            & F.col("key_max").isNotNull()
+            & ((F.col("key_min") > hi) | (F.col("key_max") < lo))]
+    if probes and len(probes) <= 64 and "key_bloom" in encoded.columns:
+        from .bloom import probe_positions
+
+        arms.append(on_key & F.col("key_bloom").isNotNull()
+                    & ~_bloom_hits(F.col("key_bloom"), probes,
+                                   probe_positions))
+    return arms
+
+
 def _scan_drop(encoded: DataFrame, kinds: dict,
                bands, null_cols, not_null_cols, ivals):
-    """The OR of every predicate's chunk-disjointness proof — the
-    shared prune engine behind :func:`scan_where` (chunk-level WHERE),
-    :func:`scan_where_files` (file-level metadata pass) and
-    :func:`scan_estimate`. Missing stats lanes (older manifests)
-    contribute no proof and the chunk is kept; ``None`` when nothing
-    can prove anything."""
+    """The OR of every predicate's chunk-disjointness proof — the one
+    prune engine behind every pruned read (:func:`scan_where` and its
+    delegations, the lookups, :func:`scan_where_files`' file pass),
+    :func:`scan_estimate` and the copy-on-write deletes
+    (operators/evolve.py). Missing stats lanes (older manifests)
+    contribute no proof and the chunk is kept. Every arm is NULL-free:
+    a NULL ``drop`` would make ``WHERE ~drop`` discard the chunk
+    (ADVICE r3 #2). With nothing provable the result is ``false``."""
     has_int = _has_lane(encoded, "vmin")
     has_f = _has_lane(encoded, "fmin")
     has_s = _has_lane(encoded, "smin")
     has_b = _has_lane(encoded, "bloom")
-    has_n = _has_lane(encoded, "null_count")
-    drop = None
-    if has_n:
-        for c in null_cols:
-            d = _null_disjoint(c)
-            drop = d if drop is None else (drop | d)
-        for c in not_null_cols:
-            if kinds[c].endswith("_list"):
-                continue        # list null_count can't prove all-null
-            d = _notnull_disjoint(c)
-            drop = d if drop is None else (drop | d)
+    arms = []
+    if _has_lane(encoded, "null_count"):
+        arms += [_null_disjoint(c) for c in null_cols]
+        # a list column's null_count can't prove all-null rows
+        arms += [_notnull_disjoint(c) for c in not_null_cols
+                 if not kinds[c].endswith("_list")]
     for column, lo, hi in bands:
         kind = kinds[column]
         if kind == "float":
-            if not has_f:
-                continue            # pre-r4 manifest: no float pruning
-            d = _fstats_disjoint(column, float(lo), float(hi))
-        elif kind == "string":
-            if not has_s:
-                continue            # pre-r5 manifest: no string pruning
-            d = _sstats_disjoint(column, str(lo), str(hi))
-        else:
-            if not has_int:
-                continue
-            d = _stats_disjoint(column, lo, hi)
-        if kind != "float" and has_b and lo == hi:
-            # point predicate: membership beats min/max on hash
-            # layouts; null bloom keeps (negation is null-safe)
-            d = d | ~_bloom_keep(column, [lo], kind)
-        drop = d if drop is None else (drop | d)
+            if has_f:
+                arms.append(_fstats_disjoint(column, float(lo), float(hi)))
+            continue
+        if kind == "string":
+            if has_s:
+                arms.append(_sstats_disjoint(column, str(lo), str(hi)))
+            arms += _key_disjoint(encoded, column, str(lo), str(hi),
+                                  [str(lo)] if lo == hi else [])
+        elif has_int:
+            arms.append(_stats_disjoint(column, lo, hi))
+        if has_b and lo == hi:
+            # point predicate: membership beats min/max on hash layouts
+            arms.append(~_bloom_keep(column, [lo], kind))
     for column, vals in ivals.items():
         # IN-list: zone-map envelope [min, max] (binary lanes have
         # none) OR bloom proof that EVERY probe value is absent
         kind = kinds[column]
-        d = None
-        if kind == "string" and has_s:
-            d = _sstats_disjoint(column, vals[0], vals[-1])
-        elif kind not in ("string", "binary") and has_int:
-            d = _stats_disjoint(column, vals[0], vals[-1])
+        if kind == "string":
+            if has_s:
+                arms.append(_sstats_disjoint(column, vals[0], vals[-1]))
+            arms += _key_disjoint(encoded, column, vals[0], vals[-1], vals)
+        elif kind != "binary" and has_int:
+            arms.append(_stats_disjoint(column, vals[0], vals[-1]))
         if has_b and len(vals) <= 64:
-            b = ~_bloom_keep(column, vals, kind)
-            d = b if d is None else (d | b)
-        if d is not None:
-            drop = d if drop is None else (drop | d)
-    return drop
+            arms.append(~_bloom_keep(column, vals, kind))
+    return reduce(or_, arms) if arms else F.lit(False)
 
 
 def _scan_prune(encoded: DataFrame, kinds: dict,
                 bands, null_cols, not_null_cols, ivals) -> DataFrame:
     """The manifest rows a scan decodes: chunks no :func:`_scan_drop`
-    proof drops, with the key bloom composed in for string point and
-    IN-list probes (the chunk's KEY column stores no column bloom —
-    its filter is ``key_bloom``; :func:`_bloom_prune` keeps every
-    chunk whose ``key_col`` differs, so this composes)."""
-    drop = _scan_drop(encoded, kinds, bands, null_cols, not_null_cols,
-                      ivals)
-    pruned = encoded.where(~drop) if drop is not None else encoded
-    for column, lo, hi in bands:
-        if kinds[column] == "string" and lo == hi:
-            pruned = _bloom_prune(pruned, column, [str(lo)])
-    for column, vals in ivals.items():
-        if kinds[column] == "string":
-            pruned = _bloom_prune(pruned, column, vals)
-    return pruned
+    proof drops."""
+    return encoded.where(~_scan_drop(encoded, kinds, bands, null_cols,
+                                     not_null_cols, ivals))
 
 
 def scan_where(encoded: DataFrame,
@@ -888,10 +844,9 @@ def scan_where_files(spark, manifest_path: str,
     (``_scan_drop``) over only ``column_stats`` + file names (the
     payload column is never fetched) and collects the shard files
     holding at least one possibly-matching chunk; phase 2 re-runs
-    :func:`scan_where` over just those files, so chunk-level pruning,
-    key-bloom composition, and the exact residual all re-apply. A
-    manifest predating every probed stats lane falls through to the
-    prune-free scan rather than miss rows."""
+    :func:`scan_where` over just those files, so chunk-level pruning
+    and the exact residual both re-apply. A manifest predating every
+    probed stats lane keeps every file rather than miss rows."""
     from .encode import TOKEN_SPECS as _TS
 
     man = spark.read.parquet(manifest_path)
@@ -904,9 +859,6 @@ def scan_where_files(spark, manifest_path: str,
     drop = _scan_drop(man, kinds, bands or [],
                       list(null_cols or []), list(not_null_cols or []),
                       _normalize_isin(kinds, dict(isin or {})))
-    if drop is None:
-        # nothing provable at this manifest's stats vintage
-        return scan_where(man, bands, **kw)
     phase1 = (man.withColumn("_f", F.input_file_name())
               .where(~drop).select("_f").distinct())
     keep = [r[0] for r in phase1.collect()]
@@ -993,9 +945,8 @@ def agg_encoded(encoded: DataFrame, column: str) -> DataFrame:
 def _check_stats_column(encoded: DataFrame, column: str,
                         fn: str) -> None:
     """Fail with a nameable error when ``column`` has no stats entry —
-    under ANSI mode the downstream ``element_at(filter(...), 1)``
-    would otherwise surface an opaque INVALID_ARRAY_INDEX from deep
-    in the job."""
+    every lane of it would otherwise read null, and the caller's
+    error would blame a missing lane instead of the column name."""
     names = {n for n, _ in manifest_specs(encoded)}
     if column not in names:
         raise ValueError(
@@ -1190,6 +1141,45 @@ def _qcut_bounds(cuts: list, n: int, lo, hi) -> tuple[int, int]:
             max(0, f_hi_max - g_lo_min))
 
 
+def _chunk_bracket(h: list, lo_b, hi_b, cuts, is_float: bool,
+                   lo, hi) -> tuple[int, int]:
+    """One chunk's rigorous ``COUNT(lo <= v <= hi)`` bracket — the
+    one per-chunk kernel behind :func:`hist_encoded`,
+    :func:`quantile_encoded` and :func:`scan_estimate`. ``h`` is the
+    chunk's histogram (non-empty), ``lo_b``/``hi_b`` its non-null lane
+    bounds (``vmin``/``vmax``, or ``fmin``/``fmax`` when ``is_float``)
+    and ``cuts`` its equi-depth quantile cuts (may be empty/None). The
+    histogram bracket (:func:`_hist_bounds_int` /
+    :func:`_hist_bounds_float`) is INTERSECTED with the CDF bracket
+    from :func:`_qcut_bounds`: both are rigorous, so max-of-lowers /
+    min-of-uppers is too — and the cuts stay tight where value skew
+    collapses the equi-width buckets. Callers decide what a chunk
+    without a histogram means."""
+    if is_float:
+        lo, hi = float(lo), float(hi)
+        cmin, cmax = _hist_bounds_float(h, lo_b, hi_b, lo, hi)
+    else:
+        lo, hi = int(lo), int(hi)
+        cmin, cmax = _hist_bounds_int(h, int(lo_b), int(hi_b), lo, hi)
+    if cuts:
+        ql, qh = _qcut_bounds(cuts, sum(h), lo, hi)
+        cmin, cmax = max(cmin, ql), min(cmax, qh)
+    return cmin, cmax
+
+
+def _bracket_lanes(encoded: DataFrame, column: str, is_float: bool,
+                   tag: str = "") -> list:
+    """The stats lanes :func:`_chunk_bracket` reads for ``column``,
+    aliased ``h``/``lo``/``hi``/``cuts``/``nv`` + ``tag``: histogram,
+    lane bounds, quantile cuts (int or float lanes by ``is_float``)
+    and ``n_vals``."""
+    s = _stats_entry(column)
+    lanes = (("fmin", "fmax", "fqcut") if is_float
+             else ("vmin", "vmax", "qcut"))
+    return [_lane(encoded, s, f).alias(a + tag) for f, a in zip(
+        ("hist",) + lanes + ("n_vals",), ("h", "lo", "hi", "cuts", "nv"))]
+
+
 def hist_encoded(encoded: DataFrame, column: str,
                  lo, hi) -> tuple[int, int]:
     """RIGOROUS bounds on ``COUNT(*) WHERE lo <= column <= hi``
@@ -1213,7 +1203,8 @@ def hist_encoded(encoded: DataFrame, column: str,
     chunk's bracket is INTERSECTED with the CDF bracket from
     :func:`_qcut_bounds` — order statistics keep n/16 resolution
     where value skew collapses the equi-width buckets, and both
-    brackets are rigorous so their intersection is too.
+    brackets are rigorous so their intersection is too (the one
+    per-chunk kernel, :func:`_chunk_bracket`).
     ``lo``/``hi`` are lane units — days for date, epoch micros
     for timestamp, unscaled ints for decimal — the same convention as
     :func:`scan_range`.
@@ -1245,54 +1236,27 @@ def hist_encoded(encoded: DataFrame, column: str,
         raise ValueError(
             f"hist_encoded: column {column!r} has kind {kind!r} — "
             "histograms cover scalar int-backed and float lanes only")
-    s = _stats_entry(column)
-    per = encoded.select(
-        *[_lane(encoded, s, f).alias(f)
-          for f in ("hist", "n_vals", "vmin", "vmax", "fmin", "fmax",
-                    "qcut", "fqcut")])
-    if per.where(F.col("hist").isNull()
-                 & (F.coalesce(F.col("n_vals"), F.lit(1)) > 0)
+    per = encoded.select(*_bracket_lanes(encoded, column, is_float))
+    if per.where(F.col("h").isNull()
+                 & (F.coalesce(F.col("nv"), F.lit(1)) > 0)
                  ).limit(1).count():
         raise ValueError(
             f"hist_encoded: column {column!r} has chunks without a "
             "histogram (bloom=False encode or non-finite float "
             "bounds) — decode_table + filter/count instead")
-    flo, fhi = (float(lo), float(hi)) if is_float else (0.0, 0.0)
-    ilo, ihi = (0, 0) if is_float else (int(lo), int(hi))
 
     def bounds(batches):
         # per-CHUNK metadata rows (16 counts + bounds each) — the
-        # Python loop is over chunks, not values, and the exact
-        # Python-int / monotone-float bracket math lives in
-        # _hist_bounds_int / _hist_bounds_float (property-fuzzed
-        # directly in tests/test_fuzz_columns.py)
+        # Python loop is over chunks, not values
         for b in batches:
             t = b.to_pydict()
             cmin = cmax = 0
-            for h, vmin, vmax, fmin, fmax, qc, fqc in zip(
-                    t["hist"], t["vmin"], t["vmax"],
-                    t["fmin"], t["fmax"], t["qcut"], t["fqcut"]):
-                if not h:
-                    continue            # empty chunk: counts 0
-                if is_float:
-                    if fmin is None:
-                        continue        # all-null/all-NaN: no values
-                    lo_, hi_ = _hist_bounds_float(
-                        h, fmin, fmax, flo, fhi)
-                    cuts, blo, bhi = fqc, flo, fhi
-                else:
-                    if vmin is None:
-                        continue        # all-null chunk: no values
-                    lo_, hi_ = _hist_bounds_int(
-                        h, vmin, vmax, ilo, ihi)
-                    cuts, blo, bhi = qc, ilo, ihi
-                if cuts:
-                    # intersect with the equi-depth CDF bracket:
-                    # both are rigorous, so max-of-lowers /
-                    # min-of-uppers is too — and the cuts stay tight
-                    # where value skew collapses the equi-width hist
-                    ql, qh = _qcut_bounds(cuts, sum(h), blo, bhi)
-                    lo_, hi_ = max(lo_, ql), min(hi_, qh)
+            for h, blo, bhi, cuts in zip(t["h"], t["lo"], t["hi"],
+                                         t["cuts"]):
+                if not h or blo is None:
+                    continue    # empty / all-null / all-NaN: counts 0
+                lo_, hi_ = _chunk_bracket(h, blo, bhi, cuts, is_float,
+                                          lo, hi)
                 cmin += lo_
                 cmax += hi_
             yield pa.RecordBatch.from_pydict(
@@ -1316,8 +1280,7 @@ def quantile_encoded(encoded: DataFrame, column: str, q: float,
 
     Works by bracketing the CDF: for any probe value x the hist+qcut
     machinery bounds ``F(x) = COUNT(v <= x)`` from both sides
-    (:func:`_hist_bounds_int`/``_float`` intersected with
-    :func:`_qcut_bounds` per chunk, summed), and
+    (:func:`_chunk_bracket` per chunk, summed), and
 
     * ``F_max(x) <  k``  proves the quantile is  > x,
     * ``F_min(x) >= k``  proves the quantile is <= x,
@@ -1378,11 +1341,8 @@ def quantile_encoded(encoded: DataFrame, column: str, q: float,
     # expression an oracle computes — rank consistency beats
     # idealized rational arithmetic here
     k = min(n, max(1, int(math.ceil(q * n))))
-    s = _stats_entry(column)
     per = encoded.select(
-        *[_lane(encoded, s, f).alias(f)
-          for f in ("hist", "vmin", "vmax", "fmin", "fmax", "qcut",
-                    "fqcut")]).cache()
+        *_bracket_lanes(encoded, column, is_float)).cache()
     try:
         # invariant: quantile in (ex_lo, hi_val]; ex_lo None = -inf
         ex_lo, hi_val = None, vmax
@@ -1413,24 +1373,10 @@ def quantile_encoded(encoded: DataFrame, column: str, q: float,
                 hi_s = [0] * gl
                 for b in batches:
                     t = b.to_pydict()
-                    for h, vn, vx, fn, fx, qc, fqc in zip(
-                            t["hist"], t["vmin"], t["vmax"],
-                            t["fmin"], t["fmax"],
-                            t["qcut"], t["fqcut"]):
-                        if not h:
+                    for h, cmn, cmx, cuts in zip(t["h"], t["lo"],
+                                                 t["hi"], t["cuts"]):
+                        if not h or cmn is None:
                             continue
-                        if is_f:
-                            if fn is None:
-                                continue
-                            lo_b, cuts = fn, fqc
-                            bounds_fn = _hist_bounds_float
-                            cmn, cmx = fn, fx
-                        else:
-                            if vn is None:
-                                continue
-                            lo_b, cuts = vn, qc
-                            bounds_fn = _hist_bounds_int
-                            cmn, cmx = vn, vx
                         nn = sum(h)
                         for i, x in enumerate(g):
                             if x < cmn:
@@ -1439,11 +1385,8 @@ def quantile_encoded(encoded: DataFrame, column: str, q: float,
                                 lo_s[i] += nn       # whole chunk <= x
                                 hi_s[i] += nn
                                 continue
-                            cl, ch = bounds_fn(h, cmn, cmx, cmn, x)
-                            if cuts:
-                                ql, qh = _qcut_bounds(cuts, nn,
-                                                      cmn, x)
-                                cl, ch = max(cl, ql), min(ch, qh)
+                            cl, ch = _chunk_bracket(h, cmn, cmx, cuts,
+                                                    is_f, cmn, x)
                             lo_s[i] += cl
                             hi_s[i] += ch
                 yield pa.RecordBatch.from_pydict({
@@ -1497,18 +1440,16 @@ def scan_estimate(encoded: DataFrame,
 
     * ``chunks_total`` / ``chunks_kept`` — the same `_scan_drop`
       proof engine scan_where runs (zone maps, blooms, null counts):
-      kept = an upper bound on the chunks the scan decodes
-      (scan_where additionally probes ``key_bloom`` for string point
-      bands on the key column, which can prune further).
+      kept = exactly the chunks the scan decodes.
     * ``rows_total`` / ``rows_kept_max`` — manifest ``n_rows`` sums;
       ``rows_kept_max`` is the decode-side row ceiling.
     * ``rows_bracket`` — ``(cmin, cmax)`` bounds on the TRUE result
       row count, combining three proof families per chunk:
       prune-proven chunks contribute (0, 0); surviving chunks
-      combine each scalar-band column's histogram bracket
-      (:func:`_hist_bounds_int` / :func:`_hist_bounds_float`) with
-      the Fréchet conjunction inequalities — upper
-      ``min_i cmax_i``, lower ``max(0, Σ cmin_i - (k-1)·n_rows)``.
+      combine each scalar-band column's per-chunk bracket
+      (:func:`_chunk_bracket`) with the Fréchet conjunction
+      inequalities — upper ``min_i cmax_i``, lower
+      ``max(0, Σ cmin_i - (k-1)·n_rows)``.
       A band column without a usable histogram on some chunk
       degrades THAT chunk's contribution to ``(0, n_rows)`` — wider,
       never wrong (``chunks_missing_hist`` counts them).
@@ -1550,7 +1491,6 @@ def scan_estimate(encoded: DataFrame,
     ivals = _normalize_isin(kinds, isin)
     drop = _scan_drop(encoded, kinds, bands, null_cols,
                       not_null_cols, ivals)
-    kept = F.lit(True) if drop is None else ~drop
     # histogrammable band columns: scalar int-backed or float
     hcols = [(c, lo, hi, kinds[c] == "float") for c, lo, hi in bands
              if kinds[c] == "float"
@@ -1558,15 +1498,10 @@ def scan_estimate(encoded: DataFrame,
     lower_valid = (len(hcols) == len(bands) and not ivals
                    and not null_cols and not not_null_cols)
     pre_r5 = bool(hcols) and not _has_lane(encoded, "hist")
-    cols = [F.col("n_rows"), kept.alias("kept")]
+    cols = [F.col("n_rows"), (~drop).alias("kept")]
     if not pre_r5:
-        lanes = {"hist": "h", "vmin": "vlo", "vmax": "vhi", "fmin": "flo",
-                 "fmax": "fhi", "n_vals": "nv", "qcut": "qc",
-                 "fqcut": "fqc"}
-        for i, (c, _lo, _hi, _f) in enumerate(hcols):
-            s = _stats_entry(c)
-            cols += [_lane(encoded, s, f).alias(f"{a}{i}")
-                     for f, a in lanes.items()]
+        for i, (c, _lo, _hi, isf) in enumerate(hcols):
+            cols += _bracket_lanes(encoded, c, isf, str(i))
     per = encoded.select(*cols)
 
     def probe(batches):
@@ -1591,40 +1526,16 @@ def scan_estimate(encoded: DataFrame,
                 c_upper = n
                 c_lo_total = 0
                 for i, (_c, blo, bhi, isf) in enumerate(hcols):
-                    h = t[f"h{i}"][j]
-                    cuts = None
-                    if isf:
-                        fmin, fmax = t[f"flo{i}"][j], t[f"fhi{i}"][j]
-                        if fmin is None:
-                            cmin, cmax = 0, 0   # no finite values
-                        elif not h:
-                            nv = t[f"nv{i}"][j]
-                            if nv:              # ±Inf bounds: no hist
-                                cmin, cmax, miss = 0, n, miss + 1
-                            else:
-                                cmin, cmax = 0, 0
-                        else:
-                            cmin, cmax = _hist_bounds_float(
-                                h, fmin, fmax,
-                                float(blo), float(bhi))
-                            cuts = t[f"fqc{i}"][j]
-                            blo, bhi = float(blo), float(bhi)
+                    h, vlo = t[f"h{i}"][j], t[f"lo{i}"][j]
+                    if vlo is None:
+                        cmin, cmax = 0, 0   # all-null / no finite values
+                    elif not h:
+                        # no histogram (bloom=False, ±Inf float bounds)
+                        cmin, cmax, miss = 0, n, miss + 1
                     else:
-                        vmin, vmax = t[f"vlo{i}"][j], t[f"vhi{i}"][j]
-                        if vmin is None:
-                            cmin, cmax = 0, 0   # all-null chunk
-                        elif not h:
-                            cmin, cmax, miss = 0, n, miss + 1
-                        else:
-                            cmin, cmax = _hist_bounds_int(
-                                h, int(vmin), int(vmax),
-                                int(blo), int(bhi))
-                            cuts = t[f"qc{i}"][j]
-                            blo, bhi = int(blo), int(bhi)
-                    if cuts:
-                        # intersect with the equi-depth CDF bracket
-                        ql, qh = _qcut_bounds(cuts, sum(h), blo, bhi)
-                        cmin, cmax = max(cmin, ql), min(cmax, qh)
+                        cmin, cmax = _chunk_bracket(
+                            h, vlo, t[f"hi{i}"][j], t[f"cuts{i}"][j],
+                            isf, blo, bhi)
                     c_upper = min(c_upper, cmax)
                     c_lo_total += cmin
                 hi_sum += c_upper
@@ -1662,9 +1573,9 @@ def lookup_rows(encoded: DataFrame, doc_ids: list[str],
 
     Three-level pruning — the full random-access story:
 
-    1. chunk pruning via the manifest zone map (``key_min``/``key_max``
-       WHERE, satisfied by parquet row-group stats without payload
-       reads);
+    1. chunk pruning by :func:`_scan_drop`'s proofs for ``key IN
+       doc_ids`` (the key zone map — a WHERE parquet row-group stats
+       satisfy without payload reads — and the key bloom);
     2. within surviving chunks, only the (small) KEY column decodes in
        full to locate the requested rows;
     3. the (large) VALUE column decodes per row through
@@ -1684,11 +1595,10 @@ def lookup_rows(encoded: DataFrame, doc_ids: list[str],
     if not wanted:
         return _empty_frame(encoded.sparkSession,
                             f"{key} string, {value_col} {value_kind}")
-    lo, hi = wanted[0], wanted[-1]
     if value_kind not in ("string", "binary"):
         raise ValueError("value_kind must be 'string' or 'binary'")
-    pruned = _bloom_prune(_zone_prune(encoded, key, lo, hi),
-                          key, wanted)
+    pruned = _scan_prune(encoded, {key: "string"}, [], [], [],
+                         {key: wanted})
 
     def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc

@@ -957,8 +957,9 @@ def encode_table(df: DataFrame,
 
     ``mode="range"``: one ``repartitionByRange`` shuffle + in-partition
     sort — chunks carry tight, near-disjoint key intervals, so
-    ``lookup_range``/``lookup_docs`` prune to O(matching chunks). Use
-    when the read pattern is key ranges.
+    ``lookup_range`` (and ``lookup_docs`` past the key bloom's 64-key
+    cap) prune to O(matching chunks). Use when the read pattern is key
+    ranges.
     """
     specs = specs or TOKEN_SPECS
     cols = [name for name, _ in specs]

@@ -485,17 +485,19 @@ def delete_rows(encoded: DataFrame, keys: "list[str] | DataFrame",
     """Delete rows by key — chunk-granular copy-on-write (the Iceberg
     COW analog, at chunk rather than file granularity).
 
-    Only chunks whose key zone map CAN contain a deleted key are
+    Only chunks the prune engine (``decode._scan_drop`` for ``key IN
+    keys``, the proofs ``lookup_docs`` prunes with: key zone map, key
+    bloom, the column's own stats and bloom) cannot prove key-free are
     rewritten (:func:`_cow_delete`: decode → filter → the chunk writer
     fresh encodes use); every other chunk passes
     through byte-identical with no decode — at 100 TB a point delete
-    touches O(matching chunks), the same pruning contract as
-    ``lookup_docs``. A zone-map false positive (chunk in key range but
-    holding none of the keys) is detected after the key-entry decode
-    and passed through unchanged, so payload bytes only ever change
-    for chunks that actually lose rows; chunks losing ALL rows vanish
-    from the manifest. Unknown zone maps (``key_col`` mismatch or
-    pre-r3 manifest) conservatively rewrite-check — never skip.
+    touches O(matching chunks). A false positive (chunk in key range
+    but holding none of the keys) is detected after the key-entry
+    decode and passed through unchanged, so payload bytes only ever
+    change for chunks that actually lose rows; chunks losing ALL rows
+    vanish from the manifest. A chunk nothing proves key-free (no
+    stats for ``key``, a pre-r3 manifest) is rewrite-checked — never
+    skipped.
 
     ``key`` must be a string-kind column (the zone-map domain, same as
     ``lookup_docs``). Re-encoded chunks keep their ``chunk_id`` and
@@ -513,7 +515,7 @@ def delete_rows(encoded: DataFrame, keys: "list[str] | DataFrame",
 
     import pyarrow.compute as pc
 
-    from .decode import _key_may_hold, _rebuild, manifest_specs
+    from .decode import _rebuild, _scan_drop, manifest_specs
 
     specs = specs or manifest_specs(encoded)
     known = dict(specs)
@@ -535,16 +537,16 @@ def delete_rows(encoded: DataFrame, keys: "list[str] | DataFrame",
         return np.asarray(pc.fill_null(pc.is_in(
             karr, value_set=pa.array(key_set, karr.type)), False))
 
-    return _cow_delete(
-        encoded, _key_may_hold(encoded, key, min(keys), max(keys)), key,
-        deleted, known, global_dict)
+    drop = _scan_drop(encoded, known, [], [], [], {key: key_set})
+    return _cow_delete(encoded, drop, key, deleted, known, global_dict)
 
 
-def _cow_delete(encoded: DataFrame, may_hit, column: str, deleted,
+def _cow_delete(encoded: DataFrame, drop, column: str, deleted,
                 known: dict[str, str], global_dict) -> DataFrame:
     """The copy-on-write engine behind :func:`delete_rows` and
-    :func:`delete_where`. Chunks where the ``may_hit`` predicate is
-    false pass through with no decode. The rest decode ONLY
+    :func:`delete_where`. Chunks the ``drop`` proof (``decode.
+    _scan_drop``: no row can match) covers pass through with no
+    decode. The rest decode ONLY
     ``column``'s entry (zero-copy views, other payloads untouched) and
     ask ``deleted(data, validity, n_rows)`` for a bool mask of the rows
     to delete: no hit passes the chunk through as a pure Arrow filter
@@ -581,8 +583,8 @@ def _cow_delete(encoded: DataFrame, may_hit, column: str, deleted,
                 yield pa.RecordBatch.from_pylist(out,
                                                  schema=batch.schema)
 
-    return encoded.where(~may_hit).unionByName(
-        encoded.where(may_hit).mapInArrow(fn, encoded.schema))
+    return encoded.where(drop).unionByName(
+        encoded.where(~drop).mapInArrow(fn, encoded.schema))
 
 
 def _row_dicts_with_views(batch: pa.RecordBatch, idxs):
@@ -644,8 +646,9 @@ def _delete_rows_join(encoded: DataFrame, keys_df: DataFrame, key: str,
     """Join-form COW delete — the large-batch MERGE path (VERDICT r3
     next-steps #4): the key set never transits the driver.
 
-    Zone bounds come from a 2-scalar aggregate over the keys
-    DataFrame; hit positions come from the cheap key-entry decode
+    Candidate chunks are those ``decode._scan_drop`` cannot prove
+    disjoint from the keys' band (a 2-scalar aggregate over the keys
+    DataFrame); hit positions come from the cheap key-entry decode
     (:func:`_chunk_keys`) equi-joined against the keys (Catalyst/AQE
     picks broadcast vs shuffle from the keys side's actual size);
     chunks with no hit — including every zone-map false positive —
@@ -655,7 +658,7 @@ def _delete_rows_join(encoded: DataFrame, keys_df: DataFrame, key: str,
     task's closure and ran two driver-side actions per batch)."""
     import numpy as np
 
-    from .decode import _key_may_hold
+    from .decode import _scan_drop
 
     kdf = keys_df.select(
         F.col(key if key in keys_df.columns
@@ -664,8 +667,9 @@ def _delete_rows_join(encoded: DataFrame, keys_df: DataFrame, key: str,
     b = kdf.agg(F.min("k").alias("lo"), F.max("k").alias("hi")).first()
     if b["lo"] is None:
         return encoded                  # empty key set
-    cand = _key_may_hold(encoded, key, b["lo"], b["hi"])
-    untouched = encoded.where(~cand)
+    drop = _scan_drop(encoded, known, [(key, b["lo"], b["hi"])], [], [],
+                      {})
+    untouched = encoded.where(drop)
     # freeze ONE evaluation of the candidate set: the hit probe joins
     # back to the candidates on chunk_id, and scan-mode ids embed the
     # task partition index — a live (unmaterialized) encode lineage
@@ -674,7 +678,7 @@ def _delete_rows_join(encoded: DataFrame, keys_df: DataFrame, key: str,
     # the lineage so hits/clean/dirty all read the same blocks;
     # parquet-backed manifests (the normal case) pay one cheap
     # re-store of the candidate chunks only.
-    touched = encoded.where(cand).localCheckpoint(eager=False)
+    touched = encoded.where(~drop).localCheckpoint(eager=False)
     hits = (_chunk_keys(touched, key, "string")
             .join(kdf, "k", "inner")
             .groupBy("chunk_id")
@@ -824,10 +828,11 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
     :func:`delete_rows`, driven by the NUMERIC zone maps instead of
     the string key map.
 
-    Chunk disposition mirrors ``scan_range``'s pruning exactly, but
-    inverted into a mutation: chunks whose ``column_stats`` bounds
-    (int ``vmin/vmax`` lanes, or the r4 float ``fmin/fmax`` lanes)
-    prove no overlap pass through byte-identical with no decode;
+    Chunk disposition is ``scan_range``'s pruning (the same
+    ``decode._scan_drop`` proofs), inverted into a mutation: chunks
+    whose ``column_stats`` (int ``vmin/vmax`` lanes, the r4 float
+    ``fmin/fmax`` lanes, and for a point band the column bloom) prove
+    no overlap pass through byte-identical with no decode;
     overlapping chunks decode ONLY the predicate column to classify
     rows; chunks entirely inside the band vanish; partially-matching
     chunks rewrite copy-on-write (:func:`_cow_delete`).
@@ -841,8 +846,7 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
 
     import numpy as np
 
-    from .decode import (_fstats_disjoint, _has_lane, _stats_disjoint,
-                         manifest_specs)
+    from .decode import _scan_drop, manifest_specs
     from .encode import _float_kind, _int_kind
 
     specs = specs or manifest_specs(encoded)
@@ -856,16 +860,12 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
         if math.isnan(lo) or math.isnan(hi):
             raise ValueError("delete_where: NaN bound — a NaN band "
                              "matches nothing by definition")
-        have_stats = _has_lane(encoded, "fmin")
-        disjoint = _fstats_disjoint(column, lo, hi)
     elif _int_kind(kind) and kind != "int_list":
         # snap INWARD so the effective integer band is always
         # contained in the requested band — int() truncates toward
         # zero, which WIDENS a negative fractional bound (hi=-3.7 ->
         # -3 would delete value -3 the caller asked to keep)
         lo, hi = math.ceil(lo), math.floor(hi)
-        have_stats = _has_lane(encoded, "vmin")
-        disjoint = _stats_disjoint(column, lo, hi)
     else:
         hint = (" (list kinds have no scalar row value)"
                 if kind == "int_list" or _float_kind(kind) else "")
@@ -881,5 +881,5 @@ def delete_where(encoded: DataFrame, column: str, lo, hi,
             hit &= validity[0]           # NULL rows never match
         return hit
 
-    return _cow_delete(encoded, ~disjoint if have_stats else F.lit(True),
-                       column, deleted, known, global_dict)
+    drop = _scan_drop(encoded, known, [(column, lo, hi)], [], [], {})
+    return _cow_delete(encoded, drop, column, deleted, known, global_dict)

@@ -731,9 +731,9 @@ def recluster_snapshot(spark: SparkSession, table_dir: str,
     ``encode_table(mode="range")``, and commit the result. Content is
     unchanged (the CDC feed vs the prior head is empty at row level);
     the LAYOUT changes: every chunk's zone map becomes a tight,
-    near-disjoint key interval, so ``lookup_range``/``lookup_docs``
-    decode O(matching chunks) where a hash/ingest-ordered layout
-    decodes O(partitions). Follow with :func:`expire_snapshots` to
+    near-disjoint key interval, so ``lookup_range`` (and
+    ``lookup_docs`` past the key bloom's 64-key cap) decode O(matching
+    chunks) where a hash/ingest-ordered layout decodes O(partitions). Follow with :func:`expire_snapshots` to
     reclaim the old layout's directories.
 
     ``zorder=[col, col(, col)]`` clusters on the Morton interleave of

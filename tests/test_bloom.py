@@ -14,9 +14,21 @@ from br_archive_spark.operators import (decode_table, delete_rows,
 from br_archive_spark.operators.bloom import (_hash_np, bloom_sizes,
                                               build_bloom, hash_key,
                                               probe_positions)
-from br_archive_spark.operators.decode import _bloom_prune, _zone_prune
+from br_archive_spark.operators.decode import _scan_prune
 
 SPECS = [("doc_id", "string"), ("text", "string")]
+KINDS = dict(SPECS)
+
+
+def _zone_kept(enc, lo, hi):
+    """Chunks kept by a key range band — zone-map proofs only (a band
+    with lo < hi gets no bloom arm)."""
+    return _scan_prune(enc, KINDS, [("doc_id", lo, hi)], [], [], {})
+
+
+def _isin_kept(enc, keys):
+    """Chunks kept by a key IN-list — zone map plus key bloom."""
+    return _scan_prune(enc, KINDS, [], [], [], {"doc_id": sorted(keys)})
 
 
 def _col(keys):
@@ -66,8 +78,8 @@ def test_bloom_prunes_hash_layout(spark):
                        target_values=256).cache()
     total = enc.count()
     present = ["17", "4321"]
-    zp = _zone_prune(enc, "doc_id", min(present), max(present))
-    bp = _bloom_prune(zp, "doc_id", present)
+    zp = _zone_kept(enc, min(present), max(present))
+    bp = _isin_kept(enc, present)
     assert zp.count() == total          # zone map is blind here
     assert bp.count() <= len(present) + 1
 
@@ -78,9 +90,9 @@ def test_bloom_prunes_hash_layout(spark):
 
     # absent keys chosen INSIDE the key range (lexicographic)
     absent = ["123x", "30abc", "449z"]
-    za = _zone_prune(enc, "doc_id", min(absent), max(absent))
+    za = _zone_kept(enc, min(absent), max(absent))
     assert za.count() == total
-    assert _bloom_prune(za, "doc_id", absent).count() <= 1  # fp budget
+    assert _isin_kept(enc, absent).count() <= 1  # fp budget
     assert lookup_docs(enc, absent, specs=SPECS,
                        with_n_tok=False).count() == 0
 
@@ -140,7 +152,7 @@ def test_bloom_probe_cap_bulk_lookup(spark):
     enc = encode_table(docs, specs=SPECS, mode="hash", num_parts=4,
                        target_values=256).cache()
     keys = [str(i) for i in range(0, 2000, 20)]       # 100 keys
-    assert _bloom_prune(enc, "doc_id", keys).count() == enc.count()
+    assert _isin_kept(enc, keys).count() == enc.count()
     out = lookup_docs(enc, keys, specs=SPECS, with_n_tok=False)
     assert sorted(r["doc_id"] for r in out.collect()) == sorted(keys)
 

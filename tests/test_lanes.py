@@ -139,3 +139,113 @@ def test_cli_scan_reports_engine_kept_chunks(spark, tmp_path, capsys):
     assert out["rows"] == 1
     assert out["chunks_decoded"] == est["chunks_kept"]
     assert out["chunks_decoded"] < out["chunks_total"]
+
+
+_NS_SPECS = [("doc_id", "string"), ("name", "string"), ("okey", "int"),
+             ("score", "float"), ("blob", "binary"), ("note", "string")]
+# column_stats lanes of the pre-r4 and pre-r5 manifest vintages
+_PRE_R4 = ("name", "kind", "codec", "orig_bytes", "enc_bytes", "vmin",
+           "vmax", "vsum", "n_vals", "null_count")
+_PRE_R5 = _PRE_R4 + ("fmin", "fmax")
+
+
+def _strip(man, lanes):
+    fields = ", ".join(f"'{f}', s.{f}" for f in lanes)
+    return man.withColumn("column_stats", F.expr(
+        f"transform(column_stats, s -> named_struct({fields}))"))
+
+
+def test_scan_drop_is_null_free_on_stripped_manifests(spark, tmp_path):
+    """A NULL ``drop`` makes ``WHERE ~drop`` discard the chunk, so
+    every arm of the one prune engine must be NULL-free on every
+    manifest vintage: lane strips (pre-r3: no column_stats; pre-r4;
+    pre-r5), no key zone-map columns at all, ``drop_columns`` of the
+    key (NULL key_col/key_min/key_max/key_bloom), a ``bloom=False``
+    encode and NULL ``column_stats`` rows. Lookups and scans on each
+    return exactly the rows of decode_table + filter, and a delete
+    that matches no row keeps every row."""
+    from br_archive_spark.operators import (decode_table, delete_where,
+                                            drop_columns, lookup_docs,
+                                            lookup_range, lookup_values,
+                                            scan_where)
+    from br_archive_spark.operators.decode import (_normalize_isin,
+                                                   _scan_drop)
+
+    docs = spark.range(2000).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.format_string("N#%04d", F.col("id") % 500).alias("name"),
+        (F.col("id") * 7 + 3).alias("okey"),
+        (F.col("id") / 4.0).alias("score"),
+        F.unhex(F.format_string("%04x", F.col("id") % 300)).alias("blob"),
+        F.when(F.col("id") % 5 == 0, F.lit("n")).alias("note"))
+    enc = encode_table(docs, specs=_NS_SPECS, mode="hash", num_parts=4,
+                       target_values=256)
+    man_dir = str(tmp_path / "man")
+    enc.write.parquet(man_dir)
+    man = spark.read.parquet(man_dir)
+    fixtures = {
+        "pre_r3": man.drop("column_stats"),
+        "pre_r4": _strip(man, _PRE_R4),
+        "pre_r5": _strip(man, _PRE_R5),
+        "no_key_zone": man.drop("key_col", "key_min", "key_max",
+                                "key_bloom"),
+        "key_dropped": drop_columns(man, ["doc_id"]),
+        "bloom_off": encode_table(docs, specs=_NS_SPECS, mode="hash",
+                                  num_parts=4, target_values=256,
+                                  bloom=False),
+        "null_stats": man.withColumn(
+            "column_stats", F.when(F.col("part_id") % 2 == 0,
+                                   F.col("column_stats"))),
+    }
+    kinds = dict(_NS_SPECS)
+    probes = [
+        ([("okey", 700, 9000)], [], [], {}),
+        ([("okey", 8641, 8641)], [], [], {}),
+        ([("score", 10.0, 60.5)], [], [], {}),
+        ([("name", "N#0100", "N#0120")], [], [], {}),
+        ([("name", "N#0042", "N#0042")], [], [], {}),
+        ([("doc_id", "40", "41")], [], [], {}),
+        ([("doc_id", "17", "17")], [], [], {}),
+        ([], [], [], {"doc_id": ["17", "4321", "999"]}),
+        ([], [], [], {"name": ["N#0001", "N#0499"]}),
+        ([], [], [], {"okey": [3, 10, 8641]}),
+        ([], [], [], {"blob": [b"\x00\x07"]}),
+        ([], ["note"], [], {}),
+        ([], [], ["note"], {}),
+    ]
+    for label, fx in fixtures.items():
+        nulls = fx.select(*[
+            F.sum(_scan_drop(fx, kinds, b, n, nn,
+                             _normalize_isin(kinds, i))
+                  .isNull().cast("int")).alias(f"p{k}")
+            for k, (b, n, nn, i) in enumerate(probes)]).first()
+        assert not any(nulls), (label, nulls)
+
+        specs = [s for s in _NS_SPECS
+                 if label != "key_dropped" or s[0] != "doc_id"]
+        dec = decode_table(fx, specs=specs, with_n_tok=False).cache()
+
+        def same(got, cond):
+            assert sorted(map(tuple, got.collect())) == sorted(
+                map(tuple, dec.where(cond).collect())), label
+
+        if label != "key_dropped":
+            same(lookup_docs(fx, ["17", "4321", "999"], specs=specs,
+                             with_n_tok=False),
+                 F.col("doc_id").isin("17", "4321", "999"))
+            same(lookup_range(fx, "40", "41", specs=specs,
+                              with_n_tok=False),
+                 F.col("doc_id").between("40", "41"))
+        same(lookup_values(fx, "name", ["N#0042"], specs=specs,
+                           with_n_tok=False),
+             F.col("name") == "N#0042")
+        same(lookup_values(fx, "okey", [8641, 3], specs=specs,
+                           with_n_tok=False),
+             F.col("okey").isin(8641, 3))
+        same(scan_where(fx, [("score", 10.0, 60.5)], specs=specs,
+                        with_n_tok=False, null_cols=["note"]),
+             F.col("score").between(10.0, 60.5) & F.col("note").isNull())
+        kept = delete_where(fx, "okey", -5, -1, specs=specs)
+        assert decode_table(kept, specs=specs, with_n_tok=False) \
+            .count() == 2000, label
+        dec.unpersist()

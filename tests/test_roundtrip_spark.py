@@ -225,7 +225,9 @@ def test_lookup_range_prunes_and_is_exact(spark):
     ids = sorted(r["doc_id"] for r in out.collect())
     assert ids == [f"d{i:04d}" for i in range(100, 150)]
     # pruning: the surviving chunk set is a strict subset
-    from br_archive_spark.operators.decode import _zone_prune
+    from br_archive_spark.operators.decode import _scan_prune
     total = enc.count()
-    surviving = _zone_prune(enc, "doc_id", "d0100", "d0149").count()
+    surviving = _scan_prune(enc, {"doc_id": "string"},
+                            [("doc_id", "d0100", "d0149")], [], [],
+                            {}).count()
     assert 0 < surviving < total

@@ -148,3 +148,56 @@ def test_scan_estimate_cli(spark, tmp_path, capsys):
     lo, hi = out["rows_bracket"]
     assert lo <= 2001 <= hi
     assert out["bracket_lower_valid"]
+
+
+def test_scan_estimate_kept_equals_decoded_chunks(spark, tmp_path,
+                                                  capsys):
+    """The key zone map and the key bloom are proofs of the one prune
+    engine, so on a hash layout the estimate's kept chunks are exactly
+    the chunks scan_where decodes — for a key IN-list, a key point
+    band, a key range and an int band — and CLI ``scan`` reports the
+    same count as ``chunks_decoded``."""
+    import json
+    from argparse import Namespace
+
+    from br_archive_spark.cli import cmd_scan
+    from br_archive_spark.operators.decode import (_normalize_isin,
+                                                   _scan_prune)
+
+    docs = spark.range(5000).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.concat(F.lit("text-"), "id").alias("text"),
+        (F.col("id") * 7 % 1000).alias("v"))
+    specs = [("doc_id", "string"), ("text", "string"), ("v", "int")]
+    man_dir = str(tmp_path / "man")
+    encode_table(docs, specs=specs, mode="hash", num_parts=8,
+                 target_values=256).write.parquet(man_dir)
+    enc = spark.read.parquet(man_dir)
+    kinds = dict(specs)
+    probes = {
+        "key_isin": ([], {"doc_id": ["17", "4321"]}),
+        "key_point": ([("doc_id", "17", "17")], {}),
+        "key_range": ([("doc_id", "40", "41")], {}),
+        "int_band": ([("v", 10, 20)], {}),
+    }
+    for label, (bands, isin) in probes.items():
+        est = scan_estimate(enc, bands, specs=specs, isin=isin)
+        kept = _scan_prune(enc, kinds, bands, [], [],
+                           _normalize_isin(kinds, isin)).count()
+        assert est["chunks_kept"] == kept, (label, est, kept)
+        if not bands:
+            continue
+        (column, lo, hi), = bands
+        args = Namespace(input=man_dir, column=column, lo=str(lo),
+                         hi=str(hi), null=False, not_null=False,
+                         show=0, estimate=False, global_dict=None,
+                         master="local[2]", shuffle_partitions=4)
+        assert cmd_scan(args) == 0
+        out = json.loads(capsys.readouterr().out.strip()
+                         .splitlines()[-1])
+        assert out["chunks_decoded"] == kept, label
+        assert out["chunks_total"] == est["chunks_total"], label
+    # the key bloom prunes the hash layout to the chunks holding keys
+    est = scan_estimate(enc, [], specs=specs,
+                        isin={"doc_id": ["17", "4321"]})
+    assert est["chunks_kept"] <= 3 < est["chunks_total"]

@@ -1242,3 +1242,34 @@ def test_scan_where_files_multi_predicate(spark, tmp_path):
     assert scan_where_files(spark, man_dir, [("okey", 10 ** 6,
                                               2 * 10 ** 6)],
                             specs=specs, with_n_tok=False).count() == 0
+
+
+def test_scan_where_files_skips_files_by_key_bloom(spark, tmp_path):
+    """A hash layout spreads every key range over every shard file, so
+    only the key bloom can skip files for a key IN-list: phase 1 of
+    ``scan_where_files`` must open exactly the shard files that hold a
+    probed key, and the rows must equal decode_table + filter."""
+    from br_archive_spark.operators import scan_where_files
+
+    docs = spark.range(5000).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.concat(F.lit("text-"), "id").alias("text"))
+    specs = [("doc_id", "string"), ("text", "string")]
+    man_dir = str(tmp_path / "man")
+    encode_table(docs, specs=specs, mode="hash",
+                 num_parts=8).write.parquet(man_dir)
+    man = spark.read.parquet(man_dir)
+    files = man.inputFiles()
+    assert len(files) > 2
+    keys = ["17", "4321"]
+    holding = sorted(
+        f for f in files
+        if decode_table(spark.read.parquet(f), specs=specs,
+                        with_n_tok=False)
+        .where(F.col("doc_id").isin(keys)).limit(1).count())
+    out = scan_where_files(spark, man_dir, [], specs=specs,
+                           with_n_tok=False, isin={"doc_id": keys})
+    assert sorted(out.inputFiles()) == holding
+    assert sorted(map(tuple, out.collect())) == sorted(map(
+        tuple, decode_table(man, specs=specs, with_n_tok=False)
+        .where(F.col("doc_id").isin(keys)).collect()))

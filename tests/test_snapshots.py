@@ -473,7 +473,11 @@ def test_recluster_snapshot_tightens_pruning(spark, tmp_path):
     from br_archive_spark.operators import (lookup_range,
                                             recluster_snapshot,
                                             snapshot_diff)
-    from br_archive_spark.operators.decode import _zone_prune
+    from br_archive_spark.operators.decode import _scan_prune
+
+    def zone_kept(man):
+        return _scan_prune(man, dict(SPECS), [("doc_id", "00100", "00140")],
+                           [], [], {}).count()
 
     d = str(tmp_path / "tbl")
     src = spark.range(2000).select(
@@ -482,8 +486,7 @@ def test_recluster_snapshot_tightens_pruning(spark, tmp_path):
     enc = encode_table(src, specs=SPECS, mode="hash", key="doc_id",
                        num_parts=8, target_values=128)
     r1 = commit_snapshot(enc, d, op="encode")
-    before = _zone_prune(load_snapshot(spark, d), "doc_id",
-                         "00100", "00140").count()
+    before = zone_kept(load_snapshot(spark, d))
 
     r2 = recluster_snapshot(spark, d, key="doc_id", specs=SPECS,
                             num_parts=8, target_values=128)
@@ -491,8 +494,7 @@ def test_recluster_snapshot_tightens_pruning(spark, tmp_path):
     # identical content: the row-level change feed is empty
     assert snapshot_diff(spark, d, r1["snapshot_id"],
                          r2["snapshot_id"], specs=SPECS).count() == 0
-    after = _zone_prune(load_snapshot(spark, d), "doc_id",
-                        "00100", "00140").count()
+    after = zone_kept(load_snapshot(spark, d))
     assert after < before / 3, (before, after)
     # and the data still reads correctly through the new layout
     got = lookup_range(load_snapshot(spark, d), "00100", "00105",
