@@ -29,7 +29,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
+from ..integrity.crc import ChecksumError, verify_chunk
 from .chunk import decode_column
 from .fsutil import (_empty_frame, bucket_target, byte_buckets, ensure_dir,
                      file_size, join_path, list_files, path_tag,
@@ -37,10 +37,6 @@ from .fsutil import (_empty_frame, bucket_target, byte_buckets, ensure_dir,
 
 __all__ = ["decode_table", "decode_files", "lookup_rows",
            "lookup_range", "ChecksumError"]
-
-
-class ChecksumError(RuntimeError):
-    pass
 
 
 def _arrow_type(kind: str):
@@ -170,24 +166,11 @@ def _make_decode_fn(specs: list[tuple[str, str]], with_n_tok: bool,
             for row in rows:
                 entries = {e["name"]: e for e in row["columns"]}
                 if verify_checksums:
-                    algo = row.get("checksum_algo", CHECKSUM_ALGO)
-                    if algo != CHECKSUM_ALGO:
-                        # distinguish format skew from corruption: a
-                        # manifest from a build with a different
-                        # checksum formula cannot be verified here
-                        raise ChecksumError(
-                            f"chunk {row['chunk_id']}: manifest written "
-                            f"with checksum algorithm {algo!r}; this "
-                            f"build verifies {CHECKSUM_ALGO!r} — "
-                            "re-encode, or decode with "
-                            "verify_checksums=False")
-                    got = chunk_checksum(
-                        *[b for e in row["columns"]
-                          for b in (e["params"], e["payload"])])
-                    if got != row["checksum"]:
-                        raise ChecksumError(
-                            f"chunk {row['chunk_id']}: checksum mismatch "
-                            f"(stored {row['checksum']:#x}, got {got:#x})")
+                    verify_chunk(
+                        row["chunk_id"], row["checksum"],
+                        row.get("checksum_algo"),
+                        [b for e in row["columns"]
+                         for b in (e["params"], e["payload"])])
                 n = row["n_rows"]
                 arrays = []
                 lengths = None

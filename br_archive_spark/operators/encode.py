@@ -822,7 +822,8 @@ def _build_chunk(tbl: pa.Table, specs: list[tuple[str, str]],
         # null-validity bitmaps all live there — a flipped mask bit
         # must fail verification just like a flipped payload byte
         "checksum": chunk_checksum(
-            *[b for e in entries for b in (e["params"], e["payload"])]),
+            *[b for e in entries for b in (e["params"], e["payload"])],
+            algo=CHECKSUM_ALGO),
         "checksum_algo": CHECKSUM_ALGO,
         "columns": entries,
         "column_stats": [_stats_row(e, st)

@@ -21,6 +21,12 @@ a fresh default-option encode of its surviving rows. The join-form delete
 (:func:`_delete_rows_join`) finds its hits with a key join instead and
 reuses the same rewrite.
 
+Every rewrite that writes a new chunk checksum (``drop_columns``,
+``add_column``, :func:`_rewrite_masked`) first checks the stored one
+(``integrity.crc.verify_chunk``), so a corrupted chunk raises
+``ChecksumError`` instead of leaving with a fresh, valid checksum. New
+checksums are always CRC-32, tagged beside the checksum.
+
 Scale shape: ``drop_columns`` and the zone-map-driven deletes are
 ``mapInArrow`` passes over the manifest — chunk-parallel, no shuffle;
 ``add_column`` and the join-form delete add one key join.
@@ -37,7 +43,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum
+from ..integrity.crc import CHECKSUM_ALGO, chunk_checksum, verify_chunk
 
 __all__ = ["drop_columns", "rename_column", "add_column",
            "delete_rows", "delete_where", "upsert_rows"]
@@ -90,6 +96,35 @@ def _filtered_list(arr_type, keep_counts, flat_kept, null_mask=None):
     return lst.cast(arr_type)
 
 
+def _chunk_parts(flat, offs) -> list:
+    """Per row, the zero-copy params and payload views of entries
+    ``flat[offs[i]:offs[i+1]]`` in stored order — the bytes a chunk
+    checksum covers."""
+    pviews = _binary_views(flat.field("params"))
+    bviews = _binary_views(flat.field("payload"))
+    return [[v for j in range(int(offs[i]), int(offs[i + 1]))
+             for v in (pviews[j], bviews[j])]
+            for i in range(len(offs) - 1)]
+
+
+def _verify_rows(batch: pa.RecordBatch, parts: list) -> None:
+    """Check every row's stored checksum over its ``parts`` before a
+    rewrite replaces it, so a corrupted chunk raises instead of leaving
+    with a fresh, valid checksum."""
+    names = batch.schema.names
+    cids, stored, algos = (batch.column(names.index(f)).to_pylist()
+                           for f in ("chunk_id", "checksum",
+                                     "checksum_algo"))
+    for i, p in enumerate(parts):
+        verify_chunk(cids[i], stored[i], algos[i], p)
+
+
+def _checksums(parts: list) -> pa.Array:
+    """Per row, the new chunk checksum over its ``parts``."""
+    return pa.array([chunk_checksum(*p, algo=CHECKSUM_ALGO)
+                     for p in parts], pa.int64())
+
+
 def drop_columns(encoded: DataFrame, cols: list[str]) -> DataFrame:
     """Remove ``cols`` from every chunk of an encoded manifest.
 
@@ -105,8 +140,9 @@ def drop_columns(encoded: DataFrame, cols: list[str]) -> DataFrame:
 
     Arrow-native (r4): the entry lists are filtered with vectorized
     kernels and surviving payload bytes flow buffer-to-buffer into the
-    output batch; the only per-row Python is the checksum fold over
-    zero-copy memoryviews. Payloads never become Python objects.
+    output batch; the only per-row Python is the checksum folds over
+    zero-copy memoryviews — the stored checksum checked, then the new
+    one computed. Payloads never become Python objects.
     """
     import numpy as np
 
@@ -123,6 +159,7 @@ def drop_columns(encoded: DataFrame, cols: list[str]) -> DataFrame:
             names = batch.schema.names
             cols_arr = batch.column(names.index("columns"))
             offs, flat = _list_parts(cols_arr)
+            _verify_rows(batch, _chunk_parts(flat, offs))
             keep = pc.and_(
                 pc.is_valid(flat.field("name")),
                 pc.invert(pc.is_in(flat.field("name"),
@@ -160,7 +197,7 @@ def drop_columns(encoded: DataFrame, cols: list[str]) -> DataFrame:
                 "columns": new_cols,
                 "orig_bytes": pa.array(row_sums("orig_bytes")),
                 "enc_bytes": pa.array(row_sums("enc_bytes")),
-                "checksum": _checksums(new_flat, new_offs),
+                "checksum": _checksums(_chunk_parts(new_flat, new_offs)),
                 "checksum_algo": pa.array([CHECKSUM_ALGO] * n),
             }
             if "column_stats" in names:
@@ -198,22 +235,6 @@ def drop_columns(encoded: DataFrame, cols: list[str]) -> DataFrame:
     # emit the INPUT's own schema: manifests may carry extra columns
     # (e.g. the `input_file` lineage column) that must survive a drop
     return encoded.mapInArrow(fn, encoded.schema)
-
-
-def _checksums(flat, offs, extra=None) -> pa.Array:
-    """Per row, the chunk checksum over entries ``flat[offs[i]:
-    offs[i+1]]`` (then ``extra[i]``'s, when given) — params and payload
-    folded through ``chunk_checksum`` as zero-copy views."""
-    pviews = _binary_views(flat.field("params"))
-    bviews = _binary_views(flat.field("payload"))
-    out = []
-    for i in range(len(offs) - 1):
-        parts = [v for j in range(int(offs[i]), int(offs[i + 1]))
-                 for v in (pviews[j], bviews[j])]
-        if extra is not None:
-            parts += [extra[i]["params"], extra[i]["payload"]]
-        out.append(chunk_checksum(*parts))
-    return pa.array(out, pa.int64())
 
 
 def _entry_dicts_for(batch: pa.RecordBatch, want: str):
@@ -378,6 +399,8 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
             names = batch.schema.names
             cols_arr = batch.column(names.index("columns"))
             offs, flat = _list_parts(cols_arr)
+            parts = _chunk_parts(flat, offs)
+            _verify_rows(batch, parts)
             voffs, vflat = _list_parts(
                 batch.column(names.index("_vals")))
             n_rows_arr = np.asarray(
@@ -407,7 +430,10 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
 
             new_entries = pa.array(entries, type=flat.type)
             repl = {"columns": _append_list(cols_arr, new_entries),
-                    "checksum": _checksums(flat, offs, entries)}
+                    "checksum": _checksums(
+                        [p + [e["params"], e["payload"]]
+                         for p, e in zip(parts, entries)]),
+                    "checksum_algo": pa.array([CHECKSUM_ALGO] * n)}
             add_ob = np.asarray([e["orig_bytes"] for e in entries],
                                 dtype=np.int64)
             add_eb = np.asarray([e["enc_bytes"] for e in entries],
@@ -418,7 +444,6 @@ def add_column(encoded: DataFrame, values: DataFrame, name: str,
             repl["enc_bytes"] = pa.array(np.asarray(
                 batch.column(names.index("enc_bytes")),
                 dtype=np.int64) + add_eb)
-            repl["checksum_algo"] = pa.array([CHECKSUM_ALGO] * n)
             if "column_stats" in names:
                 st_arr = batch.column(names.index("column_stats"))
                 new_stats = pa.array(
@@ -615,8 +640,9 @@ def _row_dicts_with_views(batch: pa.RecordBatch, idxs):
 
 def _rewrite_masked(row: dict, mask, known: dict[str, str], key: str,
                     global_dict) -> dict:
-    """Rewrite one chunk keeping the ``mask``-true rows: decode every
-    entry (the chunk's OWN entry list — see :func:`_chunk_specs`),
+    """Rewrite one chunk keeping the ``mask``-true rows: check its
+    stored checksum, decode every entry (the chunk's OWN entry list —
+    see :func:`_chunk_specs`),
     filter, and rebuild through ``encode._build_chunk``, the writer
     fresh encodes use. The chunk keeps its own zone-map column (``key``
     only where it has none) and a null ``column_stats`` stays null.
@@ -625,6 +651,9 @@ def _rewrite_masked(row: dict, mask, known: dict[str, str], key: str,
     from .decode import _rebuild
     from .encode import _build_chunk
 
+    verify_chunk(row["chunk_id"], row["checksum"], row["checksum_algo"],
+                  [b for e in row["columns"]
+                   for b in (e["params"], e["payload"])])
     specs = _chunk_specs(row, known)
     entries = {e["name"]: e for e in row["columns"]}
     cols = {}

@@ -79,7 +79,7 @@ def compression_report(encoded: DataFrame) -> DataFrame:
 
 
 def table_checksum(encoded: DataFrame) -> int:
-    """One CRC-32C for the whole encoded table, without re-reading
+    """One checksum for the whole encoded table, without re-reading
     payload bytes.
 
     The reference folds per-chunk source CRCs into a stream CRC with
@@ -87,20 +87,27 @@ def table_checksum(encoded: DataFrame) -> int:
     ``src/utils/lib_bra_crc32c.c:181-231``) so the archive checksum
     never re-reads data; here the same combine folds the per-chunk
     manifest checksums (each covering that chunk's params+payload,
-    whose concatenated length IS ``enc_bytes``) in ``chunk_id`` order.
-    The fold runs over manifest METADATA only — three small columns,
+    whose concatenated length IS ``enc_bytes``) in ``chunk_id`` order,
+    each with its own ``checksum_algo``'s polynomial. A table written
+    under one algorithm gets that algorithm's CRC of its concatenated
+    stream; a mixed one (a resumed encode over an old manifest) gets a
+    deterministic fold. A missing or unknown tag raises
+    ``ChecksumError`` naming the chunk.
+    The fold runs over manifest METADATA only — four small columns,
     payloads pruned — and is associative, so the value is independent
     of how chunks were produced or compacted: the audit use is
     comparing a manifest before/after compaction or replication with
     one integer.
     """
-    from ..integrity.crc import crc32c_combine
+    from ..integrity.crc import checksum_spec, crc_combine
 
-    rows = (encoded.select("chunk_id", "checksum", "enc_bytes")
+    rows = (encoded.select("chunk_id", "checksum", "enc_bytes",
+                           "checksum_algo")
             .orderBy("chunk_id").collect())
     crc = 0
     for r in rows:
-        crc = crc32c_combine(crc, r["checksum"], r["enc_bytes"])
+        poly = checksum_spec(r["checksum_algo"], r["chunk_id"])[1]
+        crc = crc_combine(crc, r["checksum"], r["enc_bytes"], poly)
     return crc
 
 

@@ -1,7 +1,9 @@
 """The Python worker entry (``br_archive_spark._daemon``): which
 SPARK_HOME archives it strips from a worker's ``sys.path``, where
-``get_spark`` selects it, and what a live worker imports."""
+``get_spark`` selects it, what a live worker imports, and that a
+reused worker freezes its heap once."""
 
+import gc
 import os
 import types
 import zipfile
@@ -10,7 +12,8 @@ from pathlib import Path
 import pytest
 
 import br_archive_spark
-from br_archive_spark._daemon import spark_archives, strip_spark_archives
+from br_archive_spark._daemon import (freeze_after_first, spark_archives,
+                                      strip_spark_archives)
 from br_archive_spark.plans import session
 
 VERSION = b'__version__: str = "4.1.2"\n'
@@ -260,3 +263,54 @@ def test_workers_import_the_installed_pyspark(spark):
         assert os.path.isdir(os.path.dirname(r["file"])), r["file"]
         assert not any(os.path.realpath(z).startswith(root)
                        for z in r["zips"]), r["zips"]
+
+
+@pytest.fixture
+def unfrozen():
+    gc.unfreeze()
+    yield
+    gc.unfreeze()
+
+
+def test_freeze_after_first_freezes_once_at_the_second_call(unfrozen):
+    calls = []
+
+    def main(infile, outfile):
+        calls.append((infile, outfile, gc.get_freeze_count()))
+        return len(calls)
+
+    wrapped = freeze_after_first(main)
+    assert wrapped("in", "out") == 1
+    assert gc.get_freeze_count() == 0
+    assert wrapped("in", outfile="out") == 2
+    assert gc.get_freeze_count() > 0
+    # the freeze happens BEFORE the second task runs
+    assert calls[0][2] == 0 and calls[1][2] > 0
+    gc.unfreeze()
+    assert wrapped("in", "out") == 3
+    assert gc.get_freeze_count() == 0
+    assert calls[-1][:2] == ("in", "out")
+
+
+def test_reused_workers_freeze_their_heap(spark):
+    """A worker that runs a second task has frozen the heap its first
+    task left, so pyspark's per-task ``gc.collect()`` skips it."""
+    if spark.conf.get("spark.python.daemon.module", None) != \
+            "br_archive_spark._daemon":
+        pytest.skip("the package is not importable at daemon launch")
+
+    def probe(batches):
+        import gc
+
+        import pyarrow as pa
+
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"frozen": [gc.get_freeze_count()] * b.num_rows})
+
+    def run():
+        return [r["frozen"] for r in spark.range(0, 4, 1, 4)
+                .mapInArrow(probe, "frozen long").collect()]
+
+    run()
+    assert max(run()) > 0

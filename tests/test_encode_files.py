@@ -130,18 +130,32 @@ def test_decode_files_roundtrip_both_modes(spark, src_dir, tmp_path):
     ).where("t1 IS DISTINCT FROM t2").count() == 0
 
 
-def test_decode_files_checksum_verified(spark, src_dir, tmp_path):
-    """A corrupted shard must fail the bulk decode loudly."""
+@pytest.mark.parametrize("algo", ["crc32", "crc32c"])
+def test_decode_files_checksum_verified(spark, src_dir, tmp_path, algo,
+                                        as_crc32c):
+    """A manifest of either checksum algorithm decodes verified, and a
+    corrupted shard must fail the bulk decode loudly. The ``crc32c``
+    manifest is a fresh one re-checksummed with CRC-32C and re-tagged:
+    what builds before CRC-32 chunks wrote."""
+    import os
+
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from br_archive_spark.operators import decode_files
 
     man_dir = str(tmp_path / "man")
     encode_files(spark, src_dir, output_dir=man_dir).collect()
-    import os
-    import pyarrow as pa
+    shards = [os.path.join(man_dir, f) for f in sorted(os.listdir(man_dir))]
+    if algo == "crc32c":
+        for shard in shards:
+            pq.write_table(as_crc32c(pq.read_table(shard)), shard)
+    tags = {t for shard in shards
+            for t in pq.read_table(shard).column("checksum_algo").to_pylist()}
+    assert tags == {algo}
+    assert decode_files(spark, man_dir).count() == 6000
 
-    shard = os.path.join(man_dir, sorted(os.listdir(man_dir))[0])
+    shard = shards[0]
     tbl = pq.read_table(shard)
     idx = tbl.schema.get_field_index("checksum")
     bad_col = pa.array(

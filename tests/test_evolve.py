@@ -686,3 +686,51 @@ def test_cow_rewrite_equals_fresh_encode(spark):
                 assert r[f] == fresh[f], (op, r["chunk_id"], f)
         out.unpersist()
     enc.unpersist()
+
+
+def _flip_payload_byte(enc, chunk_id: str, column: str):
+    """``enc`` with the first payload byte of ``column``'s entry in
+    chunk ``chunk_id`` changed; the stored checksum is left as is."""
+    flipped = F.expr(
+        "transform(columns, c -> named_struct("
+        "'name', c.name, 'kind', c.kind, 'codec', c.codec,"
+        "'params', c.params, 'payload', IF(c.name = '" + column + "',"
+        " concat(IF(hex(substring(c.payload, 1, 1)) = '00',"
+        " X'01', X'00'), substring(c.payload, 2)), c.payload),"
+        "'orig_bytes', c.orig_bytes, 'enc_bytes', c.enc_bytes))")
+    return enc.withColumn(
+        "columns", F.when(F.col("chunk_id") == chunk_id, flipped)
+        .otherwise(F.col("columns")))
+
+
+@pytest.mark.parametrize("rewrite", ["drop_columns", "add_column",
+                                     "delete_rows", "delete_rows_join"])
+def test_rewrites_refuse_a_corrupted_chunk(spark, range_encoded, rewrite):
+    """Every copy-on-write rewrite checks a chunk's stored checksum
+    before it writes a new one: a flipped payload byte in a KEPT column
+    must raise ChecksumError naming the chunk, not leave with a fresh,
+    valid checksum that verified decodes then pass."""
+    from br_archive_spark.operators import (ChecksumError, add_column,
+                                            delete_rows)
+
+    src, specs, enc = range_encoded
+    first = enc.orderBy("key_min").select("chunk_id", "key_min").first()
+    cid, key = first["chunk_id"], first["key_min"]
+    bad = _flip_payload_byte(enc, cid, "v")
+    with pytest.raises(Exception, match="checksum mismatch"):
+        decode_table(bad, specs=specs, with_n_tok=False).count()
+    if rewrite == "drop_columns":
+        out = drop_columns(bad, ["text"])
+    elif rewrite == "add_column":
+        out = add_column(bad, src.select(
+            "doc_id", (F.col("v") * 2).alias("v2")), "v2", "int",
+            key="doc_id")
+    elif rewrite == "delete_rows":
+        out = delete_rows(bad, [key], key="doc_id")
+    else:
+        out = delete_rows(bad, spark.createDataFrame(
+            [(key,)], "doc_id string"), key="doc_id")
+    with pytest.raises(Exception,
+                       match=f"chunk {cid}: checksum mismatch") as info:
+        out.collect()
+    assert ChecksumError.__name__ in str(info.value)
